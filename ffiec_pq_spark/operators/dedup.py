@@ -380,7 +380,7 @@ def minhash_signatures(
     # string parses in a single round trip.  Value-identical: same
     # ``min((a*(h%P)+b)%P)`` arithmetic with the same int-typed
     # literals (a, b, P all < 2^31), same array order (pinned by
-    # tests/test_dedup_ops.py's cross-form signature checks).
+    # tests/test_streaming.py's cross-form signature checks).
     arr = ", ".join(
         f"min(({a} * (h % {MINHASH_PRIME}) + {b}) % {MINHASH_PRIME})"
         for _, a, b in perms
@@ -401,7 +401,7 @@ def minhash_sig_expr(
 
     Value-identical to :func:`minhash_signatures` (same shingles, same
     ``(a*(h%P)+b)%P`` permutations, min over the same set — pinned by
-    tests/test_dedup_ops.py) but usable where an aggregation is not:
+    tests/test_streaming.py) but usable where an aggregation is not:
     a projection ahead of a stateful streaming operator, or a
     per-row signature on an already-grouped relation.
 
@@ -459,31 +459,6 @@ def minhash_sig_expr(
             ).alias("sig"),
         ),
         lambda acc: F.when(acc["n"] > 0, acc["sig"]),
-    )
-
-
-def lsh_band_structs(sig_col, n_bands: int, rows_per_band: int):
-    """Array of (band, bkey) structs for one signature column — the
-    banding expression shared by :func:`lsh_bands` (batch, after a
-    groupBy) and the stateful streaming path (per-row, no shuffle)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(
-                                sig_col, bi * rows_per_band + ri + 1
-                            ).cast("string")
-                            for ri in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bkey"),
-            )
-            for bi in range(n_bands)
-        ]
     )
 
 

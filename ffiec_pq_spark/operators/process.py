@@ -14,10 +14,16 @@ Per bulk zip:
    ``repairs``/``inner_files`` — the reference's attribute side-channel
    as a real table, SURVEY.md §2.13).
 
-Where the reference writes temp wide parquet and re-scans it with
-DuckDB, here stages 2-3 are one Catalyst lineage; the wide parquet is
-still written because it is a deliverable, but the long build reads the
-in-memory plan, not the file.
+Like the reference (which writes temp wide parquet and re-scans it
+with DuckDB), the long build re-reads the written wide parquet files:
+they are deliverables anyway, and a scan of finished columnar files is
+cheaper than re-running each wide table's parse + combine lineage.
+
+Each zip's central directory is parsed once (``zip_member_rows``) and
+its schedule members are decompressed into lines once: the whole-zip
+audit persists that line frame and every clean member is parsed from
+its slice.  The zip's POR stage runs on the ETL thread pool alongside
+its schedule groups.
 """
 
 from __future__ import annotations
@@ -26,6 +32,7 @@ import os
 import re
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor, wait
 from contextlib import contextmanager
 from datetime import date as _date
 
@@ -36,10 +43,21 @@ from pyspark.sql import types as T
 from ffiec_pq_spark.functions.scalars import pct_to_prop, pct_violation
 from ffiec_pq_spark.operators.combine import combine_parts
 from ffiec_pq_spark.operators.reshape import make_long_by_type
-from ffiec_pq_spark.sources.manifest import resolve_n_parts, zip_member_manifest
+from ffiec_pq_spark.sources.manifest import (
+    member_frame,
+    resolve_n_parts,
+    zip_member_rows,
+)
 from ffiec_pq_spark.sources.parquet import write_single_parquet
 from ffiec_pq_spark.sources.por import read_por
-from ffiec_pq_spark.sources.tsv import read_call_schedule
+from ffiec_pq_spark.sources.tsv import (
+    lines_batch_stats,
+    make_colspec,
+    read_schedule_member,
+    read_zip_member_header,
+    zip_lines_batch,
+)
+from ffiec_pq_spark.session import local_frame
 
 LONG_TYPE_NAMES = {
     "double": "float",
@@ -67,8 +85,8 @@ class StageClock:
     """Opt-in per-stage wall-time accumulator for the ETL pipeline
     (``scripts/etl_bench.py`` threads one through ``ffiec_process`` to
     break the ingest's fixed cost down by stage).  Thread-safe: the
-    per-group parse/combine work runs on the FIFO-scheduler thread
-    pool, so a stage's accumulated seconds are summed THREAD-seconds —
+    per-group parse/combine work and each zip's POR stage run on the
+    FIFO-scheduler thread pool, so a stage's accumulated seconds are summed THREAD-seconds —
     they can exceed the ingest wall clock when groups overlap, which
     is the point (they show where the work is, the wall shows how well
     it overlaps)."""
@@ -136,6 +154,34 @@ def fix_pure_columns(df: DataFrame, pure_cols: list[str]):
     return out, check
 
 
+def _etl_pool() -> ThreadPoolExecutor:
+    """The ETL's bounded thread pool (``FFIEC_ETL_PARALLELISM`` workers).
+
+    The per-group, per-type and POR jobs are independent (distinct
+    output files, no shared state), and each is many small Spark jobs
+    on small inputs — so they are submitted from this pool and Spark's
+    FIFO scheduler interleaves their stages across idle cores (the
+    reference itself fans out per zip, R/ffiec_process.R:545-571)."""
+    return ThreadPoolExecutor(
+        max_workers=max(1, int(os.environ.get("FFIEC_ETL_PARALLELISM", "4")))
+    )
+
+
+def _run_each(pool: ThreadPoolExecutor, fn, items: list[tuple]) -> list:
+    """``fn(*item)`` for every item on ``pool``; results in item order
+    regardless of completion order.  Every call has finished when this
+    returns or raises, so a caller may release what the calls read."""
+    futures = [pool.submit(fn, *it) for it in items]
+    try:
+        return [f.result() for f in futures]
+    finally:
+        wait(futures)
+
+
+def _nulls_first(v) -> tuple:
+    return (v is not None, v)
+
+
 def process_zip_schedules(
     spark: SparkSession,
     zip_path: str,
@@ -149,44 +195,46 @@ def process_zip_schedules(
 
     Returns (wide_outputs, log_rows); each wide output dict carries the
     schedule, date, path, and part files that fed it."""
-    clock = clock or _NULL_CLOCK
+    with _etl_pool() as pool:
+        return _zip_schedules(
+            spark, zip_path, zip_member_rows(zip_path), type_dict, out_dir,
+            pure_cols, strict, clock or _NULL_CLOCK, pool,
+        )
+
+
+def _zip_schedules(
+    spark: SparkSession,
+    zip_path: str,
+    members: list,
+    type_dict: dict[str, str],
+    out_dir: str,
+    pure_cols: list[str] | None,
+    strict: bool,
+    clock: StageClock,
+    pool: ThreadPoolExecutor,
+) -> tuple[list[dict], list[dict]]:
+    """:func:`process_zip_schedules` over the zip's parsed member rows,
+    with the groups submitted to ``pool``."""
     with clock.stage("manifest_validate"):
-        manifest = zip_member_manifest(spark, [zip_path])
+        manifest = member_frame(spark, members)
         validation = {
             (r["schedule"], r["date"]): r.asDict()
             for r in resolve_n_parts(manifest).collect()
         }
-        sched_files = (
-            manifest.filter(
-                F.col("schedule").isNotNull() & (F.col("schedule") != "por")
-            )
-            .orderBy("schedule", "date", "part", "file")
-            .collect()
-        )
+    # Spark's ascending orderBy(schedule, date, part, file): NULLs first
+    sched_files = sorted(
+        (r for r in members if r.schedule is not None and r.schedule != "por"),
+        key=lambda r: (
+            r.schedule, _nulls_first(r.date), _nulls_first(r.part), r.file
+        ),
+    )
     groups: dict[tuple, list] = {}
     for r in sched_files:
-        groups.setdefault((r["schedule"], r["date"]), []).append(r)
-
-    # whole-zip audit batch: every member's (bad, problems) counters in
-    # ONE Spark job (sources/tsv.py zip_stats_batch) instead of one
-    # collect per member — at production member counts the per-member
-    # scheduling overhead dominates the audit otherwise.  Headers are
-    # read driver-side (first-block decompression only).
-    from ffiec_pq_spark.sources.tsv import make_colspec, read_zip_member_header, zip_stats_batch
-
-    with clock.stage("audit_batch"):
-        colspecs = {
-            r["file"]: make_colspec(
-                read_zip_member_header(zip_path, r["file"]), type_dict
-            )
-            for r in sched_files
-        }
-        batch_stats = (
-            zip_stats_batch(spark, zip_path, colspecs) if colspecs else {}
-        )
+        groups.setdefault((r.schedule, r.date), []).append(r)
 
     def run_group(schedule: str, d, rows) -> tuple[dict | None, dict]:
         """One (schedule, date) group -> (wide output | None, log row)."""
+        inner_files = [r.file for r in rows]
         val = validation.get((schedule, d), {})
         if val.get("errors"):
             return None, {
@@ -196,15 +244,16 @@ def process_zip_schedules(
                 "kind": "schedule",
                 "ok": False,
                 "repairs": list(val["errors"]),
-                "inner_files": [r["file"] for r in rows],
+                "inner_files": inner_files,
             }
         parts, repairs, all_ok, releases = [], [], True, []
         n_problems = 0
         with clock.stage("parse_repair"):
             for r in rows:
-                df, audit = read_call_schedule(
-                    spark, zip_path, r["file"], type_dict,
-                    precomputed_stats=batch_stats.get(r["file"]),
+                df, audit = read_schedule_member(
+                    spark, zip_path, r.file, colspecs[r.file],
+                    precomputed_stats=batch_stats[r.file],
+                    batch_lines=zip_lines,
                 )
                 parts.append(df)
                 repairs.extend(audit["repairs"])
@@ -226,7 +275,7 @@ def process_zip_schedules(
                 "ok": False,
                 "repairs": sorted({*repairs, "unrepairable"}),
                 "n_problems": n_problems,
-                "inner_files": [r["file"] for r in rows],
+                "inner_files": inner_files,
             }
         with clock.stage("combine_write_wide"):
             wide = combine_parts(parts, keys=["IDRSSD"])
@@ -250,7 +299,7 @@ def process_zip_schedules(
                     release()
         output = {
             "schedule": schedule, "date": d, "path": out_path,
-            "inner_files": [r["file"] for r in rows],
+            "inner_files": inner_files,
         }
         return output, {
             "zipfile": zip_path,
@@ -260,31 +309,40 @@ def process_zip_schedules(
             "ok": True,
             "repairs": sorted(set(repairs)),
             "n_problems": n_problems,
-            "inner_files": [r["file"] for r in rows],
+            "inner_files": inner_files,
         }
 
-    # Per-group jobs are independent (distinct output files, no shared
-    # state), and each is many small Spark jobs on small inputs — so
-    # submit them from a thread pool and let Spark's FIFO scheduler
-    # interleave their stages across idle cores (the reference itself
-    # fans out per zip, R/ffiec_process.R:545-571).  Results are folded
-    # back in deterministic (schedule, date) order regardless of
-    # completion order.
-    ordered = sorted(groups.items())
-    n_workers = min(
-        int(os.environ.get("FFIEC_ETL_PARALLELISM", "4")), max(len(ordered), 1)
-    )
+    # whole-zip audit batch: every member's (bad, problems) counters in
+    # ONE Spark job (sources/tsv.py lines_batch_stats) instead of one
+    # collect per member — at production member counts the per-member
+    # scheduling overhead dominates the audit otherwise.  The extracted
+    # line frame is persisted for the parse: each clean member reads
+    # its slice, so the zip is decompressed into lines once.  It is
+    # released once the zip's last wide write is done, also when a
+    # group raises.  Headers are read driver-side (first-block
+    # decompression only).
+    zip_lines = None
+    try:
+        with clock.stage("audit_batch"):
+            colspecs = {
+                r.file: make_colspec(
+                    read_zip_member_header(zip_path, r.file), type_dict
+                )
+                for r in sched_files
+            }
+            batch_stats = {}
+            if colspecs:
+                zip_lines = zip_lines_batch(
+                    spark, zip_path, list(colspecs)
+                ).persist()
+                batch_stats = lines_batch_stats(spark, zip_lines, colspecs)
+        results = _run_each(
+            pool, run_group, [(s, d, rows) for (s, d), rows in groups.items()]
+        )
+    finally:
+        if zip_lines is not None:
+            zip_lines.unpersist()
     outputs, log_rows = [], []
-    if n_workers <= 1 or len(ordered) <= 1:
-        results = [run_group(s, d, rows) for (s, d), rows in ordered]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=n_workers) as pool:
-            futures = [
-                pool.submit(run_group, s, d, rows) for (s, d), rows in ordered
-            ]
-            results = [f.result() for f in futures]
     for output, log_row in results:
         if output is not None:
             outputs.append(output)
@@ -348,23 +406,8 @@ def make_long_pqs(
     # builds use and let the FIFO scheduler interleave their stages —
     # the round-12 stage breakdown had long_build as the warm ingest's
     # top stage (4.3 s) running its types strictly serially
-    ordered = sorted(by_type.items())
-    results: dict[str, str] = {}
-    n_workers = min(
-        int(os.environ.get("FFIEC_ETL_PARALLELISM", "4")),
-        max(len(ordered), 1),
-    )
-    if n_workers <= 1 or len(ordered) <= 1:
-        pairs = [build_type(t, dfs) for t, dfs in ordered]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=n_workers) as pool:
-            futures = [pool.submit(build_type, t, dfs) for t, dfs in ordered]
-            pairs = [f.result() for f in futures]
-    for name, path in pairs:
-        results[name] = path
-    return results
+    with _etl_pool() as pool:
+        return dict(_run_each(pool, build_type, sorted(by_type.items())))
 
 
 def merge_long_increment(
@@ -422,7 +465,7 @@ def make_schedule_pq(
             if c not in ("IDRSSD", "date"):
                 rows.append((c, out["schedule"], out["date"]))
     df = (
-        spark.createDataFrame(rows, "item string, schedule string, date date")
+        local_frame(spark, rows, "item string, schedule string, date date")
         .groupBy("item")
         .agg(
             F.sort_array(F.collect_set("schedule")).alias("schedule"),
@@ -438,25 +481,32 @@ def process_zip_por(
     spark: SparkSession, zip_path: str, out_dir: str
 ) -> tuple[str | None, list[dict]]:
     """Stage 4: POR member -> institution parquet."""
-    manifest = zip_member_manifest(spark, [zip_path])
-    por_rows = manifest.filter(F.col("schedule") == "por").collect()
+    return _zip_por(spark, zip_path, zip_member_rows(zip_path), out_dir)
+
+
+def _zip_por(
+    spark: SparkSession, zip_path: str, members: list, out_dir: str
+) -> tuple[str | None, list[dict]]:
+    """:func:`process_zip_por` over the zip's parsed member rows (no
+    Spark job to find the member)."""
+    por_rows = [r for r in members if r.schedule == "por"]
     if not por_rows:
         return None, []
     r = por_rows[0]
-    df, audit = read_por(spark, zip_path, r["file"])
-    d = r["date"] or _date(1900, 1, 1)
-    df = df.withColumn("date", F.lit(r["date"]).cast("date"))
+    df, audit = read_por(spark, zip_path, r.file)
+    d = r.date or _date(1900, 1, 1)
+    df = df.withColumn("date", F.lit(r.date).cast("date"))
     path = os.path.join(out_dir, f"por_{d.strftime('%Y%m%d')}.parquet")
     write_single_parquet(df, path)
     log = [
         {
             "zipfile": zip_path,
             "schedule": "por",
-            "date": r["date"],
+            "date": r.date,
             "kind": "por",
             "ok": audit["ok"],
             "repairs": audit["repairs"],
-            "inner_files": [r["file"]],
+            "inner_files": [r.file],
         }
     ]
     return path, log
@@ -574,25 +624,35 @@ def ffiec_process(
     clock = clock or _NULL_CLOCK
     os.makedirs(out_dir, exist_ok=True)
     all_wide, all_logs, all_long, por_paths = [], [], {}, []
-    for zp in zip_paths:
-        wide, logs = process_zip_schedules(
-            spark, zp, type_dict, out_dir, pure_cols, strict=strict,
-            clock=clock,
-        )
-        all_wide.extend(wide)
-        all_logs.extend(logs)
+
+    def por_stage(zp: str, members: list):
         with clock.stage("por"):
-            por_path, por_logs = process_zip_por(spark, zp, out_dir)
-        if por_path:
-            por_paths.append(por_path)
-        all_logs.extend(por_logs)
+            return _zip_por(spark, zp, members, out_dir)
+
+    with _etl_pool() as pool:
+        for zp in zip_paths:
+            members = zip_member_rows(zp)
+            # the POR stage shares no input or output with the schedule
+            # groups: run it on the pool, overlapping them
+            por = pool.submit(por_stage, zp, members)
+            wide, logs = _zip_schedules(
+                spark, zp, members, type_dict, out_dir, pure_cols,
+                strict, clock, pool,
+            )
+            all_wide.extend(wide)
+            all_logs.extend(logs)
+            por_path, por_logs = por.result()
+            if por_path:
+                por_paths.append(por_path)
+            all_logs.extend(por_logs)
     if all_wide:
         with clock.stage("long_build"):
             all_long = make_long_pqs(spark, all_wide, out_dir)
         with clock.stage("schedule_pq"):
             make_schedule_pq(spark, all_wide, out_dir)
     with clock.stage("log_write"):
-        log_df = spark.createDataFrame(
+        log_df = local_frame(
+            spark,
             [
                 tuple(r.get(f.name) for f in _LOG_SCHEMA.fields)
                 for r in all_logs

@@ -102,10 +102,6 @@ def ensure_session_confs(spark: SparkSession) -> None:
         pass  # conf API unavailable (mocked sessions in unit tests)
 
 
-# backward-compat alias (prior name)
-ensure_nanos_conf = ensure_session_confs
-
-
 # Partition-count probe memo for spread(), keyed on (applicationId,
 # analyzed-plan semanticHash): the probe itself (`df.rdd`) runs FULL
 # physical planning on a fresh plan — measured ~80-120 ms of driver
@@ -224,7 +220,8 @@ def local_frame(spark: SparkSession, rows, schema):
     Values and schema are identical to the classic path (verified by
     tests for long/double/string payloads); falls back to the classic
     ``createDataFrame`` when pandas is unavailable or the conversion
-    rejects the types (e.g. exotic nested values).
+    rejects the types (e.g. exotic nested values).  Without a
+    ``sparkContext`` (Spark Connect) the frame is returned uncoalesced.
     """
     rows = rows if isinstance(rows, list) else list(rows)
     if not rows:
@@ -254,9 +251,13 @@ def local_frame(spark: SparkSession, rows, schema):
         out = spark.createDataFrame(pdf, st)
     except Exception:
         return spark.createDataFrame(rows, st)
-    n_slices = max(1, min(
-        spark.sparkContext.defaultParallelism, (len(rows) + 19999) // 20000
-    ))
+    try:
+        parallelism = spark.sparkContext.defaultParallelism
+    except AttributeError:
+        # Spark Connect: the client has no SparkContext; keep the
+        # server's layout of the local relation
+        return out
+    n_slices = max(1, min(parallelism, (len(rows) + 19999) // 20000))
     return out.coalesce(n_slices)
 
 

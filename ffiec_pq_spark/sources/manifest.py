@@ -6,7 +6,8 @@ Reference behaviors re-expressed:
   filename, sort (reference ffiec_list_zips, R/ffiec_manifest.R:51-117).
 - ``zip_member_manifest``: list zip members and regex-extract
   ``schedule``, ``date``, ``part``, ``n_parts`` from inner filenames
-  (reference get_cr_files, R/ffiec_manifest.R:130-144).
+  (reference get_cr_files, R/ffiec_manifest.R:130-144);
+  ``zip_member_rows`` is the same listing as plain rows.
 
 Both manifests are *small* (hundreds of rows) — they are built with
 driver-side Python and returned as DataFrames so downstream plan logic
@@ -20,6 +21,7 @@ from __future__ import annotations
 import os
 import re
 import zipfile
+from collections import namedtuple
 from datetime import datetime
 from glob import glob
 
@@ -74,29 +76,49 @@ def list_bulk_zips(spark: SparkSession, raw_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, _ZIP_SCHEMA).orderBy("date", "zipfile")
 
 
+ZipMember = namedtuple("ZipMember", _MEMBER_SCHEMA.fieldNames())
+
+
+def zip_member_rows(zip_path: str) -> list[ZipMember]:
+    """The member manifest of one zip as plain driver-side rows
+    (zipfile, file, schedule, date, part, n_parts).  Reads only the
+    central directory and runs no Spark job, so the ingest parses each
+    zip once and reads its POR member and schedule groups straight
+    from these rows."""
+    rows = []
+    with zipfile.ZipFile(zip_path) as zf:
+        for name in zf.namelist():
+            m = MEMBER_RE.search(name)
+            if not m:
+                rows.append(ZipMember(zip_path, name, None, None, None, None))
+                continue
+            sched = m.group("schedule")
+            rows.append(
+                ZipMember(
+                    zip_path,
+                    name,
+                    sched.lower() if sched else ("por" if m.group("por") else None),
+                    _parse_mmddyyyy(m.group("date")),
+                    int(m.group("part")) if m.group("part") else None,
+                    int(m.group("n_parts")) if m.group("n_parts") else None,
+                )
+            )
+    return rows
+
+
+def member_frame(spark: SparkSession, rows: list[ZipMember]) -> DataFrame:
+    """:func:`zip_member_rows` output as a manifest DataFrame; the rows
+    reach the JVM as Arrow batches (``session.local_frame``), not
+    pickled."""
+    from ffiec_pq_spark.session import local_frame
+
+    return local_frame(spark, rows, _MEMBER_SCHEMA)
+
+
 def zip_member_manifest(spark: SparkSession, zip_paths: list[str]) -> DataFrame:
     """Member manifest for each zip -> (zipfile, file, schedule, date,
     part, n_parts).  Reads only the central directory."""
-    rows = []
-    for zp in zip_paths:
-        with zipfile.ZipFile(zp) as zf:
-            for name in zf.namelist():
-                m = MEMBER_RE.search(name)
-                if not m:
-                    rows.append((zp, name, None, None, None, None))
-                    continue
-                sched = m.group("schedule")
-                rows.append(
-                    (
-                        zp,
-                        name,
-                        sched.lower() if sched else ("por" if m.group("por") else None),
-                        _parse_mmddyyyy(m.group("date")),
-                        int(m.group("part")) if m.group("part") else None,
-                        int(m.group("n_parts")) if m.group("n_parts") else None,
-                    )
-                )
-    return spark.createDataFrame(rows, _MEMBER_SCHEMA)
+    return member_frame(spark, [r for zp in zip_paths for r in zip_member_rows(zp)])
 
 
 def resolve_n_parts(manifest: DataFrame) -> DataFrame:

@@ -4,7 +4,11 @@ R/ffeic_read.R:34-119 and read_tsv_with_tab_repair :194-250).
 
 Spark has no native "read member X of a zip" source, so member bytes are
 extracted executor-side from a ``binaryFile`` scan of the zip and turned
-into a line DataFrame; everything after that is declarative:
+into a line DataFrame.  The ingest extracts all of a zip's schedule
+members in ONE pass (:func:`zip_lines_batch`), audits them together and
+parses each clean member from its slice of that frame; only members
+that need repair are extracted again on their own.  Everything after
+the extraction is declarative:
 
 1. header row (line 1) -> column names; line 2 is a description row and
    is skipped (reference ``skip = 2``).
@@ -230,41 +234,23 @@ def member_stats(
     return int(row["bad"] or 0), int(row["problems"] or 0)
 
 
-def zip_stats_batch(
-    spark: SparkSession,
-    zip_path: str,
-    colspecs: dict[str, list[tuple[str, str]]],
-    skip: int = 2,
-) -> dict[str, tuple[int, int]]:
-    """(n_bad_lines, n_problem_rows) for EVERY listed member of one zip
-    in a single Spark job.
+def zip_lines_batch(
+    spark: SparkSession, zip_path: str, members: list[str], skip: int = 2
+) -> DataFrame:
+    """Every listed member of one zip as ONE line frame (member,
+    line_no, value), extracted in a single ``binaryFile`` pass and
+    ``spread`` across the cluster: one zip = one ``binaryFile`` row =
+    ONE task, so without the redistribution every downstream per-line
+    operation would run single-threaded inside the extraction task.
 
-    The per-member :func:`member_stats` runs one ``collect`` per member
-    (two when the repair path re-checks) on a sequentially-extracted
-    line frame — at 100k members the job-scheduling overhead dominates
-    the audit.  Here one ``binaryFile`` pass extracts all members'
-    lines tagged with the member name, the per-member column specs ride
-    in as a broadcast (member, idx, type) dimension, and both counters
-    reduce map-side: posexplode fans each line out to its fields, the
-    typed-parse check joins its type char, and partial aggregation
-    collapses back to line granularity before the (member, line) ->
-    member shuffle.  Semantics are identical to :func:`member_stats`
-    (same NA tokens, same date-sentinel handling, same try_cast
-    lenience) — pinned by a fixture parity test.
-
-    The extracted line frame is ``spread`` before the field fan-out:
-    one zip = one ``binaryFile`` row = ONE task, and without the
-    redistribution every per-field split/try_cast of every member ran
-    single-threaded inside the extraction task — the round-12 stage
-    breakdown measured the audit as the ingest's top stage (6.6 s of
-    23.7 s at 10k banks) with 31 idle cores.  Spreading the
-    ~line-count rows costs one small exchange and parallelizes the
-    field work; the win grows with zip size exactly as a serial
-    bottleneck should: measured warm 4.3 s vs 16.5 s without the
-    spread at 80k banks (8x), and the extraction itself is 0.4 s, so
-    the residual is the distributed field pass."""
+    The ingest persists this frame, audits it with
+    :func:`lines_batch_stats` and parses every clean member from its
+    ``member`` slice — each bulk zip is decompressed into lines once.
+    Line values and the ``skip`` semantics match
+    :func:`zip_member_lines` (``line_no`` counts from 1 after the
+    skipped rows)."""
     bin_df = spark.read.format("binaryFile").load(zip_path)
-    members = sorted(colspecs)
+    members = sorted(members)
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -286,21 +272,48 @@ def zip_stats_batch(
 
     from ffiec_pq_spark.session import spread
 
-    lines_all = spread(
+    return spread(
         bin_df.select("content").mapInPandas(
             extract, schema="member string, line_no long, value string"
         )
     )
+
+
+def member_slice(lines_all: DataFrame, member: str) -> DataFrame:
+    """One member's (line_no, value) rows of a :func:`zip_lines_batch`
+    frame — the input :func:`parse_schedule_lines` takes."""
+    return lines_all.filter(F.col("member") == member).select("line_no", "value")
+
+
+def lines_batch_stats(
+    spark: SparkSession,
+    lines_all: DataFrame,
+    colspecs: dict[str, list[tuple[str, str]]],
+) -> dict[str, tuple[int, int]]:
+    """(n_bad_lines, n_problem_rows) for EVERY member of a
+    :func:`zip_lines_batch` frame in a single Spark job.
+
+    The per-member column specs ride in as a broadcast (member, idx,
+    type) dimension, and both counters reduce map-side: posexplode
+    fans each line out to its fields, the typed-parse check joins its
+    type char, and partial aggregation collapses back to line
+    granularity before the (member, line) -> member shuffle.
+    Semantics are identical to :func:`member_stats` (same NA tokens,
+    same date-sentinel handling, same try_cast lenience) — pinned by a
+    fixture parity test."""
+    from ffiec_pq_spark.session import local_frame
+
     spec_rows = [
         (m, i, tchar)
         for m, spec in colspecs.items()
         for i, (_, tchar) in enumerate(spec)
         if tchar in ("d", "i", "D")
     ]
-    spec_df = spark.createDataFrame(
-        spec_rows or [("", -1, "c")], "member string, idx int, tchar string"
+    spec_df = local_frame(
+        spark, spec_rows or [("", -1, "c")], "member string, idx int, tchar string"
     )
-    n_df = spark.createDataFrame(
+    n_df = local_frame(
+        spark,
         [(m, len(spec)) for m, spec in colspecs.items()],
         "member string, n_cols int",
     )
@@ -338,10 +351,39 @@ def zip_stats_batch(
         )
         .collect()
     )
-    out = {m: (0, 0) for m in members}  # empty members produce no rows
+    out = {m: (0, 0) for m in colspecs}  # empty members produce no rows
     for r in per_member:
         out[r["member"]] = (int(r["bad"] or 0), int(r["problems"] or 0))
     return out
+
+
+def zip_stats_batch(
+    spark: SparkSession,
+    zip_path: str,
+    colspecs: dict[str, list[tuple[str, str]]],
+    skip: int = 2,
+) -> dict[str, tuple[int, int]]:
+    """(n_bad_lines, n_problem_rows) for EVERY listed member of one zip
+    in a single Spark job: :func:`lines_batch_stats` over one
+    :func:`zip_lines_batch` extraction.
+
+    The per-member :func:`member_stats` runs one ``collect`` per member
+    (two when the repair path re-checks) on a sequentially-extracted
+    line frame — at 100k members the job-scheduling overhead dominates
+    the audit.  This is the stand-alone form; the ingest instead
+    persists the extraction and parses the clean members from the same
+    frame (``operators/process.py``), so no member is decompressed
+    twice.
+
+    The ``spread`` of the extracted lines is what parallelizes the
+    field pass: the round-12 stage breakdown measured the audit as the
+    ingest's top stage (6.6 s of 23.7 s at 10k banks) with 31 idle
+    cores; measured warm 4.3 s vs 16.5 s without the spread at 80k
+    banks (8x), and the extraction itself is 0.4 s, so the residual is
+    the distributed field pass."""
+    return lines_batch_stats(
+        spark, zip_lines_batch(spark, zip_path, list(colspecs), skip), colspecs
+    )
 
 
 def read_call_schedule(
@@ -360,33 +402,58 @@ def read_call_schedule(
     ``precomputed_stats``: the (n_bad, n_problems) pair from
     :func:`zip_stats_batch` — passing it removes this member's own
     stats job, so a clean member costs no Spark job until the terminal
-    write (the audit rode the whole-zip batch pass).
-
-    The extracted line DataFrame is CACHED on the repair path (the
-    re-check and the downstream parse would otherwise each
-    re-decompress the member); the clean path is consumed exactly once
-    by the write, so it stays uncached.  The caller releases via
-    ``audit['unpersist']()`` once the wide output is written."""
+    write (the audit rode the whole-zip batch pass).  See
+    :func:`read_schedule_member` for the line-frame lifecycle."""
     header = read_zip_member_header(zip_path, member)
     colspec = make_colspec(header, type_dict, overrides)
+    return read_schedule_member(
+        spark, zip_path, member, colspec, precomputed_stats
+    )
+
+
+def read_schedule_member(
+    spark: SparkSession,
+    zip_path: str,
+    member: str,
+    colspec: list[tuple[str, str]],
+    precomputed_stats: tuple[int, int] | None = None,
+    batch_lines: DataFrame | None = None,
+) -> tuple[DataFrame, dict]:
+    """:func:`read_call_schedule` for a member whose colspec is already
+    built.
+
+    ``batch_lines``: the zip's shared :func:`zip_lines_batch` frame the
+    ``precomputed_stats`` were taken from.  A clean member (no
+    bad-field-count line) then parses its slice of that frame instead
+    of decompressing the member again; without it a clean member is
+    extracted once, uncached, for its single downstream consumer.
+
+    A member that needs repair is re-extracted on its own with the text
+    repairs, and that line DataFrame is CACHED (the re-check and the
+    downstream parse would otherwise each re-decompress the member).
+    The caller releases it via ``audit['unpersist']()`` once the wide
+    output is written; releasing ``batch_lines`` is the caller's."""
     n = len(colspec)
     audit: dict = {"zipfile": zip_path, "file": member, "repairs": [], "ok": True}
 
     if precomputed_stats is not None:
         n_bad, n_problems = precomputed_stats
-        lines = zip_member_lines(spark, zip_path, member, skip=2)
         if not n_bad:
-            # clean fast path: single downstream consumer, no cache
             audit["n_problems"] = n_problems
             if n_problems:
                 audit["repairs"] = ["coerced-invalid-values"]
             audit["unpersist"] = lambda: None
+            if batch_lines is not None:
+                lines = member_slice(batch_lines, member)
+            else:
+                lines = zip_member_lines(spark, zip_path, member, skip=2)
             return parse_schedule_lines(lines, colspec), audit
     else:
         lines = zip_member_lines(spark, zip_path, member, skip=2).cache()
         n_bad, n_problems = member_stats(lines, colspec)
+        if n_bad:
+            lines.unpersist()
     if n_bad:
-        lines.unpersist()
         lines = zip_member_lines(
             spark, zip_path, member, skip=2, repair_expected_cols=n
         ).cache()

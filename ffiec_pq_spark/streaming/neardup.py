@@ -202,9 +202,10 @@ def run_neardup_bounded_stream(
     Per micro-batch (documents staged as four doc-id-ordered files,
     one per trigger; event time = epoch + doc_id seconds):
 
-    - map side, zero shuffle: each arriving doc's MinHash signature as
-      one projection (``minhash_sig_expr``) + its 8 (band, bkey) rows
-      (``lsh_band_structs`` explode);
+    - per batch: each arriving doc's MinHash signature
+      (``minhash_signatures``, computed once and pinned) + its 8
+      (band, bkey) rows (``lsh_bands``), tests in
+      tests/test_streaming.py;
     - ONE keyed exchange: groupBy(band, bkey) -> batch-min doc id +
       last event time, vectorized in ``foreachBatch``;
     - EMIT: each band row whose id exceeds least(state min, batch min)

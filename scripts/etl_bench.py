@@ -1,8 +1,10 @@
 """ETL throughput bench: generate a parameterized FFIEC-shaped bulk zip
-(n_banks x n_items across n_parts multipart schedule files + POR) and
-time the FULL ingest — manifest, dictionary-typed parse with two-phase
-repair gating, multipart combine, wide parquet, type-partitioned long
-tables with PK asserts, process log.
+(n_banks x n_items across n_parts multipart schedule files; no POR
+member, no malformed rows) and time the FULL ingest — manifest,
+dictionary-typed parse with two-phase repair gating, multipart
+combine, wide parquet, type-partitioned long tables with PK asserts,
+process log.  ``perfbench/run.py --workload etl_ingest`` is the
+benchmark that adds a POR member and rows that need repair.
 
 This makes the "a 10k-bank quarterly zip ingests in ~N s" claim
 reproducible per round instead of an ad-hoc measurement.
@@ -13,7 +15,8 @@ Prints one JSON line {"n_banks":..., "n_items":..., "cells":...,
 
 ``stage_sec`` breaks the ingest down by pipeline stage
 (manifest/validate, whole-zip audit, parse+repair, combine+wide
-write, POR, long build, schedule coverage, log write).  The per-group
+write, POR — near zero here, the zip has no POR member — long build,
+schedule coverage, log write).  The per-group
 stages (parse_repair / combine_write_wide) run on the FIFO thread
 pool, so their seconds are summed THREAD-seconds and can exceed the
 wall clock — ``stage_sec`` locates the work, ``ingest_sec`` is the

@@ -391,6 +391,55 @@ def test_strict_clean_read_gate(spark, tmp_path_factory):
     assert "coerced-invalid-values" in log2["repairs"]
 
 
+def _pure_violation_zip(d: str) -> str:
+    """One-member zip whose pure-typed item holds a numeric without
+    the percent sign (the fail-fast guard's trigger)."""
+    import os
+    import zipfile
+
+    lines = [
+        "IDRSSD\tRCFDA224\t",
+        "ID\tRatio\t",
+        "1001\t5.0%\t",
+        "1002\t7.25\t",  # violation: numeric without the percent sign
+    ]
+    zp = os.path.join(d, "FFIEC CDR Call Bulk All Schedules 03312024.zip")
+    with zipfile.ZipFile(zp, "w") as zf:
+        zf.writestr(
+            "FFIEC CDR Call Schedule RX 03312024.txt", "\n".join(lines) + "\n"
+        )
+    return zp
+
+
+@pytest.mark.parametrize("case", ["clean", "strict_blocked", "pure_violation"])
+def test_ingest_releases_persisted_frames(spark, tmp_path_factory, case):
+    """The ingest persists each zip's extracted line frame for the
+    audit and the parse; whether the run succeeds, is blocked by the
+    strict gate, or raises on a pure-column violation, every persisted
+    RDD is released by the time ffiec_process returns or raises."""
+    from tests.ffiec_fixtures import make_broken_zip
+
+    d = str(tmp_path_factory.mktemp(f"release_{case}"))
+    out = str(tmp_path_factory.mktemp(f"release_{case}_out"))
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    if case == "clean":
+        res = ffiec_process(spark, [make_call_zip(d)], TYPE_DICT, out, PURE_COLS)
+        assert res["wide"]
+    elif case == "strict_blocked":
+        res = ffiec_process(
+            spark, [make_broken_zip(d)], TYPE_DICT, out, strict=True
+        )
+        assert res["wide"] == []
+    else:
+        with pytest.raises(ValueError, match="percent-format violation"):
+            ffiec_process(
+                spark, [_pure_violation_zip(d)], {"RCFDA224": "c"}, out,
+                ["RCFDA224"],
+            )
+    assert jsc.getPersistentRDDs().size() == before, case
+
+
 def test_xbrl_extraction(spark, raw_dir):
     facts = split_context(
         extract_xbrl_facts(spark, raw_dir + "/*XBRL*.zip")
@@ -412,20 +461,8 @@ def test_pure_column_violation_fails_fast(spark, tmp_path_factory):
     deliverable behind.  The count rides the write job via observe();
     the raise happens at the post-write check."""
     import os
-    import zipfile
 
-    d = tmp_path_factory.mktemp("pure_viol")
-    lines = [
-        "IDRSSD\tRCFDA224\t",
-        "ID\tRatio\t",
-        "1001\t5.0%\t",
-        "1002\t7.25\t",  # violation: numeric without the percent sign
-    ]
-    zp = os.path.join(str(d), "FFIEC CDR Call Bulk All Schedules 03312024.zip")
-    with zipfile.ZipFile(zp, "w") as zf:
-        zf.writestr(
-            "FFIEC CDR Call Schedule RX 03312024.txt", "\n".join(lines) + "\n"
-        )
+    zp = _pure_violation_zip(str(tmp_path_factory.mktemp("pure_viol")))
     out = tmp_path_factory.mktemp("pure_viol_out")
     with pytest.raises(ValueError, match="percent-format violation"):
         ffiec_process(spark, [zp], {"RCFDA224": "c"}, str(out), ["RCFDA224"])

@@ -653,3 +653,49 @@ def test_resident_state_clear_hooks(spark, sf_dir):
 
     round12b.clear_probe_models()
     assert not round12b._PROBE_MODELS
+
+
+def test_local_frame_without_spark_context():
+    """A Spark Connect session has no ``sparkContext``: local_frame must
+    return the Arrow-built frame uncoalesced instead of raising."""
+    import pandas as pd
+    from pyspark.errors import PySparkAttributeError
+    from pyspark.sql import types as T
+
+    from ffiec_pq_spark.session import local_frame
+
+    class _Frame:
+        def coalesce(self, n):
+            raise AssertionError("coalesced without a SparkContext")
+
+    class _Conf:
+        def get(self, key, default=None):
+            return "true"
+
+    class _ConnectLikeSession:
+        conf = _Conf()
+
+        def __init__(self):
+            self.created = []
+
+        def createDataFrame(self, data, schema):
+            self.created.append(data)
+            return frame
+
+        def __getattr__(self, name):
+            # what a Spark Connect session raises for JVM-only attributes
+            raise PySparkAttributeError(
+                errorClass="JVM_ATTRIBUTE_NOT_SUPPORTED",
+                messageParameters={"attr_name": name},
+            )
+
+    frame = _Frame()
+    session = _ConnectLikeSession()
+    schema = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("s", T.StringType())]
+    )
+    got = local_frame(session, [(1, "a"), (2, "b")], schema)
+    assert got is frame
+    # the Arrow (pandas) path was taken, not the pickled-list fallback
+    assert len(session.created) == 1
+    assert isinstance(session.created[0], pd.DataFrame)

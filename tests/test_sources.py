@@ -111,12 +111,20 @@ def test_single_file_sink_sort_by_orders_the_file(spark, tmp_path):
 def test_zip_stats_batch_matches_member_stats(spark, tmp_path):
     """The whole-zip one-job audit batch must reproduce member_stats'
     (bad, problems) counters member-for-member — including the broken
-    zip's short row and malformed numeric."""
+    zip's short row and malformed numeric — and every clean member's
+    slice of the shared line frame must parse to the same rows as the
+    member's own extraction (the ingest parses clean members from
+    that slice)."""
+    from collections import Counter
+
     from ffiec_fixtures import TYPE_DICT, make_broken_zip, make_call_zip
     from ffiec_pq_spark.sources.tsv import (
         make_colspec,
+        member_slice,
         member_stats,
+        parse_schedule_lines,
         read_zip_member_header,
+        zip_lines_batch,
         zip_member_lines,
         zip_stats_batch,
     )
@@ -134,10 +142,17 @@ def test_zip_stats_batch_matches_member_stats(spark, tmp_path):
             for m in members
         }
         batch = zip_stats_batch(spark, zp, colspecs)
+        lines_all = zip_lines_batch(spark, zp, members)
         for m in members:
             lines = zip_member_lines(spark, zp, m, skip=2)
             expect = member_stats(lines, colspecs[m])
             assert batch[m] == expect, (builder.__name__, m, batch[m], expect)
+            if expect[0] == 0:
+                got = parse_schedule_lines(
+                    member_slice(lines_all, m), colspecs[m]
+                ).collect()
+                want = parse_schedule_lines(lines, colspecs[m]).collect()
+                assert Counter(got) == Counter(want), (builder.__name__, m)
 
 
 def test_zip_lines_python_datasource(spark, tmp_path):
