@@ -345,8 +345,8 @@ def _load_all() -> None:
     from ffiec_pq_spark.queries import reshape  # noqa: F401
     from ffiec_pq_spark.queries import integrity  # noqa: F401
     from ffiec_pq_spark.queries import core_relational  # noqa: F401
-    # not a query module, but its resident-cache clear hook must be
-    # registered whenever the registry is loaded (resident.py contract)
+    # not a query module, but its resident memo must be registered
+    # whenever the registry is loaded (resident.py contract)
     from ffiec_pq_spark.streaming import neardup  # noqa: F401
 
     _LOADED = True

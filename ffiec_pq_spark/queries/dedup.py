@@ -11,7 +11,7 @@ import os
 from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
-from ffiec_pq_spark.resident import register_clear_hook
+from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.functions.hashing import hash60_sql
 from ffiec_pq_spark.operators.dedup import (
     MINHASH_PRIME,
@@ -47,25 +47,14 @@ _SHINGLE_CTE = _shingle_cte()
 _SIZES_CTE = "sizes AS (SELECT id, count(*) AS set_size FROM sh GROUP BY id)"
 
 
-# Resident duplicate-component labellings, keyed on (applicationId,
-# os.path.abspath(sf_dir)): the (id, cluster) relation is the shared
-# substrate of every cluster consumer (cluster summary, keep-best
-# selection, leakage-safe split), and rebuilding the O(log d)
-# pointer-jumping propagation per consumer paid the most expensive
-# dedup stage twice per session (round-11 verdict).  The applicationId
-# in the key drops entries from a stopped session — a localCheckpoint
-# is session-bound state, unlike the driver-side model memos.
-_CC_LABELS: dict[tuple[str, str], "DataFrame"] = {}
-
-
-def clear_component_labels() -> None:
-    """Invalidate every resident component labelling (call after
-    rewriting a dataset in place).  Same explicit-invalidation
-    contract as ``clear_pca_models()`` / ``clear_ivfpq_models()``."""
-    _CC_LABELS.clear()
-
-
-register_clear_hook("component_labels", clear_component_labels, state=_CC_LABELS)
+# Resident duplicate-component labellings per dataset_key(spark,
+# sf_dir): the (id, cluster) relation is the shared substrate of every
+# cluster consumer (cluster summary, keep-best selection, leakage-safe
+# split), and rebuilding the O(log d) pointer-jumping propagation per
+# consumer paid the most expensive dedup stage twice per session
+# (round-11 verdict).  A localCheckpoint is session-bound state, hence
+# the application id in the key (unlike the driver-side model memos).
+_CC_LABELS = Memo("component_labels")
 
 
 def component_labels(spark, sf_dir):
@@ -79,16 +68,13 @@ def component_labels(spark, sf_dir):
     matching the other resident builders' isolation behavior."""
     from ffiec_pq_spark.operators.dedup import dup_components_collapsed
 
-    key = dataset_key(spark, sf_dir)
-    comp = _CC_LABELS.get(key)
-    if comp is None:
-        docs = load_table(spark, sf_dir, "documents")
-        comp = dup_components_collapsed(
-            docs, k=_K, n_perm=_N_PERM, n_bands=_N_BANDS,
-            threshold=_THRESHOLD,
-        ).localCheckpoint(eager=True)
-        _CC_LABELS[key] = comp
-    return comp
+    return _CC_LABELS.get_or_build(
+        dataset_key(spark, sf_dir),
+        lambda: dup_components_collapsed(
+            load_table(spark, sf_dir, "documents"),
+            k=_K, n_perm=_N_PERM, n_bands=_N_BANDS, threshold=_THRESHOLD,
+        ).localCheckpoint(eager=True),
+    )
 
 
 _DECON_MAX_DF = 50

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.streaming.state import read_state
-from ffiec_pq_spark.resident import register_clear_hook
+from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.session import dataset_key, load_table
 
 _D = 0.75  # exact in binary: (n2 - 0.75) is one correctly-rounded op
@@ -333,21 +333,7 @@ def doc_moore_lewis_select(spark, sf_dir):
 # incrementally must not change a single score
 from ffiec_pq_spark.queries.round12b import _KN_SQL  # noqa: E402
 
-_KN_STREAM_STATE: dict[tuple, dict] = {}
-
-
-def clear_kn_stream_state() -> None:
-    """Invalidate the resident maintained LM count state."""
-    import shutil
-
-    for st in _KN_STREAM_STATE.values():
-        shutil.rmtree(st["workdir"], ignore_errors=True)
-    _KN_STREAM_STATE.clear()
-
-
-register_clear_hook(
-    "kn_stream_state", clear_kn_stream_state, state=_KN_STREAM_STATE
-)
+_KN_STREAM_STATE = Memo("kn_stream_state")
 
 
 def _kn_insert_fold(spark, state, workdir):
@@ -387,7 +373,7 @@ def _kn_insert_fold(spark, state, workdir):
 
 def _kn_stream_build(spark, corpus, chunk_order=None, n_chunks=4):
     """Drain the ingest stream and return the maintained state
-    ``{workdir, c2}`` (caller owns cleanup: the memo's clear hook, or
+    ``{workdir, c2}`` (caller owns cleanup: the memo's drop, or
     the serve's finally for ephemeral runs)."""
     import shutil
     import tempfile
@@ -470,10 +456,10 @@ def stream_kn_counts_fold(spark, sf_dir, chunk_order=None):
     must not change a single score.
 
     The maintained counts are RESIDENT per (session, dataset)
-    (``_KN_STREAM_STATE``, the ``_BM25_STREAM_STATE`` convention,
-    clear hook registered): repeat calls pay only the serve, the cold
-    column keeps the full fold replay visible.  An explicit
-    ``chunk_order`` always folds fresh (and cleans up after itself).
+    (``_KN_STREAM_STATE``, the ``_BM25_STREAM_STATE`` convention):
+    repeat calls pay only the serve, the cold column keeps the full
+    fold replay visible.  An explicit ``chunk_order`` always folds
+    fresh (and cleans up after itself).
 
     At 100 TB: per-trigger work ∝ batch; the count-table merge is the
     MERGE-INTO stand-in (vocab²-bounded, versioned via
@@ -531,33 +517,20 @@ _KN_UNLEARN_SQL = rf"""
     GROUP BY doc_id
     """
 
-# Resident full-corpus bigram counts per abspath(sf_dir): the
-# unlearning path subtracts the erased documents' counts from these
-# instead of re-counting the survivors.
-_KN_STATS: dict[str, object] = {}
-
-
-def clear_kn_stats() -> None:
-    """Invalidate the resident full-corpus bigram counts."""
-    _KN_STATS.clear()
-
-
-register_clear_hook("kn_stats", clear_kn_stats, state=_KN_STATS)
+# Resident full-corpus bigram counts per dataset_key(None, sf_dir):
+# the unlearning path subtracts the erased documents' counts from
+# these instead of re-counting the survivors.
+_KN_STATS = Memo("kn_stats")
 
 
 def _kn_full_counts(spark, sf_dir):
-    key = dataset_key(None, sf_dir)
-    c2 = _KN_STATS.get(key)
-    if c2 is None:
-        docs = load_table(spark, sf_dir, "documents")
-        c2 = (
-            _bigrams(docs)
-            .groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).cast("long").alias("n2"))
-            .localCheckpoint(eager=True)
-        )
-        _KN_STATS[key] = c2
-    return c2
+    return _KN_STATS.get_or_build(
+        dataset_key(None, sf_dir),
+        lambda: _bigrams(load_table(spark, sf_dir, "documents"))
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).cast("long").alias("n2"))
+        .localCheckpoint(eager=True),
+    )
 
 
 @register(

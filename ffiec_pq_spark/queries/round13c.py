@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.functions.lits import double_array
 from ffiec_pq_spark.operators.similarity import cosine, dot, ivf_centroid, norm
-from ffiec_pq_spark.resident import register_clear_hook, tracked_persist
+from ffiec_pq_spark.resident import Memo, tracked_persist
 from ffiec_pq_spark.session import dataset_key, load_table
 
 # --------------------------------------------------------------------------
@@ -293,7 +293,7 @@ def _dense_rank_cells(qcell, ccell):
 
 
 # Resident validated-and-cell-assigned vector relations per
-# (applicationId, abspath(sf_dir), n_cells) — the _gated_frame
+# dataset_key(spark, sf_dir) + (n_cells,) — the _gated_frame
 # precedent applied to the retrieval family's vector contract: every
 # family member used to re-derive the valid slice (NULL/empty/zero-norm
 # exclusion), the norms, and the centroid-argmax cells from the parquet
@@ -302,15 +302,7 @@ def _dense_rank_cells(qcell, ccell):
 # At deployment scale the ccell relation IS a stored cell-partitioned
 # table (exactly what the stream fold maintains on disk); the
 # localCheckpoint is its test-scale resident stand-in.
-_CELL_FRAMES: dict = {}
-
-
-def clear_cell_frames() -> None:
-    """Invalidate the resident cell-assigned vector relations."""
-    _CELL_FRAMES.clear()
-
-
-register_clear_hook("cell_frames", clear_cell_frames, state=_CELL_FRAMES)
+_CELL_FRAMES = Memo("cell_frames")
 
 
 def _cell_frames(spark, sf_dir, nc=None):
@@ -321,10 +313,13 @@ def _cell_frames(spark, sf_dir, nc=None):
     serve, and the erasure path."""
     if nc is None:
         nc = _n_cells()
-    key = dataset_key(spark, sf_dir) + (nc,)
-    cached = _CELL_FRAMES.get(key)
-    if cached is not None:
-        return cached
+    return _CELL_FRAMES.get_or_build(
+        dataset_key(spark, sf_dir) + (nc,),
+        lambda: _cell_frames_build(spark, sf_dir, nc),
+    )
+
+
+def _cell_frames_build(spark, sf_dir, nc):
     # spread BEFORE the checkpoint: localCheckpoint freezes the RDD
     # layout, and a single-file embeddings scan froze ccell at ONE
     # partition — every downstream candidate-join + exact-cosine stage
@@ -339,7 +334,6 @@ def _cell_frames(spark, sf_dir, nc=None):
     ccell = _corpus_cells(
         emb.filter(F.col("vec_id") % 10 != 0), nc
     ).localCheckpoint(eager=True)
-    _CELL_FRAMES[key] = (qcell, ccell)
     return qcell, ccell
 
 
@@ -1056,14 +1050,7 @@ def _agree_sql() -> str:
 # Memoizing the FINAL frame also bounds the per-call persist the
 # builders previously leaked (each invocation cached a fresh copy of
 # the population and relied on executor LRU eviction).
-_GATED_FRAMES: dict = {}
-
-
-def clear_gated_frames() -> None:
-    _GATED_FRAMES.clear()
-
-
-register_clear_hook("gated_frames", clear_gated_frames, state=_GATED_FRAMES)
+_GATED_FRAMES = Memo("gated_frames")
 
 
 def _gated_frame_build(spark, sf_dir):
@@ -1137,15 +1124,14 @@ def _gated_frame(spark, sf_dir):
     checkpointed, the intermediate population is unpersisted
     immediately after, and every consumer reads the cached relation
     (so repeated calls no longer accumulate per-call persists)."""
-    key = dataset_key(spark, sf_dir)
-    cached = _GATED_FRAMES.get(key)
-    if cached is not None:
-        return cached
-    pop, built = _gated_frame_build(spark, sf_dir)
-    out = built.localCheckpoint(eager=True)
-    pop.unpersist()
-    _GATED_FRAMES[key] = out
-    return out
+
+    def build():
+        pop, built = _gated_frame_build(spark, sf_dir)
+        out = built.localCheckpoint(eager=True)
+        pop.unpersist()
+        return out
+
+    return _GATED_FRAMES.get_or_build(dataset_key(spark, sf_dir), build)
 
 
 @register(

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.streaming.state import read_state
-from ffiec_pq_spark.resident import register_clear_hook
+from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.session import dataset_key, load_table
 
 _SC_OUT_SCHEMA = (
@@ -90,20 +90,7 @@ def _sc_oracle(where: str = "") -> str:
 # --------------------------------------------------------------------------
 # stream_scorecard_fold
 
-_SC_STREAM_STATE: dict = {}
-
-
-def clear_sc_stream_state() -> None:
-    import shutil
-
-    for st in _SC_STREAM_STATE.values():
-        shutil.rmtree(st["workdir"], ignore_errors=True)
-    _SC_STREAM_STATE.clear()
-
-
-register_clear_hook(
-    "scorecard_stream_state", clear_sc_stream_state, state=_SC_STREAM_STATE
-)
+_SC_STREAM_STATE = Memo("scorecard_stream_state")
 
 
 def _sc_insert_fold(spark, state, workdir):
@@ -214,8 +201,7 @@ def stream_scorecard_fold(spark, sf_dir, chunk_order=None):
     version retirement via
     :func:`~ffiec_pq_spark.streaming.state.emit_versioned`).
 
-    Resident per (session, dataset) (``_SC_STREAM_STATE``, clear hook
-    registered): repeat calls pay only the serve; an explicit
+    Resident per (session, dataset) (``_SC_STREAM_STATE``): repeat calls pay only the serve; an explicit
     ``chunk_order`` folds fresh and cleans up after itself."""
     from ffiec_pq_spark.session import ensure_session_confs
 

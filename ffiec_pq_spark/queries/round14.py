@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.streaming.state import read_state
-from ffiec_pq_spark.resident import register_clear_hook, tracked_persist
+from ffiec_pq_spark.resident import Memo, tracked_persist
 from ffiec_pq_spark.session import dataset_key, load_table
 from ffiec_pq_spark.queries.round13c import (
     _corpus_cells,
@@ -263,7 +263,7 @@ def _rrf_stream_build(
 ):
     """Run the ingest stream to completion and return the maintained
     fused-index state ``{workdir, tf, dl, cells, df, meta, nc}``
-    (workdir kept — cleanup via the memo's clear hook or the
+    (workdir kept — cleanup via the memo's drop or the
     ephemeral serve's finally).  ``files_per_trigger`` sizes the
     micro-batches (``scripts/stream_fold_bench.py`` A/Bs the
     per-trigger fixed cost against it at fixed corpus)."""
@@ -308,25 +308,11 @@ def _rrf_stream_build(
         raise
 
 
-# Resident maintained fused-index state per (applicationId,
-# abspath(sf_dir), n_cells) — in a deployment these ARE the stored
-# index tables the ingest stream maintains; the cell count joins the
-# key because the scale harness re-parameterizes the geometry.
-_RRF_STREAM_STATE: dict = {}
-
-
-def clear_rrf_stream_state() -> None:
-    """Invalidate the resident fused-index stream states."""
-    import shutil
-
-    for st in _RRF_STREAM_STATE.values():
-        shutil.rmtree(st["workdir"], ignore_errors=True)
-    _RRF_STREAM_STATE.clear()
-
-
-register_clear_hook(
-    "rrf_stream_state", clear_rrf_stream_state, state=_RRF_STREAM_STATE
-)
+# Resident maintained fused-index state per dataset_key(spark, sf_dir)
+# + (n_cells,) — in a deployment these ARE the stored index tables the
+# ingest stream maintains; the cell count joins the key because the
+# scale harness re-parameterizes the geometry.
+_RRF_STREAM_STATE = Memo("rrf_stream_state")
 
 
 @register(
@@ -379,7 +365,7 @@ def stream_rrf_fold(spark, sf_dir, chunk_order=None):
     # between folds, so the served (eagerly checkpointed) fusion is
     # cached with it — repeat calls read the maintained asset, the
     # deploy's steady state; the next fold (a new state dict) or the
-    # clear hook invalidates it together with the state
+    # memo's clear invalidates it together with the state
     if st.get("serve") is None:
         st["serve"] = _rrf_serve(spark, sf_dir, st)
     return st["serve"]
@@ -460,7 +446,7 @@ def _rrf_delete_build(spark, corpus, n_chunks=3):
     """One-time fused-index build (in a deployment: the stored tables
     the erasure stream maintains), then stream the erasure log through
     the decrement fold; returns the corrected state paths (workdir
-    kept; cleanup via :func:`clear_rrf_delete_state`)."""
+    kept; cleanup via ``_RRF_DEL_STATE.clear()``)."""
     import shutil
     import tempfile
 
@@ -555,21 +541,7 @@ def _rrf_delete_build(spark, corpus, n_chunks=3):
         raise
 
 
-_RRF_DEL_STATE: dict = {}
-
-
-def clear_rrf_delete_state() -> None:
-    """Invalidate the resident erasure-corrected fused indexes."""
-    import shutil
-
-    for st in _RRF_DEL_STATE.values():
-        shutil.rmtree(st["workdir"], ignore_errors=True)
-    _RRF_DEL_STATE.clear()
-
-
-register_clear_hook(
-    "rrf_delete_state", clear_rrf_delete_state, state=_RRF_DEL_STATE
-)
+_RRF_DEL_STATE = Memo("rrf_delete_state")
 
 
 @register(
@@ -798,16 +770,10 @@ def _ensemble_sql() -> str:
     )
 
 
-# Trained ensemble weights per abspath(sf_dir) (the _PROBE_MODELS
-# convention): repeat calls score against the resident weights.
-_ENSEMBLE_MODELS: dict = {}
-
-
-def clear_ensemble_models() -> None:
-    _ENSEMBLE_MODELS.clear()
-
-
-register_clear_hook("ensemble_models", clear_ensemble_models, state=_ENSEMBLE_MODELS)
+# Trained ensemble weights per dataset_key(None, sf_dir) (the
+# _PROBE_MODELS convention): repeat calls score against the resident
+# weights.
+_ENSEMBLE_MODELS = Memo("ensemble_models")
 
 
 def ensemble_weights(spark, sf_dir):
@@ -818,12 +784,10 @@ def ensemble_weights(spark, sf_dir):
     state."""
     from ffiec_pq_spark.operators.linear_probe import probe_fit_int
 
-    key = dataset_key(None, sf_dir)
-    if key not in _ENSEMBLE_MODELS:
-        _ENSEMBLE_MODELS[key] = probe_fit_int(
-            *_ens_stats(_ens_population(spark, sf_dir))
-        )
-    return _ENSEMBLE_MODELS[key]
+    return _ENSEMBLE_MODELS.get_or_build(
+        dataset_key(None, sf_dir),
+        lambda: probe_fit_int(*_ens_stats(_ens_population(spark, sf_dir))),
+    )
 
 
 def _ens_stats_rows(base):

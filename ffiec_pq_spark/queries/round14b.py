@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.streaming.state import read_state
-from ffiec_pq_spark.resident import register_clear_hook, tracked_persist
+from ffiec_pq_spark.resident import Memo, tracked_persist
 from ffiec_pq_spark.session import dataset_key, load_table
 from ffiec_pq_spark.queries.round14 import (
     _ENS_DIM,
@@ -186,15 +186,14 @@ def gate_ensemble_heldout_eval(spark, sf_dir):
 
     base = _ens_population(spark, sf_dir)
     is_train = F.col("doc_id") % 5 != 0
-    key = dataset_key(None, sf_dir) + ("train80",)
-    if key not in _ENS_SPLIT_MODELS:
-        _ENS_SPLIT_MODELS[key] = probe_fit_int(
-            *_ens_stats(base.filter(is_train))
-        )
+    w = _ENS_SPLIT_MODELS.get_or_build(
+        dataset_key(None, sf_dir) + ("train80",),
+        lambda: probe_fit_int(*_ens_stats(base.filter(is_train))),
+    )
     scored = base.select(
         "doc_id",
         "y",
-        _ens_score_col(_ENS_SPLIT_MODELS[key]).alias("ens_micro"),
+        _ens_score_col(w).alias("ens_micro"),
         F.when(is_train, F.lit("train"))
         .otherwise(F.lit("heldout"))
         .alias("split"),
@@ -228,28 +227,8 @@ def gate_ensemble_heldout_eval(spark, sf_dir):
 # Trained 80%-slice combiners per dataset (the _PROBE_MODELS "#train80"
 # convention) and the full-population sufficient statistics the
 # unlearn path subtracts from.
-_ENS_SPLIT_MODELS: dict = {}
-_ENS_STATS_MEMO: dict = {}
-
-
-def clear_ensemble_lifecycle_state() -> None:
-    _ENS_SPLIT_MODELS.clear()
-    _ENS_STATS_MEMO.clear()
-
-
-# one registration PER backing dict so resident_state_report() audits
-# both residents — a hook that clears two containers but registers one
-# undercounts the family's footprint (r14 advice item)
-register_clear_hook(
-    "ensemble_lifecycle_state",
-    clear_ensemble_lifecycle_state,
-    state=_ENS_STATS_MEMO,
-)
-register_clear_hook(
-    "ensemble_split_models",
-    _ENS_SPLIT_MODELS.clear,
-    state=_ENS_SPLIT_MODELS,
-)
+_ENS_SPLIT_MODELS = Memo("ensemble_split_models")
+_ENS_STATS_MEMO = Memo("ensemble_lifecycle_state")
 
 
 def _ens_unlearn_sql() -> str:
@@ -346,10 +325,9 @@ def gate_ensemble_unlearn(spark, sf_dir):
 
     base = _ens_population(spark, sf_dir)
     erased = F.col("doc_id") % _ENS_FORGET_MOD == _ENS_FORGET_SLOT
-    key = dataset_key(None, sf_dir)
-    if key not in _ENS_STATS_MEMO:
-        _ENS_STATS_MEMO[key] = _ens_stats(base)
-    a, b, n = _ENS_STATS_MEMO[key]
+    a, b, n = _ENS_STATS_MEMO.get_or_build(
+        dataset_key(None, sf_dir), lambda: _ens_stats(base)
+    )
     da, db, dn = _ens_stats(base.filter(erased))
     a2 = [
         [a[i][j] - da[i][j] for j in range(_ENS_DIM)]
@@ -637,7 +615,7 @@ def _ens_stats_fold(spark, state, workdir):
 def _ens_stream_build(spark, pop, chunk_order=None, n_chunks=4):
     """Run the population ingest stream to completion and return the
     maintained statistics state ``{workdir, stats}`` (workdir kept —
-    cleanup via the memo's clear hook or the ephemeral caller)."""
+    cleanup via the memo's drop or the ephemeral caller)."""
     import shutil
     import tempfile
 
@@ -666,22 +644,7 @@ def _ens_stream_build(spark, pop, chunk_order=None, n_chunks=4):
         raise
 
 
-_ENS_STREAM_STATE: dict = {}
-
-
-def clear_ensemble_stream_state() -> None:
-    """Invalidate the resident streamed ensemble statistics."""
-    import shutil
-
-    for st in _ENS_STREAM_STATE.values():
-        shutil.rmtree(st["workdir"], ignore_errors=True)
-    _ENS_STREAM_STATE.clear()
-
-
-register_clear_hook(
-    "ensemble_stream_state", clear_ensemble_stream_state,
-    state=_ENS_STREAM_STATE,
-)
+_ENS_STREAM_STATE = Memo("ensemble_stream_state")
 
 
 @register(

@@ -516,10 +516,9 @@ def gate_ensemble_ablation(spark, sf_dir):
     import os as _os
 
     pop = _ens_population(spark, sf_dir)
-    key = dataset_key(None, sf_dir)
-    if key not in _ENS_STATS_MEMO:
-        _ENS_STATS_MEMO[key] = _ens_stats(pop)
-    a, b, n = _ENS_STATS_MEMO[key]
+    a, b, n = _ENS_STATS_MEMO.get_or_build(
+        dataset_key(None, sf_dir), lambda: _ens_stats(pop)
+    )
     arms = []
     for arm, k in _ABL_ARMS:
         az = [

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.functions.lits import double_array
-from ffiec_pq_spark.resident import register_clear_hook
+from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.operators.pq import pq_adc_topk, pq_codes, pq_fit
 from ffiec_pq_spark.queries.similarity import _DIM, _PROBE
 from ffiec_pq_spark.session import dataset_key, load_table
@@ -519,21 +519,9 @@ def _ivfpq_sql(top_k: int = 10) -> str:
     )
 
 
-# Trained IVF-PQ models per os.path.abspath(sf_dir): (coarse
-# centroids, PQ codebooks).  Keys are NORMALIZED so two spellings of
-# the same dataset can't train twice; rewriting the parquet in place
-# mid-process requires an explicit ``clear_ivfpq_models()`` — no
-# mtime-based invalidation, same contract as ``clearCache()``.
-_IVFPQ_MODELS: dict[str, tuple[list, list]] = {}
-
-
-def clear_ivfpq_models() -> None:
-    """Invalidate every resident IVF-PQ model (call after rewriting a
-    dataset in place)."""
-    _IVFPQ_MODELS.clear()
-
-
-register_clear_hook("ivfpq_models", clear_ivfpq_models, state=_IVFPQ_MODELS)
+# Trained IVF-PQ models per dataset_key(None, sf_dir): (coarse
+# centroids, PQ codebooks).
+_IVFPQ_MODELS = Memo("ivfpq_models")
 
 
 def _ivfpq_model(spark, sf_dir):
@@ -569,19 +557,9 @@ def _ivfpq_model(spark, sf_dir):
 # per call cost every warm rep ~1 s of pure DRIVER plan re-construction
 # (ivfpq_codes + ivfpq_cell_ranks rebuild literal-heavy expression
 # trees and the ranks COLLECT a 1-row job) — round-15 profile: build
-# 2.0 s vs execution 0.4 s.  applicationId in the key drops entries
-# from a stopped session (persisted blocks are session-bound), the
-# ``_CC_LABELS`` precedent.
-_IVFPQ_SERVE: dict[tuple[str, str], dict] = {}
-
-
-def clear_ivfpq_serve() -> None:
-    """Invalidate the derived serve state (call with
-    ``clear_ivfpq_models()`` after rewriting a dataset in place)."""
-    _IVFPQ_SERVE.clear()
-
-
-register_clear_hook("ivfpq_serve", clear_ivfpq_serve, state=_IVFPQ_SERVE)
+# 2.0 s vs execution 0.4 s.  Keyed per session (persisted blocks are
+# session-bound), the ``_CC_LABELS`` precedent.
+_IVFPQ_SERVE = Memo("ivfpq_serve")
 
 
 def _ivfpq_serve_state(spark, sf_dir) -> dict:
@@ -591,18 +569,17 @@ def _ivfpq_serve_state(spark, sf_dir) -> dict:
     from ffiec_pq_spark.operators.pq import ivfpq_cell_ranks, ivfpq_codes
     from ffiec_pq_spark.queries.similarity import _PROBE
 
-    key = dataset_key(spark, sf_dir)
-    st = _IVFPQ_SERVE.get(key)
-    if st is None:
+
+    def build():
         coarse, books, resid = _ivfpq_model(spark, sf_dir)
-        st = {
+        return {
             "coarse": coarse,
             "books": books,
             "codes": ivfpq_codes(resid, books),
             "ranks": ivfpq_cell_ranks(spark, coarse, _PROBE),
         }
-        _IVFPQ_SERVE[key] = st
-    return st
+
+    return _IVFPQ_SERVE.get_or_build(dataset_key(spark, sf_dir), build)
 
 
 @register(

@@ -9,7 +9,7 @@ import os
 from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
-from ffiec_pq_spark.resident import register_clear_hook
+from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.operators.similarity import (
     ann_topk_bruteforce,
     cosine_pairs_within,
@@ -268,35 +268,27 @@ def _kmeans_sql(k: int = 4, iters: int = 3) -> str:
     )
 
 
-# Fitted k-means centroids per (dataset, k, iters) — the
-# _PROBE_MODELS / _PCA_MODELS / _IVFPQ_MODELS convention (round 15):
-# the Lloyd loop (init + per-iteration full-scan collect jobs) is the
-# TRAINING cost a deployment pays once per corpus, but kmeans_fit ran
-# it again on every call, so every warm rep of kmeans_cell_sizes /
+# Fitted k-means centroids per dataset_key(None, sf_dir) + (k, iters)
+# — the _PROBE_MODELS / _PCA_MODELS / _IVFPQ_MODELS convention (round
+# 15): the Lloyd loop (init + per-iteration full-scan collect jobs) is
+# the TRAINING cost a deployment pays once per corpus, but kmeans_fit
+# ran it again on every call, so every warm rep of kmeans_cell_sizes /
 # semantic_dedup_cells re-trained the quantizer it had already fitted.
-# k*dim floats of driver state; explicit invalidation via the resident
-# registry, same contract as clear_ivfpq_models().
-_KMEANS_MODELS: dict[tuple, list] = {}
-
-
-def clear_kmeans_models() -> None:
-    """Invalidate every resident k-means model (call after rewriting a
-    dataset in place)."""
-    _KMEANS_MODELS.clear()
-
-
-register_clear_hook("kmeans_models", clear_kmeans_models, state=_KMEANS_MODELS)
+# k*dim floats of driver state.
+_KMEANS_MODELS = Memo("kmeans_models")
 
 
 def _kmeans_cents(spark, sf_dir, k: int = 4, iters: int = 3) -> list:
     """Train-or-fetch the shared embedding-corpus quantizer."""
     from ffiec_pq_spark.operators.kmeans import kmeans_fit
 
-    key = dataset_key(None, sf_dir) + (k, iters)
-    if key not in _KMEANS_MODELS:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _KMEANS_MODELS[key] = kmeans_fit(emb, k=k, dim=_DIM, iters=iters)
-    return _KMEANS_MODELS[key]
+    return _KMEANS_MODELS.get_or_build(
+        dataset_key(None, sf_dir) + (k, iters),
+        lambda: kmeans_fit(
+            load_table(spark, sf_dir, "embeddings"), k=k, dim=_DIM,
+            iters=iters,
+        ),
+    )
 
 
 def _kmeans_asg(spark, sf_dir, k: int = 4, iters: int = 3):
@@ -538,23 +530,9 @@ def _pca_sql(iters: int = 5) -> str:
     )
 
 
-# Fitted PC1 models per os.path.abspath(sf_dir) (value may be None
+# Fitted PC1 models per dataset_key(None, sf_dir) (value may be None
 # for a degenerate < 2-vector corpus — still a valid, memoized fit).
-# Keys are NORMALIZED so two spellings of the same dataset (relative
-# vs absolute, trailing slash) can't train twice; regenerating the
-# parquet in place mid-process requires an explicit
-# ``clear_pca_models()`` — there is no mtime-based invalidation, same
-# contract as Spark's own ``spark.catalog.clearCache()``.
-_PCA_MODELS: dict[str, tuple[list[float], list[float]] | None] = {}
-
-
-def clear_pca_models() -> None:
-    """Invalidate every resident PCA model (call after rewriting a
-    dataset in place)."""
-    _PCA_MODELS.clear()
-
-
-register_clear_hook("pca_models", clear_pca_models, state=_PCA_MODELS)
+_PCA_MODELS = Memo("pca_models")
 
 
 @register("embedding_pca_scores", _pca_sql(iters=5), tags=["similarity", "iterative"])
@@ -576,12 +554,12 @@ def embedding_pca_scores(spark, sf_dir):
     from ffiec_pq_spark.operators.pca import pca_fit, pca_scores
 
     emb = load_table(spark, sf_dir, "embeddings")
-    key = dataset_key(None, sf_dir)
-    if key not in _PCA_MODELS:
-        _PCA_MODELS[key] = pca_fit(emb, "embedding", _DIM, iters=5)
+    model = _PCA_MODELS.get_or_build(
+        dataset_key(None, sf_dir),
+        lambda: pca_fit(emb, "embedding", _DIM, iters=5),
+    )
     return pca_scores(
-        emb, "embedding", "vec_id", _DIM, iters=5,
-        model=_PCA_MODELS[key],
+        emb, "embedding", "vec_id", _DIM, iters=5, model=model
     )
 
 

@@ -1,51 +1,129 @@
-"""Unified governance for resident (per-session, per-dataset) state.
+"""Resident (per-session, per-dataset) state: one memo type for all of it.
 
-The engine memoizes expensive one-time builds — trained models
-(PCA / k-means-PQ / linear probe), maintained stream state (BM25
-postings, near-dup band state, incremental cluster corpus state), and
-shared relations (component labels) — keyed on
-``os.path.abspath(sf_dir)`` (plus the application id for stream
-state).  Each owning module has always shipped an explicit
-``clear_*()`` hook (the ``spark.catalog.clearCache()`` contract: a
-dataset rewritten in place must be explicitly invalidated), but with
-10+ caches the per-cache convention became the failure mode: a caller
-that forgets ONE hook serves stale state for that family only.
-
-This module closes that by construction: every cache registers its
-clear hook at import time (``register_clear_hook``), and
-:func:`clear_all_resident_state` invalidates everything in one call.
-Importing :mod:`ffiec_pq_spark.catalog` (which loads every query
-module) guarantees all hooks are registered.
+The engine reuses expensive one-time builds across queries — trained
+models (PCA / k-means-PQ / linear probe), maintained stream state
+(BM25 postings, near-dup band state, incremental cluster corpus
+state), shared relations (component labels) and loaded frames.  Every
+such cache is a :class:`Memo`; the invalidation and eviction contract
+lives in its docstring, and :func:`clear_all_resident_state` /
+:func:`resident_state_report` cover every memo because each one
+registers itself by name when it is created.  Importing
+:mod:`ffiec_pq_spark.catalog` (which loads every query module) creates
+them all.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Callable
+import shutil
+import types
+from typing import Any, Callable
 
-_CLEAR_HOOKS: dict[str, Callable[[], None]] = {}
-_STATE_REFS: dict[str, dict] = {}
-
-
-def register_clear_hook(
-    name: str, fn: Callable[[], None], state: dict | None = None
-) -> None:
-    """Register a resident cache's clear hook under a stable name.
-    Called at module import; re-registering the same name overwrites
-    (idempotent under re-import).
-
-    ``state`` (optional) is the cache's backing container itself —
-    registering it lets :func:`resident_state_report` AUDIT the
-    footprint (entry count; disk bytes for states whose values carry a
-    ``workdir`` path) instead of trusting the clear convention."""
-    _CLEAR_HOOKS[name] = fn
-    if state is not None:
-        _STATE_REFS[name] = state
+_MEMOS: dict[str, "Memo"] = {}
+_MISSING = object()
 
 
-def registered_hooks() -> dict[str, Callable[[], None]]:
-    """Snapshot of the registered hooks (name -> callable)."""
-    return dict(_CLEAR_HOOKS)
+def _workdir(value) -> str | None:
+    """The backing directory of a memo value: a state dict's
+    ``workdir`` or a plain path string; ``None`` for in-memory
+    values (models, DataFrames)."""
+    if isinstance(value, dict):
+        return value.get("workdir")
+    if isinstance(value, str) and os.path.sep in value:
+        return value
+    return None
+
+
+def _drop_workdir(value) -> None:
+    """The default :class:`Memo` drop: delete the value's backing
+    directory, if it has one."""
+    wd = _workdir(value)
+    if wd:
+        shutil.rmtree(wd, ignore_errors=True)
+
+
+def _drop_each(drop: Callable[[Any], None], values) -> None:
+    """Run ``drop`` on every value, then re-raise the first failure."""
+    errors: list[BaseException] = []
+    for v in values:
+        try:
+            drop(v)
+        except BaseException as exc:  # noqa: BLE001 — drop the rest, then raise
+            errors.append(exc)
+    if errors:
+        raise errors[0]
+
+
+def _supersedes(new, old) -> bool:
+    """Whether storing key ``new`` makes the entry under ``old``
+    unreachable: a different non-``None`` application id (classic
+    PySpark runs one live SparkContext per process, so the other id
+    belongs to a stopped one), or the same abspath under a different
+    on-disk fingerprint (the dataset was rewritten)."""
+    if not (isinstance(new, tuple) and isinstance(old, tuple)):
+        return False
+    if new[0] is not None and old[0] is not None and new[0] != old[0]:
+        return True
+    return (
+        len(new) >= 3 and len(old) >= 3
+        and old[1] == new[1] and old[2] != new[2]
+    )
+
+
+class Memo(dict):
+    """A resident memo: a ``dict`` registered under ``name`` with the
+    resident registry.
+
+    Keys follow :func:`ffiec_pq_spark.session.dataset_key`:
+    ``(app_id or None, abspath, fingerprint, *extra)``.  ``app_id`` is
+    ``None`` for driver-side values that outlive sessions (trained
+    weights); the fingerprint is the dataset's on-disk identity, so an
+    in-place rewrite changes the key and the next call rebuilds.
+    Other tuple keys must still start with the app id (or ``None``).
+
+    Every store (``memo[key] = value``, which :meth:`get_or_build`
+    uses on a miss) first evicts the entries the new key makes
+    unreachable: those under a different non-``None`` app id (a
+    stopped SparkContext) and those for the same abspath under a
+    different fingerprint (a rewritten dataset).  Evicted entries and
+    :meth:`clear` both run ``drop`` on the value; the default removes
+    the value's backing directory (``value["workdir"]`` or a path
+    string), which is also what :func:`resident_state_report` counts
+    as disk bytes.  Storing under an existing key replaces the value
+    without dropping it.  A hit is one dict lookup; eviction runs only
+    on stores."""
+
+    def __init__(self, name: str, drop: Callable[[Any], None] = _drop_workdir):
+        super().__init__()
+        self.name = name
+        self.drop = drop
+        _MEMOS[name] = self
+
+    def __setitem__(self, key, value) -> None:
+        stale = [k for k in self if k != key and _supersedes(key, k)]
+        dropped = [self.pop(k) for k in stale]
+        super().__setitem__(key, value)
+        _drop_each(self.drop, dropped)
+
+    def get_or_build(self, key, build: Callable[[], Any]):
+        """The value under ``key``, building and storing it on a miss."""
+        value = self.get(key, _MISSING)
+        if value is _MISSING:
+            value = build()
+            self[key] = value
+        return value
+
+    def clear(self) -> None:
+        """Drop every entry; if a drop raises, the rest still run and
+        the first error re-raises once the memo is empty."""
+        values = list(self.values())
+        super().clear()
+        _drop_each(self.drop, values)
+
+
+def registered_memos() -> types.MappingProxyType:
+    """Read-only live view of the registry (name -> :class:`Memo`)."""
+    return types.MappingProxyType(_MEMOS)
 
 
 def _dir_bytes(path: str) -> int:
@@ -60,35 +138,28 @@ def _dir_bytes(path: str) -> int:
 
 
 def resident_state_report(spark=None) -> dict:
-    """AUDIT the resident-state footprint: per registered cache, the
-    entry count and the on-disk bytes of any backing directories
-    (state values carrying a ``workdir`` key, or plain path strings —
-    the versioned-parquet stream states); plus, when a session is
-    passed, the Spark storage totals (memory + disk bytes of every
-    cached/checkpointed RDD via the storage-status API — the memoized
-    ``localCheckpoint`` relations live there).
+    """AUDIT the resident-state footprint: per registered memo, the
+    entry count and the on-disk bytes of its values' backing
+    directories; plus, when a session is passed, the Spark storage
+    totals (memory + disk bytes of every cached/checkpointed RDD via
+    the storage-status API — the memoized ``localCheckpoint``
+    relations live there).
 
-    This is the eviction-policy input a long-lived multi-tenant driver
-    needs: the clear-all registry governs INVALIDATION, this measures
-    RESIDENCY COST.  Disk bytes are exact and freed synchronously by
-    the clear hooks (the hardening test pins that); Spark storage for
-    checkpointed relations is released by the context cleaner once the
-    cleared Python references are collected — asynchronous by Spark's
-    design, so the report exposes it for monitoring rather than
-    asserting it zero after a clear."""
+    Disk bytes are exact and freed synchronously by :meth:`Memo.clear`
+    (the hardening test pins that); Spark storage for checkpointed
+    relations is released by the context cleaner once the cleared
+    Python references are collected — asynchronous by Spark's design,
+    so the report exposes it for monitoring rather than asserting it
+    zero after a clear."""
     report: dict = {}
-    for name in sorted(_STATE_REFS):
-        st = _STATE_REFS[name]
+    for name in sorted(_MEMOS):
+        memo = _MEMOS[name]
         disk = 0
-        for v in st.values():
-            wd = None
-            if isinstance(v, dict):
-                wd = v.get("workdir")
-            elif isinstance(v, str) and os.path.sep in v:
-                wd = v
+        for v in memo.values():
+            wd = _workdir(v)
             if wd and os.path.isdir(wd):
                 disk += _dir_bytes(wd)
-        report[name] = {"entries": len(st), "disk_bytes": disk}
+        report[name] = {"entries": len(memo), "disk_bytes": disk}
     if spark is not None:
         mem = dsk = n = 0
         for info in spark.sparkContext._jsc.sc().getRDDStorageInfo():
@@ -104,19 +175,18 @@ def resident_state_report(spark=None) -> dict:
 
 
 def clear_all_resident_state() -> list[str]:
-    """Invalidate EVERY resident cache (models, stream state, shared
-    relations) and return the names cleared, sorted.  The one call a
-    caller makes after rewriting any dataset in place; individual
-    ``clear_*()`` hooks remain for targeted invalidation.
+    """Clear EVERY registered memo (models, stream state, shared
+    relations) and return the names cleared, sorted.  ``memo.clear()``
+    remains for targeted invalidation.
 
-    Hooks that raise do not stop the sweep — every remaining cache is
-    still cleared, then the first error re-raises (a half-cleared
-    session is worse than a reported failure)."""
+    A memo whose clear raises does not stop the sweep — every
+    remaining memo is still cleared, then the first error re-raises
+    (a half-cleared session is worse than a reported failure)."""
     errors: list[BaseException] = []
     cleared: list[str] = []
-    for name in sorted(_CLEAR_HOOKS):
+    for name in sorted(_MEMOS):
         try:
-            _CLEAR_HOOKS[name]()
+            _MEMOS[name].clear()
             cleared.append(name)
         except BaseException as exc:  # noqa: BLE001 — resweep then raise
             errors.append(exc)
@@ -125,35 +195,33 @@ def clear_all_resident_state() -> list[str]:
     return cleared
 
 
-_TRACKED_PERSISTS: dict = {}
+def _unpersist(df) -> None:
+    try:
+        df.unpersist()
+    except Exception:  # session may already be stopped
+        pass
+
+
+_TRACKED_PERSISTS = Memo("query_persists", drop=_unpersist)
 
 
 def tracked_persist(df):
     """``df.persist()`` + registration under the resident registry:
     per-query lazy builders persist shared sub-relations (a fused arm
     feeding several consumers in one plan) without a natural
-    self-unpersist point — historically these relied on the documented
-    "clearCache() between pipelines" caveat and sat OUTSIDE the
-    governance registry.  Tracking the reference here puts them under
+    self-unpersist point.  Tracking the reference puts them under
     :func:`clear_all_resident_state` and the footprint report's entry
     count (their bytes appear in the report's ``_spark_storage``
-    totals), so a long-lived multi-tenant driver has ONE invalidation
-    call for everything resident."""
+    totals).
+
+    The reference is keyed on (application id, analyzed-plan
+    ``semanticHash``) — the ``session.spread`` probe key — so a warm
+    serve that re-persists an identical plan (Spark keeps the one
+    cache entry) replaces its reference instead of adding one."""
     out = df.persist()
-    _TRACKED_PERSISTS[id(out._jdf)] = out
+    key = (
+        out.sparkSession.sparkContext.applicationId,
+        out._jdf.queryExecution().analyzed().semanticHash(),
+    )
+    _TRACKED_PERSISTS[key] = out
     return out
-
-
-def clear_tracked_persists() -> None:
-    """Unpersist every tracked per-query persist."""
-    for df in _TRACKED_PERSISTS.values():
-        try:
-            df.unpersist()
-        except Exception:  # session may already be stopped
-            pass
-    _TRACKED_PERSISTS.clear()
-
-
-register_clear_hook(
-    "query_persists", clear_tracked_persists, state=_TRACKED_PERSISTS
-)

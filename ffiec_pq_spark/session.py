@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ffiec_pq_spark.resident import Memo
+
 
 def get_spark(app_name: str = "ffiec_pq_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
@@ -63,9 +65,8 @@ def get_spark(app_name: str = "ffiec_pq_spark", cpus: int | None = None) -> Spar
 # ensure_session_confs runs inside every load_table call (round-16
 # profile: a visible slice of each query's driver time).  Pinning is
 # idempotent for the session's lifetime — nothing legitimately unpins
-# mid-session — and clear_all_resident_state drops the memo with the
-# rest of the resident registry.
-_CONFED_APPS: dict = {}
+# mid-session.
+_CONFED_APPS = Memo("session_conf_pins")
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
@@ -77,15 +78,15 @@ def ensure_session_confs(spark: SparkSession) -> None:
     non-UTC session timezone would shift timestamp values away from the
     UTC-naive DuckDB oracle.  Pinned once per applicationId."""
     try:
-        app = spark.sparkContext.applicationId
-        if app in _CONFED_APPS:
+        key = (spark.sparkContext.applicationId,)
+        if key in _CONFED_APPS:
             return
     except Exception:
-        app = None
+        key = None
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if app is not None:
-        _CONFED_APPS[app] = True
+    if key is not None:
+        _CONFED_APPS[key] = True
     # perf, not semantics (safe on a caller-owned session): drop the
     # 3-py4j-calls-per-op Python call-site capture unless the caller
     # already pinned it explicitly.  PySpark caches the flag at first
@@ -108,9 +109,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
 # time per call (round 15), paid by every shingle/scoring builder on
 # every invocation — while the answer is a pure function of (session,
 # plan) because the same plan over the same files splits identically.
-# Same invalidation contract as every resident memo: a dataset
-# rewritten in place requires clear_all_resident_state().
-_SPREAD_COUNTS: dict = {}
+_SPREAD_COUNTS = Memo("spread_partition_probe")
 
 
 def spread(df, min_partitions: int | None = None):
@@ -123,18 +122,13 @@ def spread(df, min_partitions: int | None = None):
     condition is false and no shuffle is added."""
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     try:
-        app = df.sparkSession.sparkContext.applicationId
-        key = (app, df._jdf.queryExecution().analyzed().semanticHash())
-        n = _SPREAD_COUNTS.get(key)
-        if n is None:
-            # evict entries of other (stopped) sessions on insert: a
-            # long-lived multi-session process otherwise accumulates
-            # dead (appId, hash) tuples forever (r15 ADVICE item)
-            stale = [k for k in _SPREAD_COUNTS if k[0] != app]
-            for k in stale:
-                del _SPREAD_COUNTS[k]
-            n = df.rdd.getNumPartitions()
-            _SPREAD_COUNTS[key] = n
+        key = (
+            df.sparkSession.sparkContext.applicationId,
+            df._jdf.queryExecution().analyzed().semanticHash(),
+        )
+        n = _SPREAD_COUNTS.get_or_build(
+            key, lambda: df.rdd.getNumPartitions()
+        )
     except Exception:  # non-classic session (e.g. connect): probe direct
         n = df.rdd.getNumPartitions()
     if n < max(2, target // 2):
@@ -144,21 +138,24 @@ def spread(df, min_partitions: int | None = None):
 
 def dataset_fingerprint(sf_dir: str) -> tuple:
     """Cheap on-disk identity of a dataset directory: the sorted
-    (name, mtime_ns, size) of its ``*.parquet`` entries — a handful of
-    stat calls, no Spark.  Folding this into every resident memo key
-    makes staleness after an in-place dataset rewrite impossible by
-    construction (the rewrite changes mtimes, so it changes the key)
-    instead of relying on callers remembering
+    (name, mtime_ns, size) of its ``*.parquet`` entries plus the
+    (name, mtime_ns) of its ``k=v`` partition subdirectories — a
+    handful of stat calls, no Spark.  A new partition adds an entry
+    and rewriting one changes its directory's mtime, so folding this
+    into every resident memo key makes staleness after an in-place
+    dataset rewrite impossible by construction (the rewrite changes
+    the key) instead of relying on callers remembering
     ``clear_all_resident_state()`` (the round-15 BM25-memo lesson)."""
     try:
         with os.scandir(sf_dir) as it:
-            return tuple(
-                sorted(
-                    (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                    for e in it
-                    if e.name.endswith(".parquet")
-                )
-            )
+            entries = []
+            for e in it:
+                if e.name.endswith(".parquet"):
+                    st = e.stat()
+                    entries.append((e.name, st.st_mtime_ns, st.st_size))
+                elif "=" in e.name and e.is_dir():
+                    entries.append((e.name, e.stat().st_mtime_ns))
+            return tuple(sorted(entries))
     except OSError:
         return ("<unlistable>",)
 
@@ -179,26 +176,9 @@ def dataset_key(spark, sf_dir: str) -> tuple:
 # fingerprint): spark.read.parquet pays schema inference + file
 # listing on EVERY call (~70 ms profiled round 16), and every query
 # builder starts with 1-3 load_table calls.  A DataFrame is an
-# immutable plan, so reusing the object is safe; the fingerprint in
-# the key picks up in-place rewrites automatically.
-_TABLE_FRAMES: dict = {}
-
-
-def _register_session_hooks() -> None:
-    from ffiec_pq_spark.resident import register_clear_hook
-
-    register_clear_hook(
-        "spread_partition_probe", _SPREAD_COUNTS.clear, state=_SPREAD_COUNTS
-    )
-    register_clear_hook(
-        "session_conf_pins", _CONFED_APPS.clear, state=_CONFED_APPS
-    )
-    register_clear_hook(
-        "table_frames", _TABLE_FRAMES.clear, state=_TABLE_FRAMES
-    )
-
-
-_register_session_hooks()
+# immutable plan, so reusing the object is safe; the file's (mtime_ns,
+# size) in the key picks up in-place rewrites automatically.
+_TABLE_FRAMES = Memo("table_frames")
 
 
 def local_frame(spark: SparkSession, rows, schema):
@@ -271,23 +251,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     """
     ensure_session_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
+
+    def read():
+        df = spark.read.parquet(path)
+        return normalize_event_ts(df) if name == "events" else df
+
     try:
         st = os.stat(path)
-        fp = (st.st_mtime_ns, st.st_size)
-        app = spark.sparkContext.applicationId
+        key = (
+            spark.sparkContext.applicationId,
+            os.path.abspath(path),
+            (st.st_mtime_ns, st.st_size),
+        )
     except Exception:
         # missing file (read below raises the standard error) or a
         # mocked session: skip the memo, keep the classic behavior
-        df = spark.read.parquet(path)
-        return normalize_event_ts(df) if name == "events" else df
-    key = (app, os.path.abspath(path), fp)
-    df = _TABLE_FRAMES.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        if name == "events":
-            df = normalize_event_ts(df)
-        _TABLE_FRAMES[key] = df
-    return df
+        return read()
+    return _TABLE_FRAMES.get_or_build(key, read)
 
 
 def normalize_event_ts(df):

@@ -19,30 +19,18 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ffiec_pq_spark.resident import register_clear_hook
+from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.session import dataset_key
 
-# Live stream workdirs keyed by (sf_dir, compact_every): a durable
-# stream's checkpoint + state OUTLIVE any one attach — re-running the
-# same query in the same process RE-ATTACHES to the existing
-# checkpoint (Structured Streaming replays nothing already committed)
-# and pays only the drain, which is the steady-state cost of querying
-# a maintained state, not a from-zero re-shingle of all history.
-# Cleaned up at process exit; a different sf_dir gets its own entry.
-_LIVE_RUNS: dict[tuple[str, int | None], str] = {}
-
-
-def clear_live_runs() -> None:
-    """Drop every resident stream's checkpoint + state (call after
-    rewriting a dataset in place — the next attach starts from zero).
-    Same explicit-invalidation contract as ``clear_pca_models()`` /
-    ``clear_ivfpq_models()`` and Spark's own ``clearCache()``."""
-    for workdir in _LIVE_RUNS.values():
-        shutil.rmtree(workdir, ignore_errors=True)
-    _LIVE_RUNS.clear()
-
-
-register_clear_hook("neardup_live_runs", clear_live_runs, state=_LIVE_RUNS)
+# Live stream workdirs keyed by (dataset_key(None, sf_dir),
+# compact_every): a durable stream's checkpoint + state OUTLIVE any
+# one attach — re-running the same query in the same process
+# RE-ATTACHES to the existing checkpoint (Structured Streaming replays
+# nothing already committed) and pays only the drain, which is the
+# steady-state cost of querying a maintained state, not a from-zero
+# re-shingle of all history.  Cleaned up at process exit; a different
+# sf_dir gets its own entry.
+_LIVE_RUNS = Memo("neardup_live_runs")
 
 
 def _recover_state_swap(state_dir: str) -> None:

@@ -31,45 +31,29 @@ import os
 import re
 import shutil
 
-# Loaded state-directory DataFrames per (applicationId, abspath,
-# on-disk fingerprint): every serve re-read its state dirs with
-# spark.read.parquet, paying schema inference + file listing per call
-# (profiled round 16: 5 x ~70 ms per warm BM25 serve = ~0.35 s of its
-# 1.07 s).  Versioned dirs are immutable so the fingerprint never
-# changes for them; append-mode dirs (the BM25 postings) grow new part
-# files, which changes the fingerprint and naturally invalidates the
-# entry.  DataFrames are immutable plans — reuse is safe.
-_STATE_FRAMES: dict = {}
+from ffiec_pq_spark.resident import Memo
+from ffiec_pq_spark.session import dataset_key
+
+# Loaded state-directory DataFrames per dataset_key(spark, path):
+# every serve re-read its state dirs with spark.read.parquet, paying
+# schema inference + file listing per call (profiled round 16: 5 x
+# ~70 ms per warm BM25 serve = ~0.35 s of its 1.07 s).  A new or
+# rewritten part file or ``k=v`` partition dir changes the key's
+# fingerprint.  DataFrames are immutable plans — reuse is safe.
+_STATE_FRAMES = Memo("stream_state_frames")
 
 
 def read_state(spark, path: str):
     """Memoized ``spark.read.parquet(path)`` for fold state
-    directories, keyed on the directory's on-disk fingerprint (see
-    ``session.dataset_fingerprint``) so both immutable versioned dirs
-    and append-mode dirs serve fresh relations."""
-    from ffiec_pq_spark.session import dataset_fingerprint
-
+    directories, keyed on ``session.dataset_key`` so a state dir that
+    gains files or partitions is read fresh."""
     try:
-        app = spark.sparkContext.applicationId
+        key = dataset_key(spark, path)
     except Exception:
         return spark.read.parquet(path)
-    key = (app, os.path.abspath(path), dataset_fingerprint(path))
-    df = _STATE_FRAMES.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _STATE_FRAMES[key] = df
-    return df
-
-
-def _register_state_hook() -> None:
-    from ffiec_pq_spark.resident import register_clear_hook
-
-    register_clear_hook(
-        "stream_state_frames", _STATE_FRAMES.clear, state=_STATE_FRAMES
+    return _STATE_FRAMES.get_or_build(
+        key, lambda: spark.read.parquet(path)
     )
-
-
-_register_state_hook()
 
 
 def retire_versions(

@@ -580,45 +580,35 @@ def test_exactsubstr_cleaned_strips_exact_span(spark):
 
 
 def test_resident_state_clear_hooks(spark, sf_dir):
-    """Every resident-builder cache exposes a working invalidation
-    hook (the clearCache() convention): after clearing, the next call
-    rebuilds from zero and still returns the same answer — so an
-    in-place dataset rewrite has a documented, working recovery path
-    instead of a silently-stale model."""
+    """Every resident-builder memo has a working ``clear()`` (the
+    clearCache() convention): after clearing, the next call rebuilds
+    from zero and still returns the same answer — so explicit
+    invalidation is a documented, working recovery path instead of a
+    silently-stale model."""
     from ffiec_pq_spark.queries import round12
-    from ffiec_pq_spark.queries.dedup import (
-        _CC_LABELS,
-        clear_component_labels,
-        component_labels,
-    )
-    from ffiec_pq_spark.queries.round9c import (
-        _IVFPQ_MODELS,
-        clear_ivfpq_models,
-    )
-    from ffiec_pq_spark.queries.similarity import (
-        _PCA_MODELS,
-        clear_pca_models,
-    )
+    from ffiec_pq_spark.queries.dedup import _CC_LABELS, component_labels
+    from ffiec_pq_spark.queries.round9c import _IVFPQ_MODELS
+    from ffiec_pq_spark.queries.similarity import _PCA_MODELS
 
     before = component_labels(spark, sf_dir).count()
     assert _CC_LABELS
-    clear_component_labels()
+    _CC_LABELS.clear()
     assert not _CC_LABELS
     assert component_labels(spark, sf_dir).count() == before
 
     st = round12._inc_corpus_state(spark, sf_dir)
     n_cq = st["cq"].count()
     assert round12._INC_STATE
-    round12.clear_incremental_state()
+    round12._INC_STATE.clear()
     assert not round12._INC_STATE
     assert round12._inc_corpus_state(spark, sf_dir)["cq"].count() == n_cq
 
     # model memos: clearing empties the dict (rebuild exercised by the
     # registry queries themselves; these are driver-side lists, so an
     # empty dict IS a from-zero retrain on next use)
-    clear_ivfpq_models()
+    _IVFPQ_MODELS.clear()
     assert not _IVFPQ_MODELS
-    clear_pca_models()
+    _PCA_MODELS.clear()
     assert not _PCA_MODELS
 
     # round-12 second wave: the maintained BM25 indexes (state dirs on
@@ -632,26 +622,26 @@ def test_resident_state_clear_hooks(spark, sf_dir):
     (bm25_st,) = round12b._BM25_STREAM_STATE.values()
     wd = bm25_st["workdir"]
     assert os.path.isdir(wd)
-    round12b.clear_bm25_stream_state()
+    round12b._BM25_STREAM_STATE.clear()
     assert not round12b._BM25_STREAM_STATE and not os.path.isdir(wd)
     assert round12b.stream_bm25_index_fold(spark, sf_dir).count() == n_idx
 
     n_del = round12b.stream_bm25_delete_fold(spark, sf_dir).count()
     assert round12b._BM25_DEL_STATE
-    round12b.clear_bm25_delete_state()
+    round12b._BM25_DEL_STATE.clear()
     assert not round12b._BM25_DEL_STATE
     assert round12b.stream_bm25_delete_fold(spark, sf_dir).count() == n_del
 
     n_nd = round11.stream_minhash_neardup_bounded(spark, sf_dir).count()
     assert round11._BOUNDED_NEARDUP_RUNS
-    round11.clear_bounded_neardup_state()
+    round11._BOUNDED_NEARDUP_RUNS.clear()
     assert not round11._BOUNDED_NEARDUP_RUNS
     assert (
         round11.stream_minhash_neardup_bounded(spark, sf_dir).count()
         == n_nd
     )
 
-    round12b.clear_probe_models()
+    round12b._PROBE_MODELS.clear()
     assert not round12b._PROBE_MODELS
 
 

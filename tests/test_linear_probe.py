@@ -98,7 +98,7 @@ def test_overflow_assert_fires():
 def test_probe_model_memo_and_invalidation(spark, sf_dir):
     from ffiec_pq_spark.queries import round12b
 
-    round12b.clear_probe_models()
+    round12b._PROBE_MODELS.clear()
     queries()["embedding_probe_train_scores"](spark, sf_dir)
     assert len(round12b._PROBE_MODELS) == 1
     (w1,) = round12b._PROBE_MODELS.values()
@@ -106,7 +106,7 @@ def test_probe_model_memo_and_invalidation(spark, sf_dir):
     queries()["embedding_probe_train_scores"](spark, sf_dir)
     (w2,) = round12b._PROBE_MODELS.values()
     assert w2 is w1
-    round12b.clear_probe_models()
+    round12b._PROBE_MODELS.clear()
     assert not round12b._PROBE_MODELS
 
 
@@ -130,7 +130,7 @@ def test_probe_heldout_eval_contract(spark, sf_dir):
     above the heldout base rate on the fixture corpus."""
     from ffiec_pq_spark.queries import round12b
 
-    round12b.clear_probe_models()
+    round12b._PROBE_MODELS.clear()
     out = {
         (r["split"], r["y"], r["kept"]): r["n"]
         for r in queries()["embedding_probe_heldout_eval"](
@@ -148,7 +148,7 @@ def test_probe_heldout_eval_contract(spark, sf_dir):
         pos_kept = out.get((split, 1, True), 0)
         base = sum(v for (s, yy, _), v in out.items() if s == split and yy)
         assert pos_kept / kept > base / n
-    round12b.clear_probe_models()
+    round12b._PROBE_MODELS.clear()
 
 
 def test_probe_kept_gate_lift(spark, sf_dir):
@@ -204,8 +204,8 @@ def test_unlearn_subtraction_equals_fresh_stats(spark, sf_dir):
     assert [
         [a[i][j] - a_d[i][j] for j in range(_DIM)] for i in range(_DIM)
     ] == a_s
-    # and the registry query's memo exposes a working clear hook
-    round12b.clear_probe_stats()
+    # and the registry query's memo clears
+    round12b._PROBE_STATS.clear()
     assert not round12b._PROBE_STATS
 
 

@@ -189,7 +189,7 @@ def test_stream_bm25_delete_fold_equals_surviving_batch(spark, sf_dir):
     # index memo is concerned: per the resident-state contract it must
     # be invalidated before AND after, or the memo built from the
     # patched view would poison the unpatched key (and vice versa)
-    r12.clear_bm25_index()
+    r12._BM25_INDEX.clear()
     try:
         # the surviving-corpus view stands in for the documents table
         r12.load_table = lambda s, sd, t: (
@@ -201,7 +201,7 @@ def test_stream_bm25_delete_fold_equals_surviving_batch(spark, sf_dir):
         }
     finally:
         r12.load_table = orig
-        r12.clear_bm25_index()
+        r12._BM25_INDEX.clear()
     assert folded == batch and len(folded) > 0
     full = {
         (r["q_id"], r["rank"]): (r["doc_id"], r["score_micro"])

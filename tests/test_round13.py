@@ -92,13 +92,13 @@ def test_clear_all_resident_state_recertifies(spark, sf_dir):
     import ffiec_pq_spark.queries.similarity as qsim
     from ffiec_pq_spark.resident import (
         clear_all_resident_state,
-        registered_hooks,
+        registered_memos,
     )
 
     queries = catalog.queries()
-    hooks = registered_hooks()
-    # every per-(session, dataset) cache in the engine has a hook
-    assert set(hooks) >= {
+    memos = registered_memos()
+    # every per-(session, dataset) cache in the engine is a registered memo
+    assert set(memos) >= {
         "bm25_delete_state", "bm25_stream_state",
         "bounded_neardup_state", "component_labels",
         "incremental_dedup_state", "ivfpq_models", "neardup_live_runs",
@@ -126,7 +126,7 @@ def test_clear_all_resident_state_recertifies(spark, sf_dir):
     ]
     assert all(len(c) > 0 for c in caches)
     cleared = clear_all_resident_state()
-    assert set(cleared) == set(hooks)
+    assert set(cleared) == set(memos)
     assert all(len(c) == 0 for c in caches)
     # the BM25 stream state's backing directory is gone too (a stale
     # workdir would be silently re-served by a surviving memo)
@@ -139,26 +139,27 @@ def test_clear_all_sweeps_despite_failing_hook():
     from ffiec_pq_spark import resident
 
     calls = []
-    saved = resident.registered_hooks()
+
+    def boom(value):
+        raise RuntimeError("hook failure")
+
+    saved = dict(resident.registered_memos())
     try:
-        resident._CLEAR_HOOKS.clear()
-        resident.register_clear_hook(
-            "a_ok", lambda: calls.append("a")
-        )
-
-        def boom():
-            raise RuntimeError("hook failure")
-
-        resident.register_clear_hook("b_boom", boom)
-        resident.register_clear_hook(
-            "c_ok", lambda: calls.append("c")
-        )
+        resident._MEMOS.clear()
+        memos = [
+            resident.Memo("a_ok", drop=calls.append),
+            resident.Memo("b_boom", drop=boom),
+            resident.Memo("c_ok", drop=calls.append),
+        ]
+        for m in memos:
+            m[(None, m.name)] = m.name[0]
         with pytest.raises(RuntimeError, match="hook failure"):
             resident.clear_all_resident_state()
         assert calls == ["a", "c"]  # sweep continued past the failure
+        assert not any(memos)  # every memo emptied, the failing one too
     finally:
-        resident._CLEAR_HOOKS.clear()
-        resident._CLEAR_HOOKS.update(saved)
+        resident._MEMOS.clear()
+        resident._MEMOS.update(saved)
 
 
 def test_retire_versions_window(tmp_path):

@@ -145,7 +145,6 @@ def test_tracked_persist_cleared_by_registry(spark, sf_dir):
     NONE)."""
     from ffiec_pq_spark.resident import (
         _TRACKED_PERSISTS,
-        clear_tracked_persists,
         resident_state_report,
         tracked_persist,
     )
@@ -154,6 +153,6 @@ def test_tracked_persist_cleared_by_registry(spark, sf_dir):
     df.count()
     assert df.storageLevel.useMemory
     assert resident_state_report()["query_persists"]["entries"] >= 1
-    clear_tracked_persists()
+    _TRACKED_PERSISTS.clear()
     assert not df.storageLevel.useMemory
     assert len(_TRACKED_PERSISTS) == 0
