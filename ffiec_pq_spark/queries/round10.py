@@ -31,6 +31,7 @@ from ffiec_pq_spark.functions.lits import double_array
 from ffiec_pq_spark.operators.pq import pq_codes, pq_fit
 from ffiec_pq_spark.queries.round9c import _ITERS, _M, _SUB_DIM, _pq_ctes
 from ffiec_pq_spark.session import load_table
+from ffiec_pq_spark.streaming.state import drain
 
 # Production-shaped codebook size: k=64 codes per subspace (6 bits of
 # the one-byte production code space) — past the _EXPR_MAX_FLOATS
@@ -408,17 +409,7 @@ def stream_pq_encode(spark, sf_dir):
                 "append"
             ).parquet(state_dir)
 
-        q = (
-            spark.readStream.format("parquet")
-            .schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(encode_batch)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(spark, src, emb.schema, encode_batch, workdir)
         return spark.read.parquet(state_dir).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)

@@ -13,6 +13,7 @@ from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.queries.round8 import _stream_neardup_oracle
 from ffiec_pq_spark.session import dataset_key, load_table
+from ffiec_pq_spark.streaming.state import drain
 
 
 @register(
@@ -590,17 +591,7 @@ def stream_ivf_delete_log(spark, sf_dir):
         def fold(batch_df, epoch_id):
             batch_df.write.mode("append").parquet(state_dir)
 
-        q = (
-            spark.readStream.format("parquet")
-            .schema(deletes.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(spark, src, deletes.schema, fold, workdir)
         tombstones = (
             spark.read.parquet(state_dir)
             if os.path.isdir(state_dir)

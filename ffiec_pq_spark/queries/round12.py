@@ -30,12 +30,15 @@ integer after an explicit ``floor(x*1e6 + 0.5)`` scale.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
-from ffiec_pq_spark.streaming.state import read_state
+from ffiec_pq_spark.streaming.state import (
+    drain,
+    read_state,
+    stage_chunks,
+    versioned_fold,
+)
 from ffiec_pq_spark.resident import Memo, tracked_persist
 from ffiec_pq_spark.session import dataset_key, load_table
 
@@ -153,7 +156,6 @@ def stream_scd2_snapshot_fold(spark, sf_dir):
 
     from ffiec_pq_spark.operators.windows import scd2_from_snapshots
     from ffiec_pq_spark.session import ensure_session_confs
-    from ffiec_pq_spark.streaming.state import retire_versions
 
     ensure_session_confs(spark)
     snap = _weekly_snapshots(spark, sf_dir)
@@ -171,53 +173,27 @@ def stream_scd2_snapshot_fold(spark, sf_dir):
 
     workdir = tempfile.mkdtemp(prefix="stream_scd2_")
     try:
-        src = os.path.join(workdir, "src")
-        os.makedirs(src)
-        t0 = 1_700_000_000
-        # one staging job for all chunks (the neardup stager pattern):
-        # repartition on the chunk id -> one file per chunk dir
-        chunk_expr = F.lit(len(chunks) - 1).cast("int")
+        # chunk ids ascend with the weeks, so arrival order is week
+        # order
+        chunk_expr = F.lit(len(chunks) - 1)
         for i in range(len(chunks) - 2, -1, -1):
             chunk_expr = F.when(
-                F.col("week").isin(chunks[i]), F.lit(i).cast("int")
+                F.col("week").isin(chunks[i]), F.lit(i)
             ).otherwise(chunk_expr)
-        staged = os.path.join(workdir, "staged")
-        (
-            snap.withColumn("_chunk", chunk_expr)
-            .repartition(len(chunks), "_chunk")
-            .write.partitionBy("_chunk")
-            .mode("overwrite")
-            .parquet(staged)
-        )
-        for i in range(len(chunks)):
-            chunk_dir = os.path.join(staged, f"_chunk={i}")
-            if not os.path.isdir(chunk_dir):
-                continue
-            part = next(
-                f for f in os.listdir(chunk_dir) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"{i:04d}.parquet")
-            os.rename(os.path.join(chunk_dir, part), dst)
-            # strictly increasing mtimes pin arrival order to week order
-            os.utime(dst, (t0 + i * 10, t0 + i * 10))
+        src = stage_chunks(snap, chunk_expr, len(chunks), workdir)
+        state = {"state": None, "version": 0, "epoch": -1}
 
-        state = {"path": None, "version": 0, "epoch": -1}
-
-        def fold(batch_df, epoch_id):
-            # at-least-once replay guard (recorded AFTER the state
-            # write, so a redelivery following a mid-fold failure
-            # re-runs instead of silently skipping): re-merging a
-            # delivered week would re-stitch its runs onto intervals
-            # that already absorbed them
-            if epoch_id <= state["epoch"]:
-                return
+        # the replay guard matters here beyond double counting:
+        # re-merging a delivered week would re-stitch its runs onto
+        # intervals that already absorbed them
+        def step(batch_df, epoch_id):
             b = scd2_from_snapshots(
                 batch_df, "user_id", ["event_type"], "week"
             )
-            if state["path"] is None:
+            if state["state"] is None:
                 merged = b
             else:
-                prev = read_state(spark, state["path"])
+                prev = read_state(spark, state["state"])
                 closed = prev.filter(F.col("is_current") == 0)
                 open_ = prev.filter(F.col("is_current") == 1).select(
                     "user_id",
@@ -267,28 +243,13 @@ def stream_scd2_snapshot_fold(spark, sf_dir):
                 merged = closed.unionByName(closed_by_batch).unionByName(
                     stitched
                 ).unionByName(rest)
-            state["version"] += 1
-            out = os.path.join(workdir, f"state_v{state['version']}")
-            merged.write.parquet(out)
-            state["path"] = out
-            # retire superseded versions (keep current + predecessor):
-            # without this a 1000-week deploy accumulates one state
-            # dir per trigger
-            retire_versions(workdir, "state", state["version"])
-            state["epoch"] = epoch_id
+            return {"state": merged}
 
-        q = (
-            spark.readStream.format("parquet")
-            .schema(snap.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            spark, src, snap.schema, versioned_fold(state, workdir, step),
+            workdir,
         )
-        q.awaitTermination()
-        final = read_state(spark, state["path"]).select(
+        final = read_state(spark, state["state"]).select(
             "user_id", "event_type", "valid_from", "valid_to", "is_current"
         )
         return final.localCheckpoint(eager=True)

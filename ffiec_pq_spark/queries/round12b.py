@@ -20,7 +20,13 @@ import os
 from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
-from ffiec_pq_spark.streaming.state import read_state
+from ffiec_pq_spark.streaming.state import (
+    drain,
+    keyed_add,
+    read_state,
+    stage_chunks,
+    versioned_fold,
+)
 from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.session import dataset_key, load_table
 from ffiec_pq_spark.queries.round12 import _BM25_TOPK_SQL
@@ -572,23 +578,11 @@ def _bm25_serve(spark, d, st, ephemeral=False, tomb=None):
 def _bm25_insert_fold(spark, state, workdir, tf_dir, dl_dir):
     """The insert fold as a module-level factory so tests can drive
     it directly (epoch replay / crash-window tests): postings and
-    lengths APPEND, df and the (n_docs, Σdl) scalar MERGE by key into
-    versioned state via :func:`emit_versioned` (which also retires
-    superseded versions — the state dir count stays constant-bounded
-    at any trigger count)."""
+    lengths land per epoch, df and the (n_docs, Σdl) scalar MERGE by
+    key through :func:`~ffiec_pq_spark.streaming.state.versioned_fold`."""
     from ffiec_pq_spark.operators.text import tokens
-    from ffiec_pq_spark.streaming.state import emit_versioned
 
-    def fold(batch_df, epoch_id):
-        # foreachBatch is at-least-once: a replayed epoch must not
-        # double-APPEND postings (the non-idempotent half of the
-        # fold); the merged halves would double-count too.  The
-        # guard records the epoch only AFTER the epoch's writes
-        # complete — recording it first would turn a redelivery
-        # after a mid-fold failure into a silent wholesale skip
-        # (at-most-once), dropping that batch's updates
-        if epoch_id <= state["epoch"]:
-            return
+    def step(batch_df, epoch_id):
         # tf is written per-epoch (epoch=N subdir, OVERWRITE) from the
         # UNCACHED plan and read back for the derivations — three wins
         # over the former persist()+append (round-16 fold profile):
@@ -623,25 +617,14 @@ def _bm25_insert_fold(spark, state, workdir, tf_dir, dl_dir):
             .cast("long")
             .alias("sum_dl"),
         )
-        if state["df"] is not None:
-            df_b = (
-                read_state(spark, state["df"])
-                .unionByName(df_b)
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
-            )
-            prev_meta = read_state(spark, state["meta"])
-            meta_b = (
-                prev_meta.unionByName(meta_b)
-                .agg(
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("sum_dl").cast("long").alias("sum_dl"),
-                )
-            )
-        emit_versioned(state, workdir, {"df": df_b, "meta": meta_b})
-        state["epoch"] = epoch_id
+        return {
+            "df": keyed_add(spark, state["df"], df_b, ["term"], ["df"]),
+            "meta": keyed_add(
+                spark, state["meta"], meta_b, [], ["n_docs", "sum_dl"]
+            ),
+        }
 
-    return fold
+    return versioned_fold(state, workdir, step)
 
 
 def _bm25_stream_build(spark, corpus, chunk_order=None, n_chunks=4):
@@ -655,50 +638,18 @@ def _bm25_stream_build(spark, corpus, chunk_order=None, n_chunks=4):
 
     workdir = tempfile.mkdtemp(prefix="stream_bm25_")
     try:
-        src = os.path.join(workdir, "src")
-        os.makedirs(src)
-        t0 = 1_700_000_000
-        staged = os.path.join(workdir, "staged")
-        (
-            corpus.withColumn(
-                "_chunk", F.pmod(F.col("doc_id"), F.lit(n_chunks)).cast("int")
-            )
-            .repartition(n_chunks, "_chunk")
-            .write.partitionBy("_chunk")
-            .mode("overwrite")
-            .parquet(staged)
-        )
         # arrival order is a free parameter BECAUSE the fold is
         # key-commutative (appends + keyed sums); the order-invariance
         # test drains a permuted order and asserts the identical serve
-        order = list(chunk_order) if chunk_order else list(range(n_chunks))
-        for pos, i in enumerate(order):
-            chunk_dir = os.path.join(staged, f"_chunk={i}")
-            if not os.path.isdir(chunk_dir):
-                continue
-            part = next(
-                f for f in os.listdir(chunk_dir) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"{pos:04d}.parquet")
-            os.rename(os.path.join(chunk_dir, part), dst)
-            os.utime(dst, (t0 + pos * 10, t0 + pos * 10))
-
+        src = stage_chunks(
+            corpus, F.pmod("doc_id", F.lit(n_chunks)), n_chunks, workdir,
+            chunk_order,
+        )
         tf_dir = os.path.join(workdir, "tf")
         dl_dir = os.path.join(workdir, "dl")
         state = {"df": None, "meta": None, "version": 0, "epoch": -1}
         fold = _bm25_insert_fold(spark, state, workdir, tf_dir, dl_dir)
-
-        q = (
-            spark.readStream.format("parquet")
-            .schema(corpus.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(spark, src, corpus.schema, fold, workdir)
         return {
             "workdir": workdir,
             "tf": tf_dir,
@@ -901,16 +852,10 @@ def _bm25_delete_fold(spark, state, workdir, tf, dl):
     epoch replay / crash-window behavior): df decrements by the
     deleted docs' term presence, the (n_docs, Σdl) scalar decrements
     from the length state, tombstones append — all through versioned
-    state with retirement (:func:`emit_versioned`)."""
-    from ffiec_pq_spark.streaming.state import emit_versioned
+    state with retirement
+    (:func:`~ffiec_pq_spark.streaming.state.versioned_fold`)."""
 
-    def fold(batch_df, epoch_id):
-        # at-least-once replay guard: a re-delivered epoch would
-        # DOUBLE-DECREMENT df and the corpus scalars; recorded
-        # AFTER the writes so a redelivery following a mid-fold
-        # failure re-runs instead of silently skipping
-        if epoch_id <= state["epoch"]:
-            return
+    def step(batch_df, epoch_id):
         batch_ids = batch_df.select("doc_id")
         # the batch's postings: keyed lookup, fan-out = |batch| docs
         del_tf = tf.join(F.broadcast(batch_ids), "doc_id", "left_semi")
@@ -942,13 +887,9 @@ def _bm25_delete_fold(spark, state, workdir, tf, dl):
         tomb_new = (
             read_state(spark, state["tomb"]).unionByName(batch_ids)
         )
-        emit_versioned(
-            state, workdir,
-            {"df": df_new, "meta": meta_new, "tomb": tomb_new},
-        )
-        state["epoch"] = epoch_id
+        return {"df": df_new, "meta": meta_new, "tomb": tomb_new}
 
-    return fold
+    return versioned_fold(state, workdir, step)
 
 
 def _bm25_delete_build(spark, corpus, n_chunks=3):
@@ -1005,43 +946,11 @@ def _bm25_delete_build(spark, corpus, n_chunks=3):
         deleted = corpus.filter(
             F.col("doc_id") % _BM25_DEL_MOD == _BM25_DEL_SLOT
         ).select("doc_id")
-        staged = os.path.join(workdir, "staged")
-        (
-            deleted.withColumn(
-                "_chunk", F.pmod(F.col("doc_id"), F.lit(n_chunks)).cast("int")
-            )
-            .repartition(n_chunks, "_chunk")
-            .write.partitionBy("_chunk")
-            .mode("overwrite")
-            .parquet(staged)
+        src = stage_chunks(
+            deleted, F.pmod("doc_id", F.lit(n_chunks)), n_chunks, workdir
         )
-        src = os.path.join(workdir, "src")
-        os.makedirs(src)
-        t0 = 1_700_000_000
-        for i in range(n_chunks):
-            chunk_dir = os.path.join(staged, f"_chunk={i}")
-            if not os.path.isdir(chunk_dir):
-                continue
-            part = next(
-                f for f in os.listdir(chunk_dir) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"{i:04d}.parquet")
-            os.rename(os.path.join(chunk_dir, part), dst)
-            os.utime(dst, (t0 + i * 10, t0 + i * 10))
-
         fold = _bm25_delete_fold(spark, state, workdir, tf, dl)
-
-        q = (
-            spark.readStream.format("parquet")
-            .schema(deleted.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(spark, src, deleted.schema, fold, workdir)
         return {
             "workdir": workdir,
             "tf": tf_dir,
@@ -1227,7 +1136,6 @@ def stream_probe_stats_fold(spark, sf_dir):
     )
     from ffiec_pq_spark.operators.windows import distributed_rank
     from ffiec_pq_spark.session import ensure_session_confs
-    from ffiec_pq_spark.streaming.state import emit_versioned
 
     ensure_session_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings").filter(
@@ -1244,79 +1152,27 @@ def stream_probe_stats_fold(spark, sf_dir):
         y = (F.coalesce(F.col("label"), F.lit(0)) == 0).cast("long")
         workdir = tempfile.mkdtemp(prefix="stream_probe_")
         try:
-            n_chunks = 4
-            staged = os.path.join(workdir, "staged")
-            (
-                emb.withColumn(
-                    "_chunk",
-                    F.pmod(F.col("vec_id"), F.lit(n_chunks)).cast("int"),
-                )
-                .repartition(n_chunks, "_chunk")
-                .write.partitionBy("_chunk")
-                .mode("overwrite")
-                .parquet(staged)
+            src = stage_chunks(
+                emb, F.pmod("vec_id", F.lit(4)), 4, workdir
             )
-            src = os.path.join(workdir, "src")
-            os.makedirs(src)
-            t0 = 1_700_000_000
-            for i in range(n_chunks):
-                chunk_dir = os.path.join(staged, f"_chunk={i}")
-                if not os.path.isdir(chunk_dir):
-                    continue
-                part = next(
-                    f
-                    for f in os.listdir(chunk_dir)
-                    if f.endswith(".parquet")
-                )
-                dst = os.path.join(src, f"{i:04d}.parquet")
-                os.rename(os.path.join(chunk_dir, part), dst)
-                os.utime(dst, (t0 + i * 10, t0 + i * 10))
-
             state = {"stats": None, "version": 0, "epoch": -1}
             sum_cols = [f"a{j}" for j in range(_DIM)] + ["b", "n"]
 
-            def fold(batch_df, epoch_id):
-                # at-least-once replay guard: a re-delivered epoch
-                # would double-count its batch's statistics; recorded
-                # AFTER the write so a redelivery following a
-                # mid-fold failure re-runs instead of skipping
-                if epoch_id <= state["epoch"]:
-                    return
-                yb = (
-                    F.coalesce(F.col("label"), F.lit(0)) == 0
-                ).cast("long")
+            def step(batch_df, epoch_id):
                 stats_b = gram_moment_df(
-                    batch_df.withColumn("_yy", yb), "embedding", "_yy",
+                    batch_df.withColumn("_yy", y), "embedding", "_yy",
                     _DIM,
                 )
-                if state["stats"] is not None:
-                    stats_b = (
-                        read_state(spark, state["stats"])
-                        .unionByName(stats_b)
-                        .groupBy("i")
-                        .agg(
-                            *[
-                                F.sum(c).cast("long").alias(c)
-                                for c in sum_cols
-                            ]
-                        )
+                return {
+                    "stats": keyed_add(
+                        spark, state["stats"], stats_b, ["i"], sum_cols
                     )
-                emit_versioned(state, workdir, {"stats": stats_b})
-                state["epoch"] = epoch_id
+                }
 
-            q = (
-                spark.readStream.format("parquet")
-                .schema(emb.schema)
-                .option("maxFilesPerTrigger", 1)
-                .load(src)
-                .writeStream.foreachBatch(fold)
-                .option(
-                    "checkpointLocation", os.path.join(workdir, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
+            drain(
+                spark, src, emb.schema,
+                versioned_fold(state, workdir, step), workdir,
             )
-            q.awaitTermination()
             st = {"workdir": workdir, "stats": state["stats"]}
             _PROBE_STREAM_STATE[key] = st
         except BaseException:

@@ -13,12 +13,16 @@ precedent, round12b.py:357), with integer counts the only state."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
-from ffiec_pq_spark.streaming.state import read_state
+from ffiec_pq_spark.streaming.state import (
+    drain,
+    keyed_add,
+    read_state,
+    stage_chunks,
+    versioned_fold,
+)
 from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.session import dataset_key, load_table
 
@@ -338,37 +342,24 @@ _KN_STREAM_STATE = Memo("kn_stream_state")
 
 def _kn_insert_fold(spark, state, workdir):
     """Per-trigger fold: the batch's bigram-TYPE counts merge into the
-    maintained count table by key (the versioned-parquet MERGE-INTO
-    stand-in; :func:`emit_versioned` retires superseded versions so
-    the state dir count is constant-bounded at any trigger count).
+    maintained count table by key (versioned state,
+    :func:`~ffiec_pq_spark.streaming.state.versioned_fold`).
     Work per trigger ∝ batch bigrams + the keyed merge of batch types
     into the (vocab²-bounded) type table — never the accumulated
     corpus.  Module-level factory so tests can drive epochs directly
     (replay / crash-window)."""
-    from ffiec_pq_spark.streaming.state import emit_versioned
 
-    def fold(batch_df, epoch_id):
-        # at-least-once: a replayed epoch must not double-count; the
-        # guard records the epoch only AFTER the write commits (a
-        # redelivery after a mid-fold failure re-runs the epoch)
-        if epoch_id <= state["epoch"]:
-            return
+    def step(batch_df, epoch_id):
         c2_b = (
             _bigrams(batch_df)
             .groupBy("w1", "w2")
             .agg(F.count(F.lit(1)).cast("long").alias("n2"))
         )
-        if state["c2"] is not None:
-            c2_b = (
-                read_state(spark, state["c2"])
-                .unionByName(c2_b)
-                .groupBy("w1", "w2")
-                .agg(F.sum("n2").cast("long").alias("n2"))
-            )
-        emit_versioned(state, workdir, {"c2": c2_b})
-        state["epoch"] = epoch_id
+        return {
+            "c2": keyed_add(spark, state["c2"], c2_b, ["w1", "w2"], ["n2"])
+        }
 
-    return fold
+    return versioned_fold(state, workdir, step)
 
 
 def _kn_stream_build(spark, corpus, chunk_order=None, n_chunks=4):
@@ -380,44 +371,13 @@ def _kn_stream_build(spark, corpus, chunk_order=None, n_chunks=4):
 
     workdir = tempfile.mkdtemp(prefix="stream_kn_")
     try:
-        src = os.path.join(workdir, "src")
-        os.makedirs(src)
-        staged = os.path.join(workdir, "staged")
-        (
-            corpus.withColumn(
-                "_chunk",
-                F.pmod(F.col("doc_id"), F.lit(n_chunks)).cast("int"),
-            )
-            .repartition(n_chunks, "_chunk")
-            .write.partitionBy("_chunk")
-            .mode("overwrite")
-            .parquet(staged)
+        src = stage_chunks(
+            corpus, F.pmod("doc_id", F.lit(n_chunks)), n_chunks, workdir,
+            chunk_order,
         )
-        t0 = 1_700_000_000
-        order = list(chunk_order) if chunk_order else list(range(n_chunks))
-        for pos, i in enumerate(order):
-            chunk_dir = os.path.join(staged, f"_chunk={i}")
-            if not os.path.isdir(chunk_dir):
-                continue
-            part = next(
-                f for f in os.listdir(chunk_dir) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"{pos:04d}.parquet")
-            os.rename(os.path.join(chunk_dir, part), dst)
-            os.utime(dst, (t0 + pos * 10, t0 + pos * 10))
         state = {"c2": None, "version": 0, "epoch": -1}
         fold = _kn_insert_fold(spark, state, workdir)
-        q = (
-            spark.readStream.format("parquet")
-            .schema(corpus.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(spark, src, corpus.schema, fold, workdir)
         return {"workdir": workdir, "c2": state["c2"]}
     except BaseException:
         shutil.rmtree(workdir, ignore_errors=True)
@@ -462,10 +422,8 @@ def stream_kn_counts_fold(spark, sf_dir, chunk_order=None):
     fresh (and cleans up after itself).
 
     At 100 TB: per-trigger work ∝ batch; the count-table merge is the
-    MERGE-INTO stand-in (vocab²-bounded, versioned via
-    :func:`~ffiec_pq_spark.streaming.state.emit_versioned` with
-    constant-bounded version retention and the crash/replay contract
-    of the BM25 folds)."""
+    MERGE-INTO stand-in (vocab²-bounded; the ``streaming/state.py``
+    fold contract)."""
     from ffiec_pq_spark.session import ensure_session_confs
 
     ensure_session_confs(spark)

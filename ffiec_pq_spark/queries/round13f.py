@@ -22,12 +22,16 @@ double division both engines perform identically."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
-from ffiec_pq_spark.streaming.state import read_state
+from ffiec_pq_spark.streaming.state import (
+    drain,
+    keyed_add,
+    read_state,
+    stage_chunks,
+    versioned_fold,
+)
 from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.session import dataset_key, load_table
 
@@ -96,33 +100,21 @@ _SC_STREAM_STATE = Memo("scorecard_stream_state")
 def _sc_insert_fold(spark, state, workdir):
     """Per-trigger fold: the batch's per-source statistics merge into
     the maintained |sources|-row table by keyed integer addition
-    (versioned-parquet MERGE-INTO stand-in; superseded versions
-    retired).  Work per trigger ∝ batch + |sources| — never the
-    accumulated corpus.  Module-level factory so tests can drive
-    epochs directly (replay / crash-window)."""
-    from ffiec_pq_spark.streaming.state import emit_versioned
+    (versioned state,
+    :func:`~ffiec_pq_spark.streaming.state.versioned_fold`).  Work per
+    trigger ∝ batch + |sources| — never the accumulated corpus.
+    Module-level factory so tests can drive epochs directly (replay /
+    crash-window)."""
 
-    def fold(batch_df, epoch_id):
-        # at-least-once: a replayed epoch must not double-count; the
-        # guard records the epoch only AFTER the write commits
-        if epoch_id <= state["epoch"]:
-            return
-        st_b = _sc_stats(batch_df)
-        if state["stats"] is not None:
-            st_b = (
-                read_state(spark, state["stats"])
-                .unionByName(st_b)
-                .groupBy("source")
-                .agg(
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("n_tok").cast("long").alias("n_tok"),
-                    F.sum("q_micro").cast("long").alias("q_micro"),
-                )
+    def step(batch_df, epoch_id):
+        return {
+            "stats": keyed_add(
+                spark, state["stats"], _sc_stats(batch_df), ["source"],
+                ["n_docs", "n_tok", "q_micro"],
             )
-        emit_versioned(state, workdir, {"stats": st_b})
-        state["epoch"] = epoch_id
+        }
 
-    return fold
+    return versioned_fold(state, workdir, step)
 
 
 def _sc_stream_build(spark, corpus, chunk_order=None, n_chunks=4):
@@ -132,44 +124,13 @@ def _sc_stream_build(spark, corpus, chunk_order=None, n_chunks=4):
 
     workdir = tempfile.mkdtemp(prefix="stream_scorecard_")
     try:
-        src = os.path.join(workdir, "src")
-        os.makedirs(src)
-        staged = os.path.join(workdir, "staged")
-        (
-            corpus.withColumn(
-                "_chunk",
-                F.pmod(F.col("doc_id"), F.lit(n_chunks)).cast("int"),
-            )
-            .repartition(n_chunks, "_chunk")
-            .write.partitionBy("_chunk")
-            .mode("overwrite")
-            .parquet(staged)
+        src = stage_chunks(
+            corpus, F.pmod("doc_id", F.lit(n_chunks)), n_chunks, workdir,
+            chunk_order,
         )
-        t0 = 1_700_000_000
-        order = list(chunk_order) if chunk_order else list(range(n_chunks))
-        for pos, i in enumerate(order):
-            chunk_dir = os.path.join(staged, f"_chunk={i}")
-            if not os.path.isdir(chunk_dir):
-                continue
-            part = next(
-                f for f in os.listdir(chunk_dir) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"{pos:04d}.parquet")
-            os.rename(os.path.join(chunk_dir, part), dst)
-            os.utime(dst, (t0 + pos * 10, t0 + pos * 10))
         state = {"stats": None, "version": 0, "epoch": -1}
         fold = _sc_insert_fold(spark, state, workdir)
-        q = (
-            spark.readStream.format("parquet")
-            .schema(corpus.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(spark, src, corpus.schema, fold, workdir)
         return {"workdir": workdir, "stats": state["stats"]}
     except BaseException:
         shutil.rmtree(workdir, ignore_errors=True)
@@ -196,10 +157,8 @@ def stream_scorecard_fold(spark, sf_dir, chunk_order=None):
     This is the quality dashboard a live ingest keeps current: at
     100 TB per-trigger cost ∝ batch + |sources| (never the
     accumulated corpus), the state table is |sources| rows of int64,
-    and the fold inherits the BM25/KN crash/replay contract
-    (versioned write-all-then-flip + after-commit epoch guard +
-    version retirement via
-    :func:`~ffiec_pq_spark.streaming.state.emit_versioned`).
+    and the fold keeps the ``streaming/state.py`` crash/replay
+    contract.
 
     Resident per (session, dataset) (``_SC_STREAM_STATE``): repeat calls pay only the serve; an explicit
     ``chunk_order`` folds fresh and cleans up after itself."""

@@ -17,13 +17,9 @@ scorecard fold/unlearn):
   and the serve certifies against a full survivor recompute (the
   ``stream_bm25_delete_fold`` / ANN-tombstone precedents, fused).
 
-Fold idempotence (stronger than the round-12 insert fold): every
-append lands in a PER-EPOCH subdirectory written with overwrite, so a
-crash inside the fold and the at-least-once redelivery that follows
-rewrite the same epoch directory instead of double-appending; merged
-state (df / meta / tombstones) goes through the versioned
-write-all-then-flip-then-retire contract (``streaming/state.py``);
-the replay guard records the epoch only after every write committed.
+Both folds run on the ``streaming/state.py`` harness and its fold
+contract: appends land in PER-EPOCH subdirectories written with
+overwrite, merged state (df / meta / tombstones) is versioned.
 
 The reference (iangow/ffiec.pq) has no retrieval surface; these extend
 the mandated training-data-pipeline layer under the established
@@ -36,7 +32,13 @@ import os
 from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
-from ffiec_pq_spark.streaming.state import read_state
+from ffiec_pq_spark.streaming.state import (
+    drain,
+    keyed_add,
+    read_state,
+    stage_chunks,
+    versioned_fold,
+)
 from ffiec_pq_spark.resident import Memo, tracked_persist
 from ffiec_pq_spark.session import dataset_key, load_table
 from ffiec_pq_spark.queries.round13c import (
@@ -132,18 +134,11 @@ def _rrf_insert_fold(spark, state, workdir, tf_dir, dl_dir, cells_dir):
       mid-fold crash) rewrites its own epoch directory instead of
       double-appending, so the data-sized appends are IDEMPOTENT per
       epoch (a strictly stronger contract than append-mode);
-    - df and the (n_docs, Σdl) scalar MERGE by key through the
-      versioned write-all-then-flip-then-retire state
-      (:func:`~ffiec_pq_spark.streaming.state.emit_versioned`);
-    - the replay guard records the epoch only AFTER every write
-      committed (the established ordering: recording first would turn
-      a post-crash redelivery into a silent skip)."""
+    - df and the (n_docs, Σdl) scalar MERGE by key through
+      :func:`~ffiec_pq_spark.streaming.state.versioned_fold`."""
     from ffiec_pq_spark.operators.text import tokens
-    from ffiec_pq_spark.streaming.state import emit_versioned
 
-    def fold(batch_df, epoch_id):
-        if epoch_id <= state["epoch"]:
-            return
+    def step(batch_df, epoch_id):
         from concurrent.futures import ThreadPoolExecutor
 
         # dense arm: argmax cell per arriving vector (pure function of
@@ -184,8 +179,7 @@ def _rrf_insert_fold(spark, state, workdir, tf_dir, dl_dir, cells_dir):
             .groupBy("doc_id", "term")
             .agg(F.count(F.lit(1)).alias("tf"))
         )
-        # the two arms are independent jobs — overlap them (§2.6); the
-        # epoch is recorded only after EVERY write committed, so a
+        # the two arms are independent jobs — overlap them (§2.6); a
         # failure in either arm leaves the epoch unrecorded and the
         # redelivery overwrites both epoch dirs idempotently
         with ThreadPoolExecutor(max_workers=1) as pool:
@@ -202,60 +196,14 @@ def _rrf_insert_fold(spark, state, workdir, tf_dir, dl_dir, cells_dir):
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
         )
-        if state["df"] is not None:
-            df_b = (
-                read_state(spark, state["df"])
-                .unionByName(df_b)
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
-            )
-            meta_b = (
-                read_state(spark, state["meta"])
-                .unionByName(meta_b)
-                .agg(
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("sum_dl").cast("long").alias("sum_dl"),
-                )
-            )
-        emit_versioned(state, workdir, {"df": df_b, "meta": meta_b})
-        # record the epoch the INSTANT the non-idempotent keyed merge
-        # commits (the established ordering: recording first would
-        # turn a post-crash redelivery into a silent skip)
-        state["epoch"] = epoch_id
+        return {
+            "df": keyed_add(spark, state["df"], df_b, ["term"], ["df"]),
+            "meta": keyed_add(
+                spark, state["meta"], meta_b, [], ["n_docs", "sum_dl"]
+            ),
+        }
 
-    return fold
-
-
-def _stage_chunks(corpus, workdir, n_chunks, chunk_order=None):
-    """Stage the relation as mtime-ordered single-file chunks for the
-    file-source stream (the ``_bm25_stream_build`` convention):
-    chunked by ``pmod(id, n_chunks)``, arrival order a free parameter
-    for the order-invariance tests."""
-    staged = os.path.join(workdir, "staged")
-    (
-        corpus.withColumn(
-            "_chunk", F.pmod(F.col("id"), F.lit(n_chunks)).cast("int")
-        )
-        .repartition(n_chunks, "_chunk")
-        .write.partitionBy("_chunk")
-        .mode("overwrite")
-        .parquet(staged)
-    )
-    src = os.path.join(workdir, "src")
-    os.makedirs(src, exist_ok=True)
-    t0 = 1_700_000_000
-    order = list(chunk_order) if chunk_order else list(range(n_chunks))
-    for pos, i in enumerate(order):
-        chunk_dir = os.path.join(staged, f"_chunk={i}")
-        if not os.path.isdir(chunk_dir):
-            continue
-        part = next(
-            f for f in os.listdir(chunk_dir) if f.endswith(".parquet")
-        )
-        dst = os.path.join(src, f"{pos:04d}.parquet")
-        os.rename(os.path.join(chunk_dir, part), dst)
-        os.utime(dst, (t0 + pos * 10, t0 + pos * 10))
-    return src
+    return versioned_fold(state, workdir, step)
 
 
 def _rrf_stream_build(
@@ -272,7 +220,10 @@ def _rrf_stream_build(
 
     workdir = tempfile.mkdtemp(prefix="stream_rrf_")
     try:
-        src = _stage_chunks(corpus, workdir, n_chunks, chunk_order)
+        src = stage_chunks(
+            corpus, F.pmod("id", F.lit(n_chunks)), n_chunks, workdir,
+            chunk_order,
+        )
         tf_dir = os.path.join(workdir, "tf")
         dl_dir = os.path.join(workdir, "dl")
         cells_dir = os.path.join(workdir, "cells")
@@ -283,17 +234,7 @@ def _rrf_stream_build(
         fold = _rrf_insert_fold(
             spark, state, workdir, tf_dir, dl_dir, cells_dir
         )
-        q = (
-            spark.readStream.format("parquet")
-            .schema(corpus.schema)
-            .option("maxFilesPerTrigger", files_per_trigger)
-            .load(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(spark, src, corpus.schema, fold, workdir, files_per_trigger)
         return {
             "workdir": workdir,
             "tf": tf_dir,
@@ -401,11 +342,8 @@ def _rrf_delete_fold(spark, state, workdir, tf, dl):
     count), and tombstones append — all through versioned state with
     retirement.  Postings and cell rows stay immutable; the serve
     anti-joins the tombstones out of both arms."""
-    from ffiec_pq_spark.streaming.state import emit_versioned
 
-    def fold(batch_df, epoch_id):
-        if epoch_id <= state["epoch"]:
-            return
+    def step(batch_df, epoch_id):
         batch_ids = batch_df.select("doc_id")
         del_tf = tf.join(F.broadcast(batch_ids), "doc_id", "left_semi")
         df_dec = del_tf.groupBy("term").agg(F.count(F.lit(1)).alias("dec"))
@@ -433,13 +371,9 @@ def _rrf_delete_fold(spark, state, workdir, tf, dl):
             (F.col("sum_dl") - F.col("dl_del")).alias("sum_dl"),
         )
         tomb_new = read_state(spark, state["tomb"]).unionByName(batch_ids)
-        emit_versioned(
-            state, workdir,
-            {"df": df_new, "meta": meta_new, "tomb": tomb_new},
-        )
-        state["epoch"] = epoch_id
+        return {"df": df_new, "meta": meta_new, "tomb": tomb_new}
 
-    return fold
+    return versioned_fold(state, workdir, step)
 
 
 def _rrf_delete_build(spark, corpus, n_chunks=3):
@@ -511,21 +445,15 @@ def _rrf_delete_build(spark, corpus, n_chunks=3):
         erased = corpus.filter(
             F.col("id") % _RRF_FORGET_MOD == _RRF_FORGET_SLOT
         ).select("id")
-        src = _stage_chunks(erased, workdir, n_chunks)
-        fold = _rrf_delete_fold(spark, state, workdir, tf, dl)
-        q = (
-            spark.readStream.format("parquet")
-            .schema("id long")
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(
-                lambda b, e: fold(b.select(F.col("id").alias("doc_id")), e)
-            )
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        src = stage_chunks(
+            erased, F.pmod("id", F.lit(n_chunks)), n_chunks, workdir
         )
-        q.awaitTermination()
+        fold = _rrf_delete_fold(spark, state, workdir, tf, dl)
+        drain(
+            spark, src, "id long",
+            lambda b, e: fold(b.select(F.col("id").alias("doc_id")), e),
+            workdir,
+        )
         return {
             "workdir": workdir,
             "tf": tf_dir,

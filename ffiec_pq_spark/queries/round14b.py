@@ -22,12 +22,16 @@ and cannot drift."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
-from ffiec_pq_spark.streaming.state import read_state
+from ffiec_pq_spark.streaming.state import (
+    drain,
+    keyed_add,
+    read_state,
+    stage_chunks,
+    versioned_fold,
+)
 from ffiec_pq_spark.resident import Memo, tracked_persist
 from ffiec_pq_spark.session import dataset_key, load_table
 from ffiec_pq_spark.queries.round14 import (
@@ -585,31 +589,20 @@ def _ens_stats_fold(spark, state, workdir):
     versioned statistics relation (the ``stream_probe_stats_fold``
     shape, d=4).  Integer sums are commutative and associative, so
     the drained relation equals the batch aggregation EXACTLY under
-    any arrival order; the replay guard records the epoch only after
-    the versioned write commits (redelivery after a mid-fold crash
-    re-runs instead of silently skipping)."""
+    any arrival order."""
     from ffiec_pq_spark.queries.round14 import _ens_stats_rows
-    from ffiec_pq_spark.streaming.state import emit_versioned
 
     sum_cols = [f"a{j}" for j in range(_ENS_DIM)] + ["b", "n"]
 
-    def fold(batch_df, epoch_id):
-        if epoch_id <= state["epoch"]:
-            return
+    def step(batch_df, epoch_id):
         stats_b = _ens_stats_rows(batch_df.select("y", "_xqa"))
-        if state["stats"] is not None:
-            stats_b = (
-                read_state(spark, state["stats"])
-                .unionByName(stats_b)
-                .groupBy("i")
-                .agg(
-                    *[F.sum(c).cast("long").alias(c) for c in sum_cols]
-                )
+        return {
+            "stats": keyed_add(
+                spark, state["stats"], stats_b, ["i"], sum_cols
             )
-        emit_versioned(state, workdir, {"stats": stats_b})
-        state["epoch"] = epoch_id
+        }
 
-    return fold
+    return versioned_fold(state, workdir, step)
 
 
 def _ens_stream_build(spark, pop, chunk_order=None, n_chunks=4):
@@ -619,25 +612,16 @@ def _ens_stream_build(spark, pop, chunk_order=None, n_chunks=4):
     import shutil
     import tempfile
 
-    from ffiec_pq_spark.queries.round14 import _stage_chunks
-
     workdir = tempfile.mkdtemp(prefix="stream_ens_")
     try:
         staged = pop.select(F.col("doc_id").alias("id"), "y", "_xqa")
-        src = _stage_chunks(staged, workdir, n_chunks, chunk_order)
+        src = stage_chunks(
+            staged, F.pmod("id", F.lit(n_chunks)), n_chunks, workdir,
+            chunk_order,
+        )
         state = {"stats": None, "version": 0, "epoch": -1}
         fold = _ens_stats_fold(spark, state, workdir)
-        q = (
-            spark.readStream.format("parquet")
-            .schema(staged.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(spark, src, staged.schema, fold, workdir)
         return {"workdir": workdir, "stats": state["stats"]}
     except BaseException:
         shutil.rmtree(workdir, ignore_errors=True)

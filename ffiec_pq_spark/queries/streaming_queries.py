@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.session import local_frame
-from ffiec_pq_spark.streaming.state import read_state
+from ffiec_pq_spark.streaming.events import EVENT_SCHEMA
+from ffiec_pq_spark.streaming.state import drain, read_state, versioned_fold
 
 _SINK_IDS = itertools.count()
 
@@ -327,7 +328,7 @@ def stream_upsert_latest(spark, sf_dir):
     tie-broken by the unique event_id, so the final state is identical
     for ANY batch order and equals the batch window answer the oracle
     replays.  At 100 TB the state write is MERGE INTO a partitioned
-    table (Delta/Iceberg); the versioned parquet swap here is the same
+    table (Delta/Iceberg); the versioned parquet state here is the same
     dataflow.
 
     The returned aggregate (5 rows) is driver-materialized so the
@@ -336,7 +337,6 @@ def stream_upsert_latest(spark, sf_dir):
     import tempfile
 
     from ffiec_pq_spark.session import ensure_session_confs, load_table
-    from ffiec_pq_spark.streaming.events import read_event_stream
 
     ensure_session_confs(spark)
     ev = load_table(spark, sf_dir, "events")
@@ -348,35 +348,28 @@ def stream_upsert_latest(spark, sf_dir):
             .write.mode("overwrite")
             .parquet(src)
         )
-        state = {"path": None, "version": 0}
+        state = {"state": None, "version": 0, "epoch": -1}
         payload = F.struct("ts", "event_id", "event_type", "value")
 
-        def merge_batch(batch_df, epoch_id):
+        def step(batch_df, epoch_id):
             reduced = batch_df.groupBy("user_id").agg(
                 F.max(payload).alias("s")
             )
-            if state["path"] is not None:
-                prev = read_state(spark, state["path"])
+            if state["state"] is not None:
+                prev = read_state(spark, state["state"])
                 reduced = (
                     prev.select("user_id", payload.alias("s"))
                     .unionByName(reduced)
                     .groupBy("user_id")
                     .agg(F.max("s").alias("s"))
                 )
-            state["version"] += 1
-            out = os.path.join(workdir, f"state_v{state['version']}")
-            reduced.select("user_id", "s.*").write.parquet(out)
-            state["path"] = out
+            return {"state": reduced.select("user_id", "s.*")}
 
-        q = (
-            read_event_stream(spark, src)
-            .writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            spark, src, EVENT_SCHEMA, versioned_fold(state, workdir, step),
+            workdir,
         )
-        q.awaitTermination()
-        final = read_state(spark, state["path"])
+        final = read_state(spark, state["state"])
         agg = final.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_users"),
             F.round(F.sum("value"), 4).alias("total_latest_value"),
@@ -471,7 +464,6 @@ def stream_incremental_agg(spark, sf_dir):
     import tempfile
 
     from ffiec_pq_spark.session import ensure_session_confs, load_table
-    from ffiec_pq_spark.streaming.events import read_event_stream
 
     ensure_session_confs(spark)
     ev = load_table(spark, sf_dir, "events")
@@ -483,33 +475,26 @@ def stream_incremental_agg(spark, sf_dir):
             .write.mode("overwrite")
             .parquet(src)
         )
-        state = {"path": None, "version": 0}
+        state = {"state": None, "version": 0, "epoch": -1}
 
-        def merge_batch(batch_df, epoch_id):
+        def step(batch_df, epoch_id):
             part = batch_df.groupBy("user_id", "event_type").agg(
                 F.count(F.lit(1)).alias("n"), F.sum("value").alias("v")
             )
-            if state["path"] is not None:
-                prev = read_state(spark, state["path"])
+            if state["state"] is not None:
+                prev = read_state(spark, state["state"])
                 part = (
                     prev.unionByName(part)
                     .groupBy("user_id", "event_type")
                     .agg(F.sum("n").alias("n"), F.sum("v").alias("v"))
                 )
-            state["version"] += 1
-            out = os.path.join(workdir, f"state_v{state['version']}")
-            part.write.parquet(out)
-            state["path"] = out
+            return {"state": part}
 
-        q = (
-            read_event_stream(spark, src)
-            .writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            spark, src, EVENT_SCHEMA, versioned_fold(state, workdir, step),
+            workdir,
         )
-        q.awaitTermination()
-        final = read_state(spark, state["path"])
+        final = read_state(spark, state["state"])
         agg = final.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_users"),
             F.sum("n").alias("n_events"),

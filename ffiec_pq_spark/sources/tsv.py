@@ -392,23 +392,15 @@ def read_call_schedule(
     member: str,
     type_dict: dict[str, str],
     overrides: dict[str, str] | None = None,
-    precomputed_stats: tuple[int, int] | None = None,
 ) -> tuple[DataFrame, dict]:
     """Read one schedule TSV member -> (typed DataFrame, audit).
 
     Two-phase: strict parse first; on any bad-field-count line, re-read
-    with text repairs (the reference's exact strategy).
-
-    ``precomputed_stats``: the (n_bad, n_problems) pair from
-    :func:`zip_stats_batch` — passing it removes this member's own
-    stats job, so a clean member costs no Spark job until the terminal
-    write (the audit rode the whole-zip batch pass).  See
+    with text repairs (the reference's exact strategy).  See
     :func:`read_schedule_member` for the line-frame lifecycle."""
     header = read_zip_member_header(zip_path, member)
     colspec = make_colspec(header, type_dict, overrides)
-    return read_schedule_member(
-        spark, zip_path, member, colspec, precomputed_stats
-    )
+    return read_schedule_member(spark, zip_path, member, colspec)
 
 
 def read_schedule_member(
@@ -422,11 +414,14 @@ def read_schedule_member(
     """:func:`read_call_schedule` for a member whose colspec is already
     built.
 
-    ``batch_lines``: the zip's shared :func:`zip_lines_batch` frame the
-    ``precomputed_stats`` were taken from.  A clean member (no
-    bad-field-count line) then parses its slice of that frame instead
-    of decompressing the member again; without it a clean member is
-    extracted once, uncached, for its single downstream consumer.
+    ``precomputed_stats`` and ``batch_lines`` come together: the
+    (n_bad, n_problems) pair :func:`lines_batch_stats` took from the
+    zip's shared :func:`zip_lines_batch` frame, and that frame.  They
+    replace this member's own stats job, and a clean member (no
+    bad-field-count line) parses its slice of the frame instead of
+    decompressing the member again, so it costs no Spark job until the
+    terminal write.  Without them the member is extracted, cached and
+    audited on its own.
 
     A member that needs repair is re-extracted on its own with the text
     repairs, and that line DataFrame is CACHED (the re-check and the
@@ -443,10 +438,7 @@ def read_schedule_member(
             if n_problems:
                 audit["repairs"] = ["coerced-invalid-values"]
             audit["unpersist"] = lambda: None
-            if batch_lines is not None:
-                lines = member_slice(batch_lines, member)
-            else:
-                lines = zip_member_lines(spark, zip_path, member, skip=2)
+            lines = member_slice(batch_lines, member)
             return parse_schedule_lines(lines, colspec), audit
     else:
         lines = zip_member_lines(spark, zip_path, member, skip=2).cache()

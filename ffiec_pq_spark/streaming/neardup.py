@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.session import dataset_key
+from ffiec_pq_spark.streaming.state import drain, stage_chunks
 
 # Live stream workdirs keyed by (dataset_key(None, sf_dir),
 # compact_every): a durable stream's checkpoint + state OUTLIVE any
@@ -137,17 +138,7 @@ def run_neardup_stream(
             os.rename(compact_dir, state_dir)  # atomic swap-in
             shutil.rmtree(old_dir)
 
-    q = (
-        spark.readStream.format("parquet")
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-        .writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, src, docs.schema, fold_batch, workdir)
     # heal the compaction swap window on the DRAIN path too: a
     # re-attach with zero new files never enters fold_batch (the only
     # other caller of the recovery hook), so a prior process that died
@@ -240,37 +231,11 @@ def run_neardup_bounded_stream(
 
     workdir = tempfile.mkdtemp(prefix="stream_neardup_bounded_")
     try:
-        src = os.path.join(workdir, "src")
-        os.makedirs(src)
+        # four doc-id-range chunks: chunk order is doc-id order
         step = max_id // 4 + 1
-        t0 = 1_700_000_000
-        # stage all four id-range chunks in ONE job: repartition on the
-        # chunk id puts each chunk entirely in one task, so partitionBy
-        # writes exactly one file per chunk dir (measured 0.8s vs 2.0s
-        # for four serial coalesce(1) writes at sf0.1 — a fixed cost
-        # every bench rep of the deploy-shape stream pays)
-        staged = os.path.join(workdir, "staged")
-        (
-            docs.withColumn(
-                "_chunk", F.floor(F.col("doc_id") / step).cast("int")
-            )
-            .repartition(4, "_chunk")
-            .write.partitionBy("_chunk")
-            .mode("overwrite")
-            .parquet(staged)
+        src = stage_chunks(
+            docs, F.floor(F.col("doc_id") / step), 4, workdir
         )
-        for i in range(4):
-            chunk_dir = os.path.join(staged, f"_chunk={i}")
-            if not os.path.isdir(chunk_dir):
-                continue  # sparse id range: empty chunk, no trigger
-            parts = [
-                f for f in os.listdir(chunk_dir) if f.endswith(".parquet")
-            ]
-            dst = os.path.join(src, f"{i:04d}.parquet")
-            os.rename(os.path.join(chunk_dir, parts[0]), dst)
-            # strictly increasing mtimes pin the file source's
-            # processing order (oldest first) to doc-id order
-            os.utime(dst, (t0 + i * 10, t0 + i * 10))
 
         pairs_dir = os.path.join(workdir, "pairs")
         # closure state: the live (band, bkey) -> (min_id, last_ms)
@@ -371,19 +336,7 @@ def run_neardup_bounded_stream(
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
-            q = (
-                spark.readStream.format("parquet")
-                .schema(docs.schema)
-                .option("maxFilesPerTrigger", 1)
-                .load(src)
-                .writeStream.foreachBatch(fold)
-                .option(
-                    "checkpointLocation", os.path.join(workdir, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            drain(spark, src, docs.schema, fold, workdir)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if not os.path.isdir(pairs_dir):

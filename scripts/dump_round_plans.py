@@ -1,12 +1,12 @@
 #!/usr/bin/env python
 """Dump .explain("formatted") + the executed (AQE-final) physical plan
-of headline queries into plans/r16/<query>_<suffix>.txt.
+of headline queries into plans/<round>/<query>_<suffix>.txt.
 
-Usage: python scripts/dump_r15_plans.py <suffix> [query ...]
-(default: the bench.py headline set).  Each query is executed once with
-the noop sink first so the AQE-final plan (join strategy rewrites,
-coalesced reads) is the one recorded — the optimization round's
-before/after evidence.
+Usage: python scripts/dump_round_plans.py <round> <suffix> [query ...]
+(e.g. ``r17 before``; default queries: the bench.py headline set).
+Each query is executed once with the noop sink first so the AQE-final
+plan (join strategy rewrites, coalesced reads) is the one recorded —
+the optimization round's before/after evidence.
 """
 
 from __future__ import annotations
@@ -24,14 +24,16 @@ from ffiec_pq_spark.session import get_spark
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    round_dir, suffix = sys.argv[1], sys.argv[2]
     import bench
 
-    names = sys.argv[2:] or (bench.HEADLINE + bench.HEAVY)
+    names = sys.argv[3:] or (bench.HEADLINE + bench.HEAVY)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r16",
+        "plans", round_dir,
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("ffiec_pq_spark_plan_dump")

@@ -2,9 +2,10 @@
 """Per-stage profile of one headline query (guide §1: measure first).
 
 Runs the query like bench.py (noop sink; builder+sink cold, then warm
-reps), then reads the local Spark UI REST API and prints per-JOB and
-per-STAGE wall/metrics for the warm rep — the measurement that tells
-you WHICH of a 70-exchange DAG's stages actually cost anything.
+reps) in a ``get_spark`` session, then reads the application's status
+store over py4j (readable with the UI disabled) and prints per-JOB and
+per-STAGE wall/metrics for the last warm rep — the measurement that
+tells you WHICH of a 70-exchange DAG's stages actually cost anything.
 
 Usage: python scripts/profile_query.py <query> [warm_reps]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -12,11 +13,9 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -24,92 +23,64 @@ from ffiec_pq_spark import catalog
 from ffiec_pq_spark.session import get_spark
 
 
-def rest(spark, path: str):
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}{path}") as r:
-        return json.load(r)
-
-
 def main() -> None:
     name = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 1
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # the repo session disables the UI; the profiler needs the REST API
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-    from pyspark.sql import SparkSession
-
-    n = os.environ["SPARK_GRAFT_CPUS"]
-    spark = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName("ffiec_pq_spark_profile")
-        .config("spark.sql.shuffle.partitions", n)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.mergeSchema", "false")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedJobs", "5000")
-        .config("spark.ui.retainedStages", "5000")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    _ = get_spark  # repo confs mirrored above (UI on is the only delta)
+    spark = get_spark("ffiec_pq_spark_profile")
+    sc = spark.sparkContext
     queries = catalog.queries()
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    spark.sparkContext.setJobDescription(f"{name}: COLD")
-    t0 = time.perf_counter()
-    queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    cold = time.perf_counter() - t0
-    marks = []
-    for i in range(reps):
-        spark.sparkContext.setJobDescription(f"{name}: WARM rep{i}")
+    def run():
         t0 = time.perf_counter()
         queries[name](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
-        marks.append(time.perf_counter() - t0)
+        return time.perf_counter() - t0
+
+    cold = run()
+    marks = []
+    for _ in range(reps):
+        seen = set(sc.statusTracker().getJobIdsForGroup(None))
+        marks.append(run())
     print(f"\n=== {name}  cold={cold:.3f}s  warm={min(marks):.3f}s "
           f"(reps: {[round(m, 3) for m in marks]})")
 
-    jobs = rest(spark, "/jobs")
-    stages = {s["stageId"]: s for s in rest(spark, "/stages")}
-    # jobs for the LAST warm rep only
-    tag = f"{name}: WARM rep{reps - 1}"
-    sel = [j for j in jobs if j.get("description", "").startswith(tag)]
-    sel.sort(key=lambda j: j["jobId"])
-    print(f"--- {len(sel)} jobs in last warm rep ---")
+    # jobs of the LAST warm rep only: the ids submitted while it ran
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    store = jsc.statusStore()
+    new = sorted(set(sc.statusTracker().getJobIdsForGroup(None)) - seen)
+    print(f"--- {len(new)} jobs in last warm rep ---")
     tot = 0.0
-    rows = []
-    for j in sel:
-        from datetime import datetime
-
-        def ts(s):
-            return datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f")
-
-        dur = (ts(j["completionTime"]) - ts(j["submissionTime"])).total_seconds()
+    for jid in new:
+        jd = store.job(jid)
+        sub, done = jd.submissionTime(), jd.completionTime()
+        dur = (
+            (done.get().getTime() - sub.get().getTime()) / 1000.0
+            if sub.isDefined() and done.isDefined()
+            else 0.0
+        )
         tot += dur
+        ids = jd.stageIds()
         st_info = []
-        for sid in sorted(j["stageIds"]):
-            s = stages.get(sid)
-            if not s or s["status"] == "SKIPPED":
+        for sid in sorted(ids.apply(i) for i in range(ids.size())):
+            try:
+                sd = store.lastStageAttempt(sid)
+            except Exception:  # evicted from the store
+                continue
+            if sd.status().toString() == "SKIPPED":
                 continue
             st_info.append(
-                f"s{sid}[{s['numCompleteTasks']}t "
-                f"run={s['executorRunTime'] / 1000:.2f}s "
-                f"in={s['inputBytes'] >> 10}K sr={s['shuffleReadBytes'] >> 10}K "
-                f"sw={s['shuffleWriteBytes'] >> 10}K "
-                f"{s.get('name', '')[:60]}]"
+                f"s{sid}[{sd.numCompleteTasks()}t "
+                f"run={sd.executorRunTime() / 1000:.2f}s "
+                f"in={sd.inputBytes() >> 10}K "
+                f"sr={sd.shuffleReadBytes() >> 10}K "
+                f"sw={sd.shuffleWriteBytes() >> 10}K "
+                f"{sd.name()[:60]}]"
             )
-        rows.append((dur, j["jobId"], "; ".join(st_info)))
-    for dur, jid, info in rows:
-        print(f"job {jid}: {dur:6.3f}s  {info}")
+        print(f"job {jid}: {dur:6.3f}s  {'; '.join(st_info)}")
     print(f"sum of job walls: {tot:.3f}s (gaps to warm total = driver/plan time)")
     spark.stop()
 
