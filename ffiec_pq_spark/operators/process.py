@@ -20,10 +20,10 @@ they are deliverables anyway, and a scan of finished columnar files is
 cheaper than re-running each wide table's parse + combine lineage.
 
 Each zip's central directory is parsed once (``zip_member_rows``) and
-its schedule members are decompressed into lines once: the whole-zip
-audit persists that line frame and every clean member is parsed from
-its slice.  The zip's POR stage runs on the ETL thread pool alongside
-its schedule groups.
+its schedule and POR members are decompressed into lines once, into
+one persisted frame (``sources/tsv.py`` ``ZipFrame``): the audit, the
+grouped-map repair, every part's parse and the POR stage (on the ETL
+thread pool, beside the schedule groups) all read slices of it.
 """
 
 from __future__ import annotations
@@ -51,11 +51,9 @@ from ffiec_pq_spark.sources.manifest import (
 from ffiec_pq_spark.sources.parquet import write_single_parquet
 from ffiec_pq_spark.sources.por import read_por
 from ffiec_pq_spark.sources.tsv import (
-    lines_batch_stats,
+    ZipFrame,
     make_colspec,
     read_schedule_member,
-    read_zip_member_header,
-    zip_lines_batch,
 )
 from ffiec_pq_spark.session import local_frame
 
@@ -182,6 +180,22 @@ def _nulls_first(v) -> tuple:
     return (v is not None, v)
 
 
+def _schedule_rows(members: list) -> list:
+    """The zip's schedule member rows in Spark's ascending
+    orderBy(schedule, date, part, file) order (NULLs first)."""
+    return sorted(
+        (r for r in members if r.schedule is not None and r.schedule != "por"),
+        key=lambda r: (
+            r.schedule, _nulls_first(r.date), _nulls_first(r.part), r.file
+        ),
+    )
+
+
+def _por_row(members: list):
+    """The zip's POR member row, or None."""
+    return next((r for r in members if r.schedule == "por"), None)
+
+
 def process_zip_schedules(
     spark: SparkSession,
     zip_path: str,
@@ -195,16 +209,18 @@ def process_zip_schedules(
 
     Returns (wide_outputs, log_rows); each wide output dict carries the
     schedule, date, path, and part files that fed it."""
-    with _etl_pool() as pool:
+    members = zip_member_rows(zip_path)
+    files = [r.file for r in _schedule_rows(members)]
+    with ZipFrame(spark, zip_path, files) as frame, _etl_pool() as pool:
         return _zip_schedules(
-            spark, zip_path, zip_member_rows(zip_path), type_dict, out_dir,
-            pure_cols, strict, clock or _NULL_CLOCK, pool,
+            spark, frame, members, type_dict, out_dir, pure_cols,
+            strict, clock or _NULL_CLOCK, pool,
         )
 
 
 def _zip_schedules(
     spark: SparkSession,
-    zip_path: str,
+    frame: ZipFrame,
     members: list,
     type_dict: dict[str, str],
     out_dir: str,
@@ -213,21 +229,17 @@ def _zip_schedules(
     clock: StageClock,
     pool: ThreadPoolExecutor,
 ) -> tuple[list[dict], list[dict]]:
-    """:func:`process_zip_schedules` over the zip's parsed member rows,
-    with the groups submitted to ``pool``."""
+    """:func:`process_zip_schedules` over the zip's parsed member rows
+    and its line frame (released by the caller), with the groups
+    submitted to ``pool``."""
+    zip_path = frame.zip_path
     with clock.stage("manifest_validate"):
         manifest = member_frame(spark, members)
         validation = {
             (r["schedule"], r["date"]): r.asDict()
             for r in resolve_n_parts(manifest).collect()
         }
-    # Spark's ascending orderBy(schedule, date, part, file): NULLs first
-    sched_files = sorted(
-        (r for r in members if r.schedule is not None and r.schedule != "por"),
-        key=lambda r: (
-            r.schedule, _nulls_first(r.date), _nulls_first(r.part), r.file
-        ),
-    )
+    sched_files = _schedule_rows(members)
     groups: dict[tuple, list] = {}
     for r in sched_files:
         groups.setdefault((r.schedule, r.date), []).append(r)
@@ -246,27 +258,20 @@ def _zip_schedules(
                 "repairs": list(val["errors"]),
                 "inner_files": inner_files,
             }
-        parts, repairs, all_ok, releases = [], [], True, []
+        parts, repairs, all_ok = [], [], True
         n_problems = 0
         with clock.stage("parse_repair"):
             for r in rows:
-                df, audit = read_schedule_member(
-                    spark, zip_path, r.file, colspecs[r.file],
-                    precomputed_stats=batch_stats[r.file],
-                    batch_lines=zip_lines,
-                )
+                df, audit = read_schedule_member(frame, r.file)
                 parts.append(df)
                 repairs.extend(audit["repairs"])
                 all_ok = all_ok and audit["ok"]
                 n_problems += audit["n_problems"]
-                releases.append(audit["unpersist"])
         if strict and not all_ok:
             # clean-read gate (reference ffiec_finalize_if_clean,
             # R/ffeic_read.R:654-685): an unrepairable member blocks the
             # whole (schedule, date) output; the failure is logged, not
             # silently partial
-            for release in releases:
-                release()
             return None, {
                 "zipfile": zip_path,
                 "schedule": schedule,
@@ -294,9 +299,6 @@ def _zip_schedules(
                 if os.path.exists(out_path):
                     os.remove(out_path)
                 raise
-            finally:
-                for release in releases:
-                    release()
         output = {
             "schedule": schedule, "date": d, "path": out_path,
             "inner_files": inner_files,
@@ -312,36 +314,23 @@ def _zip_schedules(
             "inner_files": inner_files,
         }
 
-    # whole-zip audit batch: every member's (bad, problems) counters in
-    # ONE Spark job (sources/tsv.py lines_batch_stats) instead of one
+    # whole-zip audit: every member's (bad, problems) counters in ONE
+    # Spark job (sources/tsv.py lines_batch_stats) instead of one
     # collect per member — at production member counts the per-member
-    # scheduling overhead dominates the audit otherwise.  The extracted
-    # line frame is persisted for the parse: each clean member reads
-    # its slice, so the zip is decompressed into lines once.  It is
-    # released once the zip's last wide write is done, also when a
-    # group raises.  Headers are read driver-side (first-block
-    # decompression only).
-    zip_lines = None
-    try:
-        with clock.stage("audit_batch"):
-            colspecs = {
-                r.file: make_colspec(
-                    read_zip_member_header(zip_path, r.file), type_dict
-                )
-                for r in sched_files
-            }
-            batch_stats = {}
-            if colspecs:
-                zip_lines = zip_lines_batch(
-                    spark, zip_path, list(colspecs)
-                ).persist()
-                batch_stats = lines_batch_stats(spark, zip_lines, colspecs)
-        results = _run_each(
-            pool, run_group, [(s, d, rows) for (s, d), rows in groups.items()]
-        )
-    finally:
-        if zip_lines is not None:
-            zip_lines.unpersist()
+    # scheduling overhead dominates the audit otherwise.  The first
+    # group with a flagged member repairs all of them at once, while
+    # the clean groups go ahead.  Colspecs come from the frame's
+    # driver-side head read.
+    with clock.stage("audit_batch"):
+        colspecs = {
+            r.file: make_colspec(frame.heads[r.file][0], type_dict)
+            for r in sched_files
+        }
+        if colspecs:
+            frame.audit(colspecs)
+    results = _run_each(
+        pool, run_group, [(s, d, rows) for (s, d), rows in groups.items()]
+    )
     outputs, log_rows = [], []
     for output, log_row in results:
         if output is not None:
@@ -481,26 +470,24 @@ def process_zip_por(
     spark: SparkSession, zip_path: str, out_dir: str
 ) -> tuple[str | None, list[dict]]:
     """Stage 4: POR member -> institution parquet."""
-    return _zip_por(spark, zip_path, zip_member_rows(zip_path), out_dir)
-
-
-def _zip_por(
-    spark: SparkSession, zip_path: str, members: list, out_dir: str
-) -> tuple[str | None, list[dict]]:
-    """:func:`process_zip_por` over the zip's parsed member rows (no
-    Spark job to find the member)."""
-    por_rows = [r for r in members if r.schedule == "por"]
-    if not por_rows:
+    r = _por_row(zip_member_rows(zip_path))
+    if r is None:
         return None, []
-    r = por_rows[0]
-    df, audit = read_por(spark, zip_path, r.file)
+    with ZipFrame(spark, zip_path, [r.file]) as frame:
+        return _zip_por(frame, r, out_dir)
+
+
+def _zip_por(frame: ZipFrame, r, out_dir: str) -> tuple[str, list[dict]]:
+    """:func:`process_zip_por` for the POR member row ``r`` of the zip
+    whose line frame is ``frame``."""
+    df, audit = read_por(frame, r.file)
     d = r.date or _date(1900, 1, 1)
     df = df.withColumn("date", F.lit(r.date).cast("date"))
     path = os.path.join(out_dir, f"por_{d.strftime('%Y%m%d')}.parquet")
     write_single_parquet(df, path)
     log = [
         {
-            "zipfile": zip_path,
+            "zipfile": frame.zip_path,
             "schedule": "por",
             "date": r.date,
             "kind": "por",
@@ -625,20 +612,32 @@ def ffiec_process(
     os.makedirs(out_dir, exist_ok=True)
     all_wide, all_logs, all_long, por_paths = [], [], {}, []
 
-    def por_stage(zp: str, members: list):
+    def por_stage(frame: ZipFrame, r):
+        if r is None:
+            return None, []
         with clock.stage("por"):
-            return _zip_por(spark, zp, members, out_dir)
+            return _zip_por(frame, r, out_dir)
 
     with _etl_pool() as pool:
         for zp in zip_paths:
             members = zip_member_rows(zp)
-            # the POR stage shares no input or output with the schedule
-            # groups: run it on the pool, overlapping them
-            por = pool.submit(por_stage, zp, members)
-            wide, logs = _zip_schedules(
-                spark, zp, members, type_dict, out_dir, pure_cols,
-                strict, clock, pool,
-            )
+            por_row = _por_row(members)
+            files = [r.file for r in _schedule_rows(members)]
+            if por_row is not None:
+                files.append(por_row.file)
+            with clock.stage("audit_batch"):
+                frame = ZipFrame(spark, zp, files)
+            with frame:
+                # the POR stage shares only the line frame with the
+                # schedule groups: run it on the pool, overlapping them
+                por = pool.submit(por_stage, frame, por_row)
+                try:
+                    wide, logs = _zip_schedules(
+                        spark, frame, members, type_dict, out_dir,
+                        pure_cols, strict, clock, pool,
+                    )
+                finally:
+                    wait([por])
             all_wide.extend(wide)
             all_logs.extend(logs)
             por_path, por_logs = por.result()

@@ -31,7 +31,7 @@ from ffiec_pq_spark.functions.lits import double_array
 from ffiec_pq_spark.operators.pq import pq_codes, pq_fit
 from ffiec_pq_spark.queries.round9c import _ITERS, _M, _SUB_DIM, _pq_ctes
 from ffiec_pq_spark.session import load_table
-from ffiec_pq_spark.streaming.state import drain
+from ffiec_pq_spark.streaming.state import drain, stage_chunks
 
 # Production-shaped codebook size: k=64 codes per subspace (6 bits of
 # the one-byte production code space) — past the _EXPR_MAX_FLOATS
@@ -396,12 +396,7 @@ def stream_pq_encode(spark, sf_dir):
     books = pq_fit(emb, m=_M, sub_dim=_SUB_DIM, k=_K64, iters=_ITERS)
     workdir = tempfile.mkdtemp(prefix="stream_pq_encode_")
     try:
-        src = os.path.join(workdir, "src")
-        (
-            emb.repartition(4, F.col("vec_id") % 4)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
+        src = stage_chunks(emb, F.pmod(F.col("vec_id"), F.lit(4)), 4, workdir)
         state_dir = os.path.join(workdir, "codes")
 
         def encode_batch(batch_df, epoch_id):

@@ -13,7 +13,7 @@ from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.queries.round8 import _stream_neardup_oracle
 from ffiec_pq_spark.session import dataset_key, load_table
-from ffiec_pq_spark.streaming.state import drain
+from ffiec_pq_spark.streaming.state import drain, stage_chunks
 
 
 @register(
@@ -580,11 +580,8 @@ def stream_ivf_delete_log(spark, sf_dir):
     deletes = emb.select("vec_id").filter(F.col("vec_id") % 7 == 3)
     workdir = tempfile.mkdtemp(prefix="stream_ivf_deletes_")
     try:
-        src = os.path.join(workdir, "src")
-        (
-            deletes.repartition(4, F.col("vec_id") % 4)
-            .write.mode("overwrite")
-            .parquet(src)
+        src = stage_chunks(
+            deletes, F.pmod(F.col("vec_id"), F.lit(4)), 4, workdir
         )
         state_dir = os.path.join(workdir, "tombstones")
 

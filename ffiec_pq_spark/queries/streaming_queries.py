@@ -18,7 +18,12 @@ from pyspark.sql import functions as F
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.session import local_frame
 from ffiec_pq_spark.streaming.events import EVENT_SCHEMA
-from ffiec_pq_spark.streaming.state import drain, read_state, versioned_fold
+from ffiec_pq_spark.streaming.state import (
+    drain,
+    read_state,
+    stage_chunks,
+    versioned_fold,
+)
 
 _SINK_IDS = itertools.count()
 
@@ -342,12 +347,7 @@ def stream_upsert_latest(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     workdir = tempfile.mkdtemp(prefix="stream_upsert_")
     try:
-        src = os.path.join(workdir, "src")
-        (
-            ev.repartition(4, F.col("event_id") % 4)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
+        src = stage_chunks(ev, F.pmod(F.col("event_id"), F.lit(4)), 4, workdir)
         state = {"state": None, "version": 0, "epoch": -1}
         payload = F.struct("ts", "event_id", "event_type", "value")
 
@@ -369,7 +369,9 @@ def stream_upsert_latest(spark, sf_dir):
             spark, src, EVENT_SCHEMA, versioned_fold(state, workdir, step),
             workdir,
         )
-        final = read_state(spark, state["state"])
+        # no events: no file staged, no trigger ran; fold an empty batch
+        final = (step(ev.limit(0), -1)["state"] if state["state"] is None
+                 else read_state(spark, state["state"]))
         agg = final.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_users"),
             F.round(F.sum("value"), 4).alias("total_latest_value"),
@@ -469,12 +471,7 @@ def stream_incremental_agg(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     workdir = tempfile.mkdtemp(prefix="stream_incagg_")
     try:
-        src = os.path.join(workdir, "src")
-        (
-            ev.repartition(4, F.col("event_id") % 4)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
+        src = stage_chunks(ev, F.pmod(F.col("event_id"), F.lit(4)), 4, workdir)
         state = {"state": None, "version": 0, "epoch": -1}
 
         def step(batch_df, epoch_id):
@@ -494,7 +491,9 @@ def stream_incremental_agg(spark, sf_dir):
             spark, src, EVENT_SCHEMA, versioned_fold(state, workdir, step),
             workdir,
         )
-        final = read_state(spark, state["state"])
+        # no events: no file staged, no trigger ran; fold an empty batch
+        final = (step(ev.limit(0), -1)["state"] if state["state"] is None
+                 else read_state(spark, state["state"]))
         agg = final.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_users"),
             F.sum("n").alias("n_events"),

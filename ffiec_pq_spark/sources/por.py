@@ -1,6 +1,9 @@
 """POR (institution) reader (SURVEY.md §2.1 S5; reference
 read_por_from_zip, R/ffeic_read.R:434-493).
 
+The member's lines and its first two lines come from the zip's
+``ZipFrame`` (``sources/tsv.py``), which the ingest builds once per zip.
+
 Semantics reproduced:
 - header sniff: if row 2's IDRSSD field isn't an integer it's a
   description row -> skip 2, else skip 1 (reference :449-456);
@@ -14,14 +17,11 @@ Semantics reproduced:
 
 from __future__ import annotations
 
-import io
-import zipfile
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ffiec_pq_spark.functions.scalars import et_to_utc, id_zero_to_null, snake_case
-from ffiec_pq_spark.sources.tsv import zip_member_lines
+from ffiec_pq_spark.sources.tsv import ZipFrame, member_slice
 
 ID_ZERO_NA_COLS = (
     "financial_institution_zip_code",
@@ -33,16 +33,9 @@ ID_ZERO_NA_COLS = (
 SUBMISSION_TS_COL = "last_date_time_submission_updated_on"
 
 
-def _sniff_skip(zip_path: str, member: str) -> tuple[list[str], int]:
-    """Read first two lines driver-side: header names + skip count."""
-    with zipfile.ZipFile(zip_path) as zf:
-        with zf.open(member) as fh:
-            txt = io.TextIOWrapper(fh, encoding="utf-8", errors="replace")
-            header = txt.readline().rstrip("\r\n")
-            second = txt.readline().rstrip("\r\n")
-    names = [c.strip().strip('"') for c in header.split("\t")]
-    if names and names[-1] == "":
-        names.pop()
+def read_por(frame: ZipFrame, member: str) -> tuple[DataFrame, dict]:
+    """Read the POR member of ``frame`` -> (typed DataFrame, audit)."""
+    names, second = frame.heads[member]
     try:
         idx = [n.upper() for n in names].index("IDRSSD")
     except ValueError:
@@ -50,16 +43,14 @@ def _sniff_skip(zip_path: str, member: str) -> tuple[list[str], int]:
     second_fields = second.split("\t")
     probe = second_fields[idx].strip() if idx < len(second_fields) else ""
     skip = 1 if probe.isdigit() else 2
-    return names, skip
-
-
-def read_por(
-    spark: SparkSession, zip_path: str, member: str
-) -> tuple[DataFrame, dict]:
-    """Read the POR member -> (typed DataFrame, audit)."""
-    names, skip = _sniff_skip(zip_path, member)
     clean = [snake_case(n) for n in names]
-    lines = zip_member_lines(spark, zip_path, member, skip=skip)
+    # the frame spreads the lines across partitions; one partition in
+    # line order keeps the file in the member's row order
+    lines = (
+        member_slice(frame.lines, member, skip)
+        .coalesce(1)
+        .sortWithinPartitions("line_no")
+    )
     fields = F.split(F.regexp_replace(F.col("value"), "\t$", ""), "\t", -1)
     cols = []
     for i, name in enumerate(clean):
@@ -76,5 +67,8 @@ def read_por(
             cols.append(et_to_utc(raw).alias(name))
         else:
             cols.append(raw.alias(name))
-    audit = {"zipfile": zip_path, "file": member, "skip": skip, "repairs": [], "ok": True}
+    audit = {
+        "zipfile": frame.zip_path, "file": member, "skip": skip,
+        "repairs": [], "ok": True,
+    }
     return lines.select(*cols), audit

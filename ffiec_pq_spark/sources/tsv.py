@@ -4,26 +4,30 @@ R/ffeic_read.R:34-119 and read_tsv_with_tab_repair :194-250).
 
 Spark has no native "read member X of a zip" source, so member bytes are
 extracted executor-side from a ``binaryFile`` scan of the zip and turned
-into a line DataFrame.  The ingest extracts all of a zip's schedule
-members in ONE pass (:func:`zip_lines_batch`), audits them together and
-parses each clean member from its slice of that frame; only members
-that need repair are extracted again on their own.  Everything after
-the extraction is declarative:
+into lines.  :func:`zip_lines_batch` is the one such extraction: every
+listed member of a zip in ONE pass, every physical line kept.  A
+:class:`ZipFrame` persists that frame for one zip, and the audit, the
+repair, every schedule parse and the POR reader (``sources/por.py``)
+all read slices of it.  Everything after the extraction is
+declarative:
 
 1. header row (line 1) -> column names; line 2 is a description row and
-   is skipped (reference ``skip = 2``).
+   is skipped (reference ``skip = 2``); each consumer drops its own
+   header rows (:func:`member_slice`).
 2. names are looked up in a broadcastable dictionary {item -> type char}
    to build the typed colspec; unknown columns default to string;
    hard overrides (RCON8678 string, RCON9999/RIAD9106 date-parsed-later)
    mirror the reference (R/ffiec_types.R:30-35).
 3. fast path: split on tabs, project all-string, then typed casts with
    the domain NULL tokens "" / "CONF".
-4. slow path (triggered per member when any line's field count is
-   wrong): re-extract with text-level repairs — (a) join embedded
-   newlines not preceded by a tab into the prior line
-   (regex ``(?<!\\t)\\n`` -> space), (b) convert tabs beyond
-   ``expected-1`` to spaces — then re-parse; repair tags are recorded
-   in the audit (reference R/ffeic_read.R:90-93,130-146).
+4. slow path (for the members whose audit finds a line with the wrong
+   field count): one grouped map over those members' cached lines
+   rebuilds each member's text and applies the text-level repairs —
+   (a) join embedded newlines not preceded by a tab into the prior
+   line (regex ``(?<!\\t)\\n`` -> space), (b) convert tabs beyond
+   ``expected-1`` to spaces — then the repaired rows are re-audited and
+   parsed; the repair tags that fired are recorded in the audit
+   (reference R/ffeic_read.R:90-93,130-146).
 
 The reader returns ``(DataFrame, audit_dict)`` — the reference carries
 diagnostics as R attributes (SURVEY.md §2.13); here the audit is an
@@ -39,6 +43,7 @@ from __future__ import annotations
 
 import io
 import re
+import threading
 import zipfile
 from typing import Iterator
 
@@ -84,17 +89,26 @@ def make_colspec(
     return out
 
 
-def read_zip_member_header(zip_path: str, member: str) -> list[str]:
-    """Driver-side: read just the first line of a member for the colspec
-    (cheap — decompresses only the first block)."""
+def zip_member_heads(
+    zip_path: str, members: list[str]
+) -> dict[str, tuple[list[str], str]]:
+    """Driver-side: {member: (header names, raw second line)} for every
+    listed member, from ONE open of the zip (cheap — decompresses only
+    each member's first block).  The names feed the colspec; the
+    second line is what the POR reader sniffs its skip from."""
+    heads = {}
     with zipfile.ZipFile(zip_path) as zf:
-        with zf.open(member) as fh:
-            first = io.TextIOWrapper(fh, encoding="utf-8", errors="replace").readline()
-    # rows carry a trailing tab; drop the resulting empty last name
-    names = [c.strip().strip('"') for c in first.rstrip("\r\n").split("\t")]
-    if names and names[-1] == "":
-        names.pop()
-    return names
+        for m in members:
+            with zf.open(m) as fh:
+                text = io.TextIOWrapper(fh, encoding="utf-8", errors="replace")
+                first = text.readline().rstrip("\r\n")
+                second = text.readline().rstrip("\r\n")
+            # rows carry a trailing tab; drop the resulting empty last name
+            names = [c.strip().strip('"') for c in first.split("\t")]
+            if names and names[-1] == "":
+                names.pop()
+            heads[m] = (names, second)
+    return heads
 
 
 def fix_extra_tabs(line: str, expected_cols: int) -> str:
@@ -130,41 +144,6 @@ def repair_member_text(text: str, expected_cols: int) -> tuple[str, list[str]]:
     if fixed != lines:
         tags.append("tab-repair")
     return "\n".join(fixed), tags
-
-
-def zip_member_lines(
-    spark: SparkSession,
-    zip_path: str,
-    member: str,
-    skip: int = 2,
-    repair_expected_cols: int | None = None,
-) -> DataFrame:
-    """Executor-side extraction of one zip member into a line DataFrame
-    (line_no, value).  When ``repair_expected_cols`` is set the slow-path
-    text repairs run before line splitting."""
-    bin_df = spark.read.format("binaryFile").load(zip_path)
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                with zipfile.ZipFile(io.BytesIO(row["content"])) as zf:
-                    text = zf.read(member).decode("utf-8", errors="replace")
-                if repair_expected_cols is not None:
-                    text, _ = repair_member_text(text, repair_expected_cols)
-                lines = text.split("\n")
-                if lines and lines[-1] == "":
-                    lines.pop()
-                yield pd.DataFrame(
-                    {
-                        "line_no": range(1, len(lines) + 1),
-                        "value": [ln.rstrip("\r") for ln in lines],
-                    }
-                )
-
-    lines_df = bin_df.select("content").mapInPandas(
-        extract, schema="line_no long, value string"
-    )
-    return lines_df.filter(F.col("line_no") > skip)
 
 
 def _typed_cast(raw: F.Column, tchar: str) -> F.Column:
@@ -235,20 +214,20 @@ def member_stats(
 
 
 def zip_lines_batch(
-    spark: SparkSession, zip_path: str, members: list[str], skip: int = 2
+    spark: SparkSession, zip_path: str, members: list[str]
 ) -> DataFrame:
     """Every listed member of one zip as ONE line frame (member,
     line_no, value), extracted in a single ``binaryFile`` pass and
     ``spread`` across the cluster: one zip = one ``binaryFile`` row =
     ONE task, so without the redistribution every downstream per-line
-    operation would run single-threaded inside the extraction task.
+    operation would run single-threaded inside the extraction task
+    (the audit measured warm 4.3 s vs 16.5 s without the spread at 80k
+    banks).
 
-    The ingest persists this frame, audits it with
-    :func:`lines_batch_stats` and parses every clean member from its
-    ``member`` slice — each bulk zip is decompressed into lines once.
-    Line values and the ``skip`` semantics match
-    :func:`zip_member_lines` (``line_no`` counts from 1 after the
-    skipped rows)."""
+    Every physical line is kept with its 1-based ``line_no`` (line
+    ends' ``\\r`` stripped); each consumer drops its own header rows
+    (:func:`member_slice`).  :class:`ZipFrame` persists it once per
+    zip for every reader."""
     bin_df = spark.read.format("binaryFile").load(zip_path)
     members = sorted(members)
 
@@ -261,12 +240,11 @@ def zip_lines_batch(
                         lines = text.split("\n")
                         if lines and lines[-1] == "":
                             lines.pop()
-                        lines = [ln.rstrip("\r") for ln in lines[skip:]]
                         yield pd.DataFrame(
                             {
                                 "member": m,
                                 "line_no": range(1, len(lines) + 1),
-                                "value": lines,
+                                "value": [ln.rstrip("\r") for ln in lines],
                             }
                         )
 
@@ -279,10 +257,13 @@ def zip_lines_batch(
     )
 
 
-def member_slice(lines_all: DataFrame, member: str) -> DataFrame:
+def member_slice(lines_all: DataFrame, member: str, skip: int = 2) -> DataFrame:
     """One member's (line_no, value) rows of a :func:`zip_lines_batch`
-    frame — the input :func:`parse_schedule_lines` takes."""
-    return lines_all.filter(F.col("member") == member).select("line_no", "value")
+    or :func:`repair_lines` frame after its first ``skip`` lines (2 for
+    a schedule; the POR reader passes the skip it sniffed)."""
+    return lines_all.filter(
+        (F.col("member") == member) & (F.col("line_no") > skip)
+    ).select("line_no", "value")
 
 
 def lines_batch_stats(
@@ -290,100 +271,156 @@ def lines_batch_stats(
     lines_all: DataFrame,
     colspecs: dict[str, list[tuple[str, str]]],
 ) -> dict[str, tuple[int, int]]:
-    """(n_bad_lines, n_problem_rows) for EVERY member of a
-    :func:`zip_lines_batch` frame in a single Spark job.
+    """(n_bad_lines, n_problem_rows) for EVERY member of ``colspecs``
+    over its data rows (``line_no > 2``) of a :func:`zip_lines_batch`
+    or :func:`repair_lines` frame, in one aggregation; the frame's
+    other members are not read.
 
-    The per-member column specs ride in as a broadcast (member, idx,
-    type) dimension, and both counters reduce map-side: posexplode
-    fans each line out to its fields, the typed-parse check joins its
-    type char, and partial aggregation collapses back to line
-    granularity before the (member, line) -> member shuffle.
+    Each member's type chars ride in a literal map, so a higher-order
+    function checks each row's fields where the row lies, and partial
+    aggregation leaves one row per (task, member) for the only shuffle.
     Semantics are identical to :func:`member_stats` (same NA tokens,
-    same date-sentinel handling, same try_cast lenience) — pinned by a
-    fixture parity test."""
-    from ffiec_pq_spark.session import local_frame
+    date sentinels and try_cast lenience) — pinned by parity tests."""
+    types = F.create_map(
+        *[
+            F.lit(x)
+            for m, spec in colspecs.items()
+            for x in (m, "".join(tchar for _, tchar in spec))
+        ]
+    )
 
-    spec_rows = [
-        (m, i, tchar)
-        for m, spec in colspecs.items()
-        for i, (_, tchar) in enumerate(spec)
-        if tchar in ("d", "i", "D")
-    ]
-    spec_df = local_frame(
-        spark, spec_rows or [("", -1, "c")], "member string, idx int, tchar string"
-    )
-    n_df = local_frame(
-        spark,
-        [(m, len(spec)) for m, spec in colspecs.items()],
-        "member string, n_cols int",
-    )
+    def fails(field: F.Column, i: F.Column) -> F.Column:
+        tchar = F.substr(F.col("types"), i + 1, F.lit(1))
+        raw = F.trim(field)
+        na_cleaned = F.when(raw.isin(*NA_TOKENS), F.lit(None)).otherwise(raw)
+        d_cleaned = F.when(
+            (tchar == "D") & na_cleaned.isin("0", "00000000"), F.lit(None)
+        ).otherwise(na_cleaned)
+        typed_null = (
+            F.when(tchar == "d", na_cleaned.try_cast("double").isNull())
+            .when(tchar == "i", na_cleaned.try_cast("int").isNull())
+            .when(tchar == "D", parse_yyyymmdd(na_cleaned).isNull())
+            .otherwise(F.lit(False))
+        )
+        return d_cleaned.isNotNull() & typed_null
+
     fields = F.split(F.regexp_replace(F.col("value"), "\t$", ""), "\t", -1)
-    per_field = lines_all.select(
-        "member", "line_no", F.size(fields).alias("nf"),
-        F.posexplode_outer(fields).alias("idx", "raw"),
-    ).join(F.broadcast(spec_df), ["member", "idx"], "left")
-    raw = F.trim(F.col("raw"))
-    na_cleaned = F.when(raw.isin(*NA_TOKENS), F.lit(None)).otherwise(raw)
-    d_cleaned = F.when(
-        (F.col("tchar") == "D") & na_cleaned.isin("0", "00000000"),
-        F.lit(None),
-    ).otherwise(na_cleaned)
-    typed_null = (
-        F.when(F.col("tchar") == "d", na_cleaned.try_cast("double").isNull())
-        .when(F.col("tchar") == "i", na_cleaned.try_cast("int").isNull())
-        .when(F.col("tchar") == "D", parse_yyyymmdd(na_cleaned).isNull())
-        .otherwise(F.lit(False))
-    )
-    fail = (
-        F.col("tchar").isNotNull()
-        & d_cleaned.isNotNull()
-        & typed_null
-    ).cast("long")
-    per_line = per_field.groupBy("member", "line_no").agg(
-        F.max(fail).alias("any_fail"), F.first("nf").alias("nf")
-    )
-    per_member = (
-        per_line.join(F.broadcast(n_df), "member")
+    rows = (
+        lines_all.filter(
+            F.col("member").isin(list(colspecs)) & (F.col("line_no") > 2)
+        )
+        .select(
+            "member",
+            fields.alias("fields"),
+            F.element_at(types, F.col("member")).alias("types"),
+        )
         .groupBy("member")
         .agg(
-            F.sum((F.col("nf") != F.col("n_cols")).cast("long")).alias("bad"),
-            F.sum("any_fail").alias("problems"),
+            F.sum((F.size("fields") != F.length("types")).cast("long")).alias("bad"),
+            F.sum(
+                F.exists(F.transform("fields", fails), lambda f: f).cast("long")
+            ).alias("problems"),
         )
         .collect()
     )
     out = {m: (0, 0) for m in colspecs}  # empty members produce no rows
-    for r in per_member:
-        out[r["member"]] = (int(r["bad"] or 0), int(r["problems"] or 0))
+    for r in rows:
+        out[r["member"]] = (int(r["bad"]), int(r["problems"]))
     return out
 
 
-def zip_stats_batch(
-    spark: SparkSession,
-    zip_path: str,
-    colspecs: dict[str, list[tuple[str, str]]],
-    skip: int = 2,
-) -> dict[str, tuple[int, int]]:
-    """(n_bad_lines, n_problem_rows) for EVERY listed member of one zip
-    in a single Spark job: :func:`lines_batch_stats` over one
-    :func:`zip_lines_batch` extraction.
+def repair_lines(lines_all: DataFrame, n_cols: dict[str, int]) -> DataFrame:
+    """The slow path for the members of ``n_cols`` ({member: field
+    count}) in ONE ``groupBy("member").applyInPandas``: each member's
+    lines, joined in ``line_no`` order, go through
+    :func:`repair_member_text` and come back after the two header rows
+    as (member, line_no from 3, value, tags that fired).  The joined
+    text is the CRLF-normalised member text minus its final newline
+    (which the repair never joins) unless a line ends in 2+ ``\\r``."""
 
-    The per-member :func:`member_stats` runs one ``collect`` per member
-    (two when the repair path re-checks) on a sequentially-extracted
-    line frame — at 100k members the job-scheduling overhead dominates
-    the audit.  This is the stand-alone form; the ingest instead
-    persists the extraction and parses the clean members from the same
-    frame (``operators/process.py``), so no member is decompressed
-    twice.
+    def repair(pdf: pd.DataFrame) -> pd.DataFrame:
+        member = pdf["member"].iat[0]
+        text = "\n".join(pdf.sort_values("line_no")["value"])
+        text, tags = repair_member_text(text, n_cols[member])
+        lines = text.split("\n")[2:]
+        return pd.DataFrame(
+            {
+                "member": member,
+                "line_no": range(3, len(lines) + 3),
+                "value": lines,
+                "tags": [tags] * len(lines),
+            }
+        )
 
-    The ``spread`` of the extracted lines is what parallelizes the
-    field pass: the round-12 stage breakdown measured the audit as the
-    ingest's top stage (6.6 s of 23.7 s at 10k banks) with 31 idle
-    cores; measured warm 4.3 s vs 16.5 s without the spread at 80k
-    banks (8x), and the extraction itself is 0.4 s, so the residual is
-    the distributed field pass."""
-    return lines_batch_stats(
-        spark, zip_lines_batch(spark, zip_path, list(colspecs), skip), colspecs
+    return (
+        lines_all.filter(F.col("member").isin(list(n_cols)))
+        .groupBy("member")
+        .applyInPandas(
+            repair,
+            schema="member string, line_no long, value string, tags array<string>",
+        )
     )
+
+
+class ZipFrame:
+    """One zip's persisted :func:`zip_lines_batch` frame over the listed
+    members, their heads (:func:`zip_member_heads`) and, after
+    :meth:`audit`, the schedule members' (n_bad, n_problems) counters
+    and, on demand, the repaired rows.  Leaving the ``with`` block (or
+    :meth:`release`) unpersists both frames."""
+
+    def __init__(self, spark: SparkSession, zip_path: str, members: list[str]):
+        self.spark = spark
+        self.zip_path = zip_path
+        self.heads = zip_member_heads(zip_path, members)
+        self.lines = zip_lines_batch(spark, zip_path, members).persist()
+        self.colspecs: dict[str, list[tuple[str, str]]] = {}
+        self.stats: dict[str, tuple[int, int]] = {}
+        self.flagged: list[str] = []  # members with a bad-field-count line
+        self.tags: dict[str, list[str]] = {}  # flagged members, once repaired
+        self.repaired: DataFrame | None = None
+        self._repair_lock = threading.Lock()
+
+    def audit(self, colspecs: dict[str, list[tuple[str, str]]]) -> None:
+        """Audit the schedule members of ``colspecs`` in one
+        :func:`lines_batch_stats` call."""
+        self.colspecs = colspecs
+        self.stats = lines_batch_stats(self.spark, self.lines, colspecs)
+        self.flagged = [m for m in colspecs if self.stats[m][0]]
+
+    def repaired_rows(self) -> DataFrame:
+        """The flagged members' :func:`repair_lines` rows, persisted: the
+        first caller repairs them all and re-checks them in one
+        :func:`lines_batch_stats` call that ``observe``s their tags;
+        concurrent callers wait for it, clean members' readers never."""
+        from pyspark.sql import Observation
+
+        with self._repair_lock:
+            if self.repaired is None:
+                specs = {m: self.colspecs[m] for m in self.flagged}
+                self.repaired = repair_lines(
+                    self.lines, {m: len(spec) for m, spec in specs.items()}
+                ).persist()
+                obs = Observation()
+                checked = self.repaired.observe(
+                    obs, F.collect_set(F.struct("member", "tags")).alias("tags")
+                )
+                self.stats.update(lines_batch_stats(self.spark, checked, specs))
+                tags = {m: [] for m in specs}
+                tags.update({r["member"]: list(r["tags"]) for r in obs.get["tags"]})
+                self.tags = tags
+        return self.repaired
+
+    def release(self) -> None:
+        self.lines.unpersist()
+        if self.repaired is not None:
+            self.repaired.unpersist()
+
+    def __enter__(self) -> "ZipFrame":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
 
 
 def read_call_schedule(
@@ -396,65 +433,31 @@ def read_call_schedule(
     """Read one schedule TSV member -> (typed DataFrame, audit).
 
     Two-phase: strict parse first; on any bad-field-count line, re-read
-    with text repairs (the reference's exact strategy).  See
-    :func:`read_schedule_member` for the line-frame lifecycle."""
-    header = read_zip_member_header(zip_path, member)
-    colspec = make_colspec(header, type_dict, overrides)
-    return read_schedule_member(spark, zip_path, member, colspec)
+    with text repairs (the reference's exact strategy).  The stand-alone
+    form of the ingest's read: it builds a :class:`ZipFrame` for this
+    one member, and ``audit['unpersist']()`` releases it once the
+    result has been consumed."""
+    frame = ZipFrame(spark, zip_path, [member])
+    names, _ = frame.heads[member]
+    frame.audit({member: make_colspec(names, type_dict, overrides)})
+    df, audit = read_schedule_member(frame, member)
+    audit["unpersist"] = frame.release
+    return df, audit
 
 
-def read_schedule_member(
-    spark: SparkSession,
-    zip_path: str,
-    member: str,
-    colspec: list[tuple[str, str]],
-    precomputed_stats: tuple[int, int] | None = None,
-    batch_lines: DataFrame | None = None,
-) -> tuple[DataFrame, dict]:
-    """:func:`read_call_schedule` for a member whose colspec is already
-    built.
-
-    ``precomputed_stats`` and ``batch_lines`` come together: the
-    (n_bad, n_problems) pair :func:`lines_batch_stats` took from the
-    zip's shared :func:`zip_lines_batch` frame, and that frame.  They
-    replace this member's own stats job, and a clean member (no
-    bad-field-count line) parses its slice of the frame instead of
-    decompressing the member again, so it costs no Spark job until the
-    terminal write.  Without them the member is extracted, cached and
-    audited on its own.
-
-    A member that needs repair is re-extracted on its own with the text
-    repairs, and that line DataFrame is CACHED (the re-check and the
-    downstream parse would otherwise each re-decompress the member).
-    The caller releases it via ``audit['unpersist']()`` once the wide
-    output is written; releasing ``batch_lines`` is the caller's."""
-    n = len(colspec)
-    audit: dict = {"zipfile": zip_path, "file": member, "repairs": [], "ok": True}
-
-    if precomputed_stats is not None:
-        n_bad, n_problems = precomputed_stats
-        if not n_bad:
-            audit["n_problems"] = n_problems
-            if n_problems:
-                audit["repairs"] = ["coerced-invalid-values"]
-            audit["unpersist"] = lambda: None
-            lines = member_slice(batch_lines, member)
-            return parse_schedule_lines(lines, colspec), audit
-    else:
-        lines = zip_member_lines(spark, zip_path, member, skip=2).cache()
-        n_bad, n_problems = member_stats(lines, colspec)
-        if n_bad:
-            lines.unpersist()
-    if n_bad:
-        lines = zip_member_lines(
-            spark, zip_path, member, skip=2, repair_expected_cols=n
-        ).cache()
-        audit["repairs"] = ["newline-gsub", "tab-repair"]
-        n_bad, n_problems = member_stats(lines, colspec)
-        if n_bad:
-            audit["ok"] = False
-    audit["n_problems"] = n_problems
+def read_schedule_member(frame: ZipFrame, member: str) -> tuple[DataFrame, dict]:
+    """One audited schedule member of ``frame`` -> (typed DataFrame,
+    audit): a clean member parses its slice of the zip's line frame and
+    costs no Spark job until the caller's terminal action; a flagged
+    one parses its slice of :meth:`ZipFrame.repaired_rows`.  ``ok`` is
+    false when a line still has the wrong field count after the
+    repair."""
+    lines = frame.repaired_rows() if member in frame.flagged else frame.lines
+    n_bad, n_problems = frame.stats[member]
+    repairs = list(frame.tags.get(member, []))
     if n_problems:
-        audit["repairs"] = sorted({*audit["repairs"], "coerced-invalid-values"})
-    audit["unpersist"] = lines.unpersist
-    return parse_schedule_lines(lines, colspec), audit
+        repairs = sorted({*repairs, "coerced-invalid-values"})
+    audit = {"zipfile": frame.zip_path, "file": member, "repairs": repairs,
+             "ok": not n_bad, "n_problems": n_problems}
+    colspec = frame.colspecs[member]
+    return parse_schedule_lines(member_slice(lines, member), colspec), audit

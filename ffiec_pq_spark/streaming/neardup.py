@@ -92,11 +92,7 @@ def run_neardup_stream(
         atexit.register(shutil.rmtree, workdir, ignore_errors=True)
     src = os.path.join(workdir, "src")
     if fresh:
-        (
-            docs.repartition(4, F.col("doc_id") % 4)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
+        stage_chunks(docs, F.pmod(F.col("doc_id"), F.lit(4)), 4, workdir)
     state_dir = os.path.join(workdir, "band_state")
     n_batches = {"n": 0}
 
@@ -146,6 +142,9 @@ def run_neardup_stream(
     # band_state.old and fail the read below even though the full
     # state survived on disk
     _recover_state_swap(state_dir)
+    if not os.path.isdir(state_dir):
+        # empty corpus: no file was staged, so no batch ran
+        return spark.createDataFrame([], "doc_id long, dup_of long")
     state = spark.read.parquet(state_dir)
     first_seen = state.groupBy("band", "bkey").agg(
         F.min("id").alias("first_id")

@@ -58,6 +58,7 @@ def running_totals_tws(spark, sf_dir: str):
 
     from ffiec_pq_spark.session import ensure_session_confs, load_table
     from ffiec_pq_spark.streaming.events import read_event_stream
+    from ffiec_pq_spark.streaming.state import stage_chunks
 
     class RunningTotals(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -82,12 +83,7 @@ def running_totals_tws(spark, sf_dir: str):
     ev = load_table(spark, sf_dir, "events")
     workdir = tempfile.mkdtemp(prefix="stream_tws_")
     try:
-        src = os.path.join(workdir, "src")
-        (
-            ev.repartition(4, F.col("event_id") % 4)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
+        src = stage_chunks(ev, F.pmod(F.col("event_id"), F.lit(4)), 4, workdir)
         emitted = (
             read_event_stream(spark, src)
             .groupBy("user_id")

@@ -569,11 +569,12 @@ def test_zip_stats_batch_parity_fuzz(spark, tmp_path_factory, rows_a, rows_b, cr
     fields, wrong field counts, CRLF endings."""
     import zipfile as _zf
 
+    from ffiec_fixtures import member_lines_frame
     from ffiec_pq_spark.sources.tsv import (
+        lines_batch_stats,
         make_colspec,
         member_stats,
-        zip_member_lines,
-        zip_stats_batch,
+        zip_lines_batch,
     )
 
     header = ["IDRSSD", "VAL_D", "DT_D", "TXT_C"]
@@ -597,9 +598,11 @@ def test_zip_stats_batch_parity_fuzz(spark, tmp_path_factory, rows_a, rows_b, cr
         for m in ("Schedule A 03312024(1 of 2).txt",
                   "Schedule A 03312024(2 of 2).txt")
     }
-    batch = zip_stats_batch(spark, zp, colspecs)
+    batch = lines_batch_stats(
+        spark, zip_lines_batch(spark, zp, list(colspecs)), colspecs
+    )
     for m, spec in colspecs.items():
-        expect = member_stats(zip_member_lines(spark, zp, m, skip=2), spec)
+        expect = member_stats(member_lines_frame(spark, zp, m, skip=2), spec)
         assert batch[m] == expect, (m, batch[m], expect)
 
 

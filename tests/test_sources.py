@@ -113,20 +113,24 @@ def test_zip_stats_batch_matches_member_stats(spark, tmp_path):
     (bad, problems) counters member-for-member — including the broken
     zip's short row and malformed numeric — and every clean member's
     slice of the shared line frame must parse to the same rows as the
-    member's own extraction (the ingest parses clean members from
-    that slice)."""
+    member's own lines read straight from the zip (the ingest parses
+    clean members from that slice)."""
     from collections import Counter
 
-    from ffiec_fixtures import TYPE_DICT, make_broken_zip, make_call_zip
+    from ffiec_fixtures import (
+        TYPE_DICT,
+        make_broken_zip,
+        make_call_zip,
+        member_lines_frame,
+    )
     from ffiec_pq_spark.sources.tsv import (
+        lines_batch_stats,
         make_colspec,
         member_slice,
         member_stats,
         parse_schedule_lines,
-        read_zip_member_header,
         zip_lines_batch,
-        zip_member_lines,
-        zip_stats_batch,
+        zip_member_heads,
     )
 
     for builder in (make_call_zip, make_broken_zip):
@@ -137,14 +141,16 @@ def test_zip_stats_batch_matches_member_stats(spark, tmp_path):
 
         with _zf.ZipFile(zp) as z:
             members = [m for m in z.namelist() if "POR" not in m]
+        heads = zip_member_heads(zp, members)
         colspecs = {
-            m: make_colspec(read_zip_member_header(zp, m), TYPE_DICT)
-            for m in members
+            m: make_colspec(heads[m][0], TYPE_DICT) for m in members
         }
-        batch = zip_stats_batch(spark, zp, colspecs)
+        batch = lines_batch_stats(
+            spark, zip_lines_batch(spark, zp, list(colspecs)), colspecs
+        )
         lines_all = zip_lines_batch(spark, zp, members)
         for m in members:
-            lines = zip_member_lines(spark, zp, m, skip=2)
+            lines = member_lines_frame(spark, zp, m, skip=2)
             expect = member_stats(lines, colspecs[m])
             assert batch[m] == expect, (builder.__name__, m, batch[m], expect)
             if expect[0] == 0:
@@ -153,83 +159,6 @@ def test_zip_stats_batch_matches_member_stats(spark, tmp_path):
                 ).collect()
                 want = parse_schedule_lines(lines, colspecs[m]).collect()
                 assert Counter(got) == Counter(want), (builder.__name__, m)
-
-
-def test_zip_lines_python_datasource(spark, tmp_path):
-    """Spark 4 Python Data Source over the bulk zip: one input
-    partition PER MEMBER (executor-parallel, no driver extraction),
-    line-exact parity with a direct zipfile read, and fnmatch member
-    filtering."""
-    import io
-    import zipfile
-
-    from ffiec_pq_spark.sources.zip_datasource import ZipLinesDataSource
-    from ffiec_pq_spark.testing.fixtures import make_call_zip
-
-    spark.dataSource.register(ZipLinesDataSource)
-    zp = make_call_zip(str(tmp_path))
-    df = spark.read.format("ffiec_zip_lines").option("path", zp).load()
-    assert df.rdd.getNumPartitions() == 4  # one task per member
-    got = sorted(
-        (r["member"], r["line_no"], r["line"]) for r in df.collect()
-    )
-    direct = []
-    with zipfile.ZipFile(zp) as zf:
-        for n in sorted(x for x in zf.namelist() if not x.endswith("/")):
-            with zf.open(n) as raw:
-                text = io.TextIOWrapper(raw, encoding="utf-8", errors="replace")
-                for i, line in enumerate(text):
-                    direct.append((n, i, line.rstrip("\r\n")))
-    assert got == sorted(direct) and len(got) > 0
-    ri = (
-        spark.read.format("ffiec_zip_lines")
-        .option("path", zp)
-        .option("pattern", "*Schedule RI*")
-        .load()
-    )
-    assert ri.select("member").distinct().count() == 2
-
-
-def test_zip_datasource_pipeline_equivalence(spark, tmp_path):
-    """The Python Data Source route must feed the typed TSV parser
-    with EXACTLY the rows the default mapInPandas route produces: same
-    member, same skip semantics, same typed values — so either scan
-    can back the ETL without a semantic fork."""
-    import zipfile as _zf
-
-    from ffiec_fixtures import TYPE_DICT, make_call_zip
-
-    from ffiec_pq_spark.sources.tsv import (
-        make_colspec,
-        parse_schedule_lines,
-        read_zip_member_header,
-        zip_member_lines,
-    )
-    from ffiec_pq_spark.sources.zip_datasource import ZipLinesDataSource
-
-    spark.dataSource.register(ZipLinesDataSource)
-    zp = make_call_zip(str(tmp_path))
-    with _zf.ZipFile(zp) as z:
-        member = next(m for m in z.namelist() if "POR" not in m)
-    colspec = make_colspec(read_zip_member_header(zp, member), TYPE_DICT)
-
-    via_mip = parse_schedule_lines(
-        zip_member_lines(spark, zp, member, skip=2), colspec
-    )
-    ds_lines = (
-        spark.read.format("ffiec_zip_lines")
-        .option("path", zp)
-        .load()
-        .filter(F.col("member") == member)
-        .filter(F.col("line_no") >= 2)  # 0-based: drops header+dict rows
-        .select(F.col("line").alias("value"))
-    )
-    via_ds = parse_schedule_lines(ds_lines, colspec)
-    assert via_ds.schema == via_mip.schema
-    key = lambda r: tuple(str(v) for v in r)  # noqa: E731
-    assert sorted(map(key, via_ds.collect())) == sorted(
-        map(key, via_mip.collect())
-    )
 
 
 # --- round-10: adversarial repair-path fuzz (S4) ---

@@ -34,6 +34,21 @@ def test_only_the_harness_calls_foreach_batch():
     assert offenders == []
 
 
+def test_streams_stage_through_stage_chunks():
+    """Stream inputs are staged with ``stage_chunks``: a hash
+    ``repartition(4, key % 4)`` write puts two of the four keys into
+    one file (``spark.range(1000)`` splits 250/500/250), so no module
+    stages that way."""
+    offenders = []
+    for root, _dirs, files in os.walk(PKG_DIR):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(root, name)) as fh:
+                    if "repartition(4, F.col(" in fh.read():
+                        offenders.append(name)
+    assert offenders == []
+
+
 def test_stage_chunks_order_mtimes_and_empty_chunk(spark, tmp_path):
     from ffiec_pq_spark.streaming.state import stage_chunks
 
