@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+import time
 import types
 from typing import Any, Callable
 
@@ -91,12 +93,21 @@ class Memo(dict):
     string), which is also what :func:`resident_state_report` counts
     as disk bytes.  Storing under an existing key replaces the value
     without dropping it.  A hit is one dict lookup; eviction runs only
-    on stores."""
+    on stores.
+
+    :meth:`get_or_build` counts its traffic for the report: ``hits``,
+    ``misses`` and ``build_s`` (seconds spent in builds, including
+    failed ones).  The counters cover the process's lifetime and
+    survive :meth:`clear`; direct dict access is not counted."""
 
     def __init__(self, name: str, drop: Callable[[Any], None] = _drop_workdir):
         super().__init__()
         self.name = name
         self.drop = drop
+        self.hits = self.misses = 0
+        self.build_s = 0.0
+        # the ingest's group threads share memos
+        self._count_lock = threading.Lock()
         _MEMOS[name] = self
 
     def __setitem__(self, key, value) -> None:
@@ -108,9 +119,18 @@ class Memo(dict):
     def get_or_build(self, key, build: Callable[[], Any]):
         """The value under ``key``, building and storing it on a miss."""
         value = self.get(key, _MISSING)
-        if value is _MISSING:
+        if value is not _MISSING:
+            with self._count_lock:
+                self.hits += 1
+            return value
+        t0 = time.perf_counter()
+        try:
             value = build()
-            self[key] = value
+        finally:
+            with self._count_lock:
+                self.misses += 1
+                self.build_s += time.perf_counter() - t0
+        self[key] = value
         return value
 
     def clear(self) -> None:
@@ -139,8 +159,9 @@ def _dir_bytes(path: str) -> int:
 
 def resident_state_report(spark=None) -> dict:
     """AUDIT the resident-state footprint: per registered memo, the
-    entry count and the on-disk bytes of its values' backing
-    directories; plus, when a session is passed, the Spark storage
+    entry count, the on-disk bytes of its values' backing directories
+    and its :meth:`Memo.get_or_build` counters (``hits``, ``misses``,
+    ``build_s``); plus, when a session is passed, the Spark storage
     totals (memory + disk bytes of every cached/checkpointed RDD via
     the storage-status API — the memoized ``localCheckpoint``
     relations live there).
@@ -159,7 +180,10 @@ def resident_state_report(spark=None) -> dict:
             wd = _workdir(v)
             if wd and os.path.isdir(wd):
                 disk += _dir_bytes(wd)
-        report[name] = {"entries": len(memo), "disk_bytes": disk}
+        report[name] = {
+            "entries": len(memo), "disk_bytes": disk,
+            "hits": memo.hits, "misses": memo.misses, "build_s": memo.build_s,
+        }
     if spark is not None:
         mem = dsk = n = 0
         for info in spark.sparkContext._jsc.sc().getRDDStorageInfo():

@@ -11,7 +11,12 @@ reproducible per round instead of an ad-hoc measurement.
 
 Usage: python scripts/etl_bench.py [n_banks] [n_items] [n_parts] [n_schedules]
 Prints one JSON line {"n_banks":..., "n_items":..., "cells":...,
-"ingest_sec":..., "cells_per_sec":..., "stage_sec": {...}}.
+"session_start_sec":..., "ingest_sec":..., "cells_per_sec":...,
+"stage_sec": {...}}.
+
+``session_start_sec`` is the one-shot cost before the first zip:
+``get_spark`` (JVM start, see the class-data archive in
+``ffiec_pq_spark/session.py``) plus its warm-up job.
 
 ``stage_sec`` breaks the ingest down by pipeline stage
 (manifest/validate, whole-zip audit, parse+repair, combine+wide
@@ -114,8 +119,10 @@ def main() -> int:
         zp, type_dict = make_big_zip(
             work, n_banks, n_items, n_parts, n_schedules
         )
+        t0 = time.perf_counter()
         spark = get_spark("ffiec_etl_bench")
         spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
+        session_start_sec = round(time.perf_counter() - t0, 2)
         def one_ingest(out_name: str) -> tuple[float, dict, int]:
             clock = StageClock()
             t0 = time.perf_counter()
@@ -143,6 +150,7 @@ def main() -> int:
                     "n_schedules": n_schedules,
                     "cells": cells,
                     "long_rows": long_rows,
+                    "session_start_sec": session_start_sec,
                     "ingest_sec": sec,
                     "cells_per_sec": round(cells / sec),
                     "stage_sec": stage_sec,

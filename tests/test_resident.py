@@ -7,6 +7,7 @@ import os
 import pkgutil
 import shutil
 import sys
+import threading
 
 import pytest
 
@@ -61,6 +62,50 @@ def test_memo_get_or_build_memoizes_none(scratch_registry):
     assert m.get_or_build((None, "/d", ()), build) is None
     assert m.get_or_build((None, "/d", ()), build) is None
     assert calls == [1]
+
+
+def test_memo_counts_hits_misses_and_build_time(scratch_registry):
+    m = resident.Memo("t_counts")
+
+    def fail():
+        raise ValueError("build failed")
+
+    with pytest.raises(ValueError):
+        m.get_or_build((None, "/d", ("v1",)), fail)
+    for _ in range(3):
+        m.get_or_build((None, "/d", ("v1",)), lambda: "x")
+    m.get_or_build((None, "/d", ("v2",)), lambda: "y")
+    assert (m.hits, m.misses) == (2, 3) and m.build_s > 0.0
+    m.clear()  # counters are process-lifetime traffic, not entries
+    entry = resident.resident_state_report()["t_counts"]
+    assert entry == {
+        "entries": 0, "disk_bytes": 0, "hits": 2, "misses": 3,
+        "build_s": m.build_s,
+    }
+
+
+def test_memo_counters_lose_no_concurrent_hit(scratch_registry):
+    m = resident.Memo("t_threads")
+    key = (None, "/d", ("v",))
+    m.get_or_build(key, lambda: "x")
+    n_threads, n_calls = 16, 2000
+
+    def hammer():
+        for _ in range(n_calls):
+            m.get_or_build(key, lambda: "unused")
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert (m.hits, m.misses) == (n_threads * n_calls, 1)
 
 
 def test_memo_default_drop_removes_workdirs(scratch_registry, tmp_path):
