@@ -18,12 +18,17 @@ Like the reference (which writes temp wide parquet and re-scans it
 with DuckDB), the long build re-reads the written wide parquet files:
 they are deliverables anyway, and a scan of finished columnar files is
 cheaper than re-running each wide table's parse + combine lineage.
+Each group reads its file back with the schema it wrote (no inference
+job) and builds its per-type unpivot plans in its own thread; the
+item-schedule table and the process log are written beside the long
+build, which they do not read.
 
 Each zip's central directory is parsed once (``zip_member_rows``) and
-its schedule and POR members are decompressed into lines once, into
-one persisted frame (``sources/tsv.py`` ``ZipFrame``): the audit, the
-grouped-map repair, every part's parse and the POR stage (on the ETL
-thread pool, beside the schedule groups) all read slices of it.
+validated on the driver, and its schedule and POR members are
+decompressed, and repaired, into lines once, into one persisted frame
+(``sources/tsv.py`` ``ZipFrame``): the audit, every part's parse and the
+POR stage (on the ETL thread pool, beside the schedule groups) all read
+slices of it.
 """
 
 from __future__ import annotations
@@ -43,11 +48,7 @@ from pyspark.sql import types as T
 from ffiec_pq_spark.functions.scalars import pct_to_prop, pct_violation
 from ffiec_pq_spark.operators.combine import combine_parts
 from ffiec_pq_spark.operators.reshape import make_long_by_type
-from ffiec_pq_spark.sources.manifest import (
-    member_frame,
-    resolve_n_parts,
-    zip_member_rows,
-)
+from ffiec_pq_spark.sources.manifest import validate_parts, zip_member_rows
 from ffiec_pq_spark.sources.parquet import write_single_parquet
 from ffiec_pq_spark.sources.por import read_por
 from ffiec_pq_spark.sources.tsv import (
@@ -234,11 +235,7 @@ def _zip_schedules(
     submitted to ``pool``."""
     zip_path = frame.zip_path
     with clock.stage("manifest_validate"):
-        manifest = member_frame(spark, members)
-        validation = {
-            (r["schedule"], r["date"]): r.asDict()
-            for r in resolve_n_parts(manifest).collect()
-        }
+        validation = {(v["schedule"], v["date"]): v for v in validate_parts(members)}
     sched_files = _schedule_rows(members)
     groups: dict[tuple, list] = {}
     for r in sched_files:
@@ -247,17 +244,17 @@ def _zip_schedules(
     def run_group(schedule: str, d, rows) -> tuple[dict | None, dict]:
         """One (schedule, date) group -> (wide output | None, log row)."""
         inner_files = [r.file for r in rows]
+
+        def log_row(ok: bool, repairs: list, n_problems=None) -> dict:
+            return {
+                "zipfile": zip_path, "schedule": schedule, "date": d,
+                "kind": "schedule", "ok": ok, "repairs": repairs,
+                "n_problems": n_problems, "inner_files": inner_files,
+            }
+
         val = validation.get((schedule, d), {})
         if val.get("errors"):
-            return None, {
-                "zipfile": zip_path,
-                "schedule": schedule,
-                "date": d,
-                "kind": "schedule",
-                "ok": False,
-                "repairs": list(val["errors"]),
-                "inner_files": inner_files,
-            }
+            return None, log_row(False, list(val["errors"]))
         parts, repairs, all_ok = [], [], True
         n_problems = 0
         with clock.stage("parse_repair"):
@@ -272,16 +269,9 @@ def _zip_schedules(
             # R/ffeic_read.R:654-685): an unrepairable member blocks the
             # whole (schedule, date) output; the failure is logged, not
             # silently partial
-            return None, {
-                "zipfile": zip_path,
-                "schedule": schedule,
-                "date": d,
-                "kind": "schedule",
-                "ok": False,
-                "repairs": sorted({*repairs, "unrepairable"}),
-                "n_problems": n_problems,
-                "inner_files": inner_files,
-            }
+            return None, log_row(
+                False, sorted({*repairs, "unrepairable"}), n_problems
+            )
         with clock.stage("combine_write_wide"):
             wide = combine_parts(parts, keys=["IDRSSD"])
             wide = wide.withColumn("date", F.lit(d).cast("date"))
@@ -299,28 +289,20 @@ def _zip_schedules(
                 if os.path.exists(out_path):
                     os.remove(out_path)
                 raise
+        with clock.stage("long_build"):
+            longs = read_wide_long(spark, out_path, wide.schema)
         output = {
             "schedule": schedule, "date": d, "path": out_path,
-            "inner_files": inner_files,
+            "inner_files": inner_files, "long": longs,
         }
-        return output, {
-            "zipfile": zip_path,
-            "schedule": schedule,
-            "date": d,
-            "kind": "schedule",
-            "ok": True,
-            "repairs": sorted(set(repairs)),
-            "n_problems": n_problems,
-            "inner_files": inner_files,
-        }
+        return output, log_row(True, sorted(set(repairs)), n_problems)
 
-    # whole-zip audit: every member's (bad, problems) counters in ONE
-    # Spark job (sources/tsv.py lines_batch_stats) instead of one
-    # collect per member — at production member counts the per-member
-    # scheduling overhead dominates the audit otherwise.  The first
-    # group with a flagged member repairs all of them at once, while
-    # the clean groups go ahead.  Colspecs come from the frame's
-    # driver-side head read.
+    # whole-zip audit: every member's (bad, problems) counters, after
+    # the extraction's repairs, and the repair tags in ONE Spark job
+    # (sources/tsv.py lines_batch_stats) instead of one collect per
+    # member — at production member counts the per-member scheduling
+    # overhead dominates the audit otherwise.  Colspecs come from the
+    # frame's driver-side head read.
     with clock.stage("audit_batch"):
         colspecs = {
             r.file: make_colspec(frame.heads[r.file][0], type_dict)
@@ -339,17 +321,25 @@ def _zip_schedules(
     return outputs, log_rows
 
 
-def make_long_pqs(
-    spark: SparkSession, wide_outputs: list[dict], out_dir: str
-) -> dict[str, str]:
+def read_wide_long(
+    spark: SparkSession, path: str, schema: T.StructType
+) -> dict[str, DataFrame]:
+    """The per-type long plans (unpivot by value type, NULLs dropped) of
+    the wide file at ``path``, read back with the ``schema`` it was
+    written with: a schema-less read runs one inference job per file."""
+    wide = spark.read.schema(schema).parquet(path)
+    return make_long_by_type(wide, ids=["IDRSSD", "date"])
+
+
+def make_long_pqs(wide_outputs: list[dict], out_dir: str) -> dict[str, str]:
     """Stage 3: type-partitioned long EAV tables across all wide outputs
-    (reference make_long_pq, R/ffiec_make_long_pqs.R:103-115): unpivot by
-    value type, drop NULLs, distinct, assert PK, one parquet per type."""
+    (reference make_long_pq, R/ffiec_make_long_pqs.R:103-115): each
+    output's per-type plans (``long``, from :func:`read_wide_long`) are
+    unioned by type, deduplicated, PK-asserted and written as one
+    parquet per type."""
     by_type: dict[str, list[DataFrame]] = {}
     for out in wide_outputs:
-        wide = spark.read.parquet(out["path"])
-        longs = make_long_by_type(wide, ids=["IDRSSD", "date"])
-        for t, df in longs.items():
+        for t, df in out["long"].items():
             by_type.setdefault(t, []).append(df)
 
     def build_type(t: str, dfs: list[DataFrame]) -> tuple[str, str]:
@@ -473,7 +463,7 @@ def process_zip_por(
     r = _por_row(zip_member_rows(zip_path))
     if r is None:
         return None, []
-    with ZipFrame(spark, zip_path, [r.file]) as frame:
+    with ZipFrame(spark, zip_path, [], por=r.file) as frame:
         return _zip_por(frame, r, out_dir)
 
 
@@ -607,10 +597,11 @@ def ffiec_process(
     unrepairable member are logged and skipped instead of written.
     ``clock``: optional :class:`StageClock` accumulating per-stage
     seconds (manifest/validate, audit, parse, combine+wide-write, POR,
-    long build, schedule coverage, log write) for the ETL bench."""
+    long build, schedule coverage, log write) for the ETL bench.  Each
+    ``wide`` output carries its file's per-type long plans (``long``)."""
     clock = clock or _NULL_CLOCK
     os.makedirs(out_dir, exist_ok=True)
-    all_wide, all_logs, all_long, por_paths = [], [], {}, []
+    all_wide, all_logs, por_paths = [], [], []
 
     def por_stage(frame: ZipFrame, r):
         if r is None:
@@ -618,15 +609,38 @@ def ffiec_process(
         with clock.stage("por"):
             return _zip_por(frame, r, out_dir)
 
+    def write_log() -> DataFrame:
+        with clock.stage("log_write"):
+            rows = [tuple(r.get(f.name) for f in _LOG_SCHEMA.fields) for r in all_logs]
+            log_df = local_frame(spark, rows, _LOG_SCHEMA).orderBy("date", "schedule")
+            # the sink's repartition(1) would discard the orderBy above
+            # (round-robin shuffle); sort_by re-establishes it inside
+            # the single writing task so the process-log FILE stays
+            # sorted
+            write_single_parquet(
+                log_df,
+                os.path.join(out_dir, "ffiec_process_data.parquet"),
+                sort_by=["date", "schedule"],
+            )
+        return log_df
+
+    def build_long() -> dict[str, str]:
+        with clock.stage("long_build"):
+            return make_long_pqs(all_wide, out_dir)
+
+    def write_schedules() -> None:
+        with clock.stage("schedule_pq"):
+            make_schedule_pq(spark, all_wide, out_dir)
+
     with _etl_pool() as pool:
         for zp in zip_paths:
             members = zip_member_rows(zp)
             por_row = _por_row(members)
             files = [r.file for r in _schedule_rows(members)]
-            if por_row is not None:
-                files.append(por_row.file)
             with clock.stage("audit_batch"):
-                frame = ZipFrame(spark, zp, files)
+                frame = ZipFrame(
+                    spark, zp, files, por=por_row.file if por_row else None
+                )
             with frame:
                 # the POR stage shares only the line frame with the
                 # schedule groups: run it on the pool, overlapping them
@@ -644,28 +658,9 @@ def ffiec_process(
             if por_path:
                 por_paths.append(por_path)
             all_logs.extend(por_logs)
-    if all_wide:
-        with clock.stage("long_build"):
-            all_long = make_long_pqs(spark, all_wide, out_dir)
-        with clock.stage("schedule_pq"):
-            make_schedule_pq(spark, all_wide, out_dir)
-    with clock.stage("log_write"):
-        log_df = local_frame(
-            spark,
-            [
-                tuple(r.get(f.name) for f in _LOG_SCHEMA.fields)
-                for r in all_logs
-            ],
-            _LOG_SCHEMA,
-        ).orderBy("date", "schedule")
-        # the sink's repartition(1) would discard the orderBy above
-        # (round-robin shuffle); sort_by re-establishes it inside the
-        # single writing task so the process-log FILE stays sorted
-        write_single_parquet(
-            log_df,
-            os.path.join(out_dir, "ffiec_process_data.parquet"),
-            sort_by=["date", "schedule"],
-        )
+        tail = [write_log, *([build_long, write_schedules] if all_wide else [])]
+        log_df, *rest = _run_each(pool, lambda stage: stage(), [(t,) for t in tail])
+        all_long = rest[0] if rest else {}
     return {
         "wide": all_wide,
         "long": all_long,

@@ -1145,7 +1145,7 @@ def stream_probe_stats_fold(spark, sf_dir):
         "vec_id long, y long, margin_micro long, rank long, kept boolean"
     )
     key = dataset_key(spark, sf_dir)
-    st = _PROBE_STREAM_STATE.get(key)
+    st = _PROBE_STREAM_STATE.lookup(key)
     if st is None:
         if emb.isEmpty():
             return spark.createDataFrame([], out_schema)

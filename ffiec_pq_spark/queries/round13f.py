@@ -167,7 +167,7 @@ def stream_scorecard_fold(spark, sf_dir, chunk_order=None):
     ensure_session_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     key = dataset_key(spark, sf_dir)
-    st = _SC_STREAM_STATE.get(key) if chunk_order is None else None
+    st = _SC_STREAM_STATE.lookup(key) if chunk_order is None else None
     if st is None:
         if docs.isEmpty():
             return spark.createDataFrame([], _SC_OUT_SCHEMA)

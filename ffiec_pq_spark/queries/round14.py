@@ -293,7 +293,7 @@ def stream_rrf_fold(spark, sf_dir, chunk_order=None):
     ensure_session_confs(spark)
     corpus = _fusion_corpus(spark, sf_dir)
     key = dataset_key(spark, sf_dir) + (_n_cells(),)
-    st = _RRF_STREAM_STATE.get(key) if chunk_order is None else None
+    st = _RRF_STREAM_STATE.lookup(key) if chunk_order is None else None
     if st is None:
         if corpus.isEmpty():
             return spark.createDataFrame([], _RRF_OUT_SCHEMA)
@@ -506,7 +506,7 @@ def retrieval_unlearn(spark, sf_dir):
     ensure_session_confs(spark)
     corpus = _fusion_corpus(spark, sf_dir)
     key = dataset_key(spark, sf_dir) + (_n_cells(),)
-    st = _RRF_DEL_STATE.get(key)
+    st = _RRF_DEL_STATE.lookup(key)
     if st is None:
         if corpus.isEmpty():
             return spark.createDataFrame([], _RRF_OUT_SCHEMA)

@@ -671,7 +671,7 @@ def stream_ensemble_stats_fold(spark, sf_dir, chunk_order=None):
     ensure_session_confs(spark)
     pop = _ens_population(spark, sf_dir)
     key = dataset_key(spark, sf_dir)
-    st = _ENS_STREAM_STATE.get(key) if chunk_order is None else None
+    st = _ENS_STREAM_STATE.lookup(key) if chunk_order is None else None
     ephemeral = False
     if st is None:
         if pop.isEmpty():

@@ -536,7 +536,7 @@ def _ivfpq_model(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     key = dataset_key(None, sf_dir)
-    model = _IVFPQ_MODELS.get(key)
+    model = _IVFPQ_MODELS.lookup(key)
     if model is None:
         coarse = kmeans_fit(emb, k=_CO_K, dim=_DIM, iters=_CO_ITERS)
         resid = ivfpq_residuals(emb, coarse).persist()

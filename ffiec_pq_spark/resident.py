@@ -95,10 +95,11 @@ class Memo(dict):
     without dropping it.  A hit is one dict lookup; eviction runs only
     on stores.
 
-    :meth:`get_or_build` counts its traffic for the report: ``hits``,
-    ``misses`` and ``build_s`` (seconds spent in builds, including
-    failed ones).  The counters cover the process's lifetime and
-    survive :meth:`clear`; direct dict access is not counted."""
+    :meth:`get_or_build` and :meth:`lookup` count their traffic for the
+    report: ``hits``, ``misses`` and (``get_or_build`` only)
+    ``build_s``, the seconds spent in builds, including failed ones.
+    The counters cover the process's lifetime and survive
+    :meth:`clear`; direct dict access is not counted."""
 
     def __init__(self, name: str, drop: Callable[[Any], None] = _drop_workdir):
         super().__init__()
@@ -116,19 +117,28 @@ class Memo(dict):
         super().__setitem__(key, value)
         _drop_each(self.drop, dropped)
 
+    def lookup(self, key, default=None):
+        """The value under ``key``, or ``default``, counted as a hit or
+        a miss: for callers that build and store the value themselves
+        (a miss that may return early, or may not store)."""
+        value = self.get(key, _MISSING)
+        with self._count_lock:
+            if value is _MISSING:
+                self.misses += 1
+            else:
+                self.hits += 1
+        return default if value is _MISSING else value
+
     def get_or_build(self, key, build: Callable[[], Any]):
         """The value under ``key``, building and storing it on a miss."""
-        value = self.get(key, _MISSING)
+        value = self.lookup(key, _MISSING)
         if value is not _MISSING:
-            with self._count_lock:
-                self.hits += 1
             return value
         t0 = time.perf_counter()
         try:
             value = build()
         finally:
             with self._count_lock:
-                self.misses += 1
                 self.build_s += time.perf_counter() - t0
         self[key] = value
         return value
@@ -241,11 +251,12 @@ def tracked_persist(df):
     The reference is keyed on (application id, analyzed-plan
     ``semanticHash``) — the ``session.spread`` probe key — so a warm
     serve that re-persists an identical plan (Spark keeps the one
-    cache entry) replaces its reference instead of adding one."""
+    cache entry) finds the tracked reference, a counted hit, instead of
+    adding one."""
     out = df.persist()
     key = (
         out.sparkSession.sparkContext.applicationId,
         out._jdf.queryExecution().analyzed().semanticHash(),
     )
-    _TRACKED_PERSISTS[key] = out
+    _TRACKED_PERSISTS.get_or_build(key, lambda: out)
     return out

@@ -309,7 +309,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
     UTC-naive DuckDB oracle.  Pinned once per applicationId."""
     try:
         key = (spark.sparkContext.applicationId,)
-        if key in _CONFED_APPS:
+        if _CONFED_APPS.lookup(key):
             return
     except Exception:
         key = None

@@ -26,7 +26,6 @@ from datetime import datetime
 from glob import glob
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 BULK_ZIP_RE = re.compile(
@@ -121,41 +120,65 @@ def zip_member_manifest(spark: SparkSession, zip_paths: list[str]) -> DataFrame:
     return member_frame(spark, [r for zp in zip_paths for r in zip_member_rows(zp)])
 
 
-def resolve_n_parts(manifest: DataFrame) -> DataFrame:
+_PARTS_SCHEMA = (
+    "zipfile string, schedule string, date date, claimed long, "
+    "found_parts long, parts array<int>, errors array<string>"
+)
+
+
+def validate_parts(rows: list[ZipMember]) -> list[dict]:
     """Multipart validation (reference resolve_n_parts,
-    R/ffiec_process.R:106-130): per (zipfile, schedule, date) compare
-    claimed part count vs found parts; flag missing/duplicate/
-    non-contiguous part numbers.  Returns one row per group with an
-    ``errors`` array (empty = valid)."""
-    grouped = (
-        manifest.filter(F.col("schedule").isNotNull() & (F.col("schedule") != "por"))
-        .groupBy("zipfile", "schedule", "date")
-        .agg(
-            F.max("n_parts").alias("claimed_parts"),
-            F.count(F.lit(1)).alias("found_parts"),
-            F.sort_array(F.collect_list("part")).alias("parts"),
+    R/ffiec_process.R:106-130) over driver-side member rows: per
+    (zipfile, schedule, date) of the schedule members, compare the
+    claimed part count with the parts found and flag missing, duplicate
+    and non-contiguous part numbers.  One dict per group (the
+    :func:`resolve_n_parts` columns) with an ``errors`` list (empty =
+    valid).  The ingest runs it on the rows of :func:`zip_member_rows`,
+    so validation costs no Spark job."""
+    groups: dict[tuple, list[ZipMember]] = {}
+    for r in rows:
+        if r.schedule is not None and r.schedule != "por":
+            groups.setdefault((r.zipfile, r.schedule, r.date), []).append(r)
+    out = []
+    for (zipfile_, schedule, d), members in groups.items():
+        found = len(members)
+        claimed = max(
+            (r.n_parts for r in members if r.n_parts is not None), default=found
         )
-        .withColumn(
-            "claimed", F.coalesce(F.col("claimed_parts"), F.col("found_parts"))
-        )
+        # an unpartitioned single file has no part numbers and is valid
+        # iff it is the only file found
+        parts = sorted(r.part for r in members if r.part is not None)
+        unpartitioned = not parts
+        step = 1 if claimed >= 1 else -1  # Spark's sequence(1, claimed)
+        errors = []
+        if not unpartitioned and found != claimed:
+            errors.append("count-mismatch")
+        if len(parts) != len(set(parts)):
+            errors.append("duplicate-parts")
+        if not unpartitioned and parts != list(range(1, claimed + step, step)):
+            errors.append("non-contiguous")
+        if unpartitioned and found != 1:
+            errors.append("count-mismatch")
+        out.append({
+            "zipfile": zipfile_, "schedule": schedule, "date": d,
+            "claimed": claimed, "found_parts": found, "parts": parts,
+            "errors": errors,
+        })
+    return out
+
+
+def resolve_n_parts(manifest: DataFrame) -> DataFrame:
+    """:func:`validate_parts` over a manifest DataFrame (the
+    :func:`zip_member_manifest` columns): one row per (zipfile,
+    schedule, date) group with its ``errors`` array (empty = valid)."""
+    from ffiec_pq_spark.session import local_frame
+
+    rows = [
+        ZipMember(**{f: r.asDict().get(f) for f in ZipMember._fields})
+        for r in manifest.collect()
+    ]
+    return local_frame(
+        manifest.sparkSession,
+        [tuple(v.values()) for v in validate_parts(rows)],
+        _PARTS_SCHEMA,
     )
-    # collect_list drops NULLs: an unpartitioned single file yields an
-    # empty parts array and is valid iff exactly one file was found
-    unpartitioned = F.size("parts") == 0
-    dup = F.size("parts") != F.size(F.array_distinct("parts"))
-    contiguous = F.col("parts") == F.sequence(F.lit(1), F.col("claimed"))
-    return grouped.withColumn(
-        "errors",
-        F.filter(
-            F.array(
-                F.when(
-                    ~unpartitioned & (F.col("found_parts") != F.col("claimed")),
-                    "count-mismatch",
-                ),
-                F.when(dup, "duplicate-parts"),
-                F.when(~unpartitioned & ~contiguous, "non-contiguous"),
-                F.when(unpartitioned & (F.col("found_parts") != 1), "count-mismatch"),
-            ),
-            lambda x: x.isNotNull(),
-        ),
-    ).select("zipfile", "schedule", "date", "claimed", "found_parts", "parts", "errors")

@@ -18,10 +18,15 @@ Semantics reproduced:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ffiec_pq_spark.functions.scalars import et_to_utc, id_zero_to_null, snake_case
-from ffiec_pq_spark.sources.tsv import ZipFrame, member_slice
+from ffiec_pq_spark.functions.scalars import snake_case
+from ffiec_pq_spark.sources.tsv import (
+    ZipFrame,
+    member_slice,
+    null_if_sql,
+    select_fields,
+    sql_str,
+)
 
 ID_ZERO_NA_COLS = (
     "financial_institution_zip_code",
@@ -31,6 +36,22 @@ ID_ZERO_NA_COLS = (
     "primary_aba_routing_number",
 )
 SUBMISSION_TS_COL = "last_date_time_submission_updated_on"
+
+
+def _por_sql(i: int, name: str) -> str:
+    """SQL text for the POR field ``i`` (normalized name ``name``) over
+    the split array ``f``: blank -> NULL, then the column's rule.
+    ``get`` + ``try_cast``: short/malformed rows yield NULLs, never the
+    ANSI out-of-bounds / bad-cast error (Spark 4 defaults ANSI on)."""
+    raw = null_if_sql(f"trim(get(f, {i}))", ("",))
+    if name == "idrssd":
+        return f"try_cast({raw} AS INT)"
+    if name in ID_ZERO_NA_COLS:
+        return f"CASE WHEN trim({raw}) IN ('', '0') THEN NULL ELSE {raw} END"
+    if name == SUBMISSION_TS_COL:
+        fmt = sql_str("yyyy-MM-dd'T'HH:mm:ss")
+        return f"to_utc_timestamp(to_timestamp({raw}, {fmt}), 'America/New_York')"
+    return raw
 
 
 def read_por(frame: ZipFrame, member: str) -> tuple[DataFrame, dict]:
@@ -51,24 +72,12 @@ def read_por(frame: ZipFrame, member: str) -> tuple[DataFrame, dict]:
         .coalesce(1)
         .sortWithinPartitions("line_no")
     )
-    fields = F.split(F.regexp_replace(F.col("value"), "\t$", ""), "\t", -1)
-    cols = []
-    for i, name in enumerate(clean):
-        # F.get + try_cast: short/malformed rows yield NULLs, never the
-        # ANSI out-of-bounds / bad-cast error (Spark 4 defaults ANSI on)
-        raw = F.when(F.trim(F.get(fields, i)) == "", F.lit(None)).otherwise(
-            F.trim(F.get(fields, i))
-        )
-        if name == "idrssd":
-            cols.append(raw.try_cast("int").alias("IDRSSD"))
-        elif name in ID_ZERO_NA_COLS:
-            cols.append(id_zero_to_null(raw).alias(name))
-        elif name == SUBMISSION_TS_COL:
-            cols.append(et_to_utc(raw).alias(name))
-        else:
-            cols.append(raw.alias(name))
+    cols = [
+        ("IDRSSD" if name == "idrssd" else name, _por_sql(i, name))
+        for i, name in enumerate(clean)
+    ]
     audit = {
         "zipfile": frame.zip_path, "file": member, "skip": skip,
         "repairs": [], "ok": True,
     }
-    return lines.select(*cols), audit
+    return select_fields(lines, cols), audit

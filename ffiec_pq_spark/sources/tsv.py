@@ -6,10 +6,9 @@ Spark has no native "read member X of a zip" source, so member bytes are
 extracted executor-side from a ``binaryFile`` scan of the zip and turned
 into lines.  :func:`zip_lines_batch` is the one such extraction: every
 listed member of a zip in ONE pass, every physical line kept.  A
-:class:`ZipFrame` persists that frame for one zip, and the audit, the
-repair, every schedule parse and the POR reader (``sources/por.py``)
-all read slices of it.  Everything after the extraction is
-declarative:
+:class:`ZipFrame` persists that frame for one zip, and the audit, every
+schedule parse and the POR reader (``sources/por.py``) all read slices
+of it.  Everything after the extraction is declarative:
 
 1. header row (line 1) -> column names; line 2 is a description row and
    is skipped (reference ``skip = 2``); each consumer drops its own
@@ -18,15 +17,16 @@ declarative:
    to build the typed colspec; unknown columns default to string;
    hard overrides (RCON8678 string, RCON9999/RIAD9106 date-parsed-later)
    mirror the reference (R/ffiec_types.R:30-35).
-3. fast path: split on tabs, project all-string, then typed casts with
-   the domain NULL tokens "" / "CONF".
-4. slow path (for the members whose audit finds a line with the wrong
-   field count): one grouped map over those members' cached lines
-   rebuilds each member's text and applies the text-level repairs —
+3. fast path: split on tabs once, then one ``selectExpr`` of typed casts
+   with the domain NULL tokens "" / "CONF" (:func:`select_fields`).
+4. slow path (for the members with a data line whose field count is not
+   the header's): the extraction task that holds the member's text
+   applies the text-level repairs there and then —
    (a) join embedded newlines not preceded by a tab into the prior
    line (regex ``(?<!\\t)\\n`` -> space), (b) convert tabs beyond
-   ``expected-1`` to spaces — then the repaired rows are re-audited and
-   parsed; the repair tags that fired are recorded in the audit
+   ``expected-1`` to spaces — and emits the repaired lines with the
+   repair tags that fired; the one audit of the frame counts the
+   repaired lines and collects the tags for the log
    (reference R/ffeic_read.R:90-93,130-146).
 
 The reader returns ``(DataFrame, audit_dict)`` — the reference carries
@@ -43,16 +43,14 @@ from __future__ import annotations
 
 import io
 import re
-import threading
 import zipfile
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ffiec_pq_spark.functions.scalars import parse_yyyymmdd
+from ffiec_pq_spark.functions.scalars import NA_DATE_TOKENS
 
 NA_TOKENS = ("", "CONF")
 
@@ -60,13 +58,8 @@ NA_TOKENS = ("", "CONF")
 # d=double, i=int, c=character, l=logical, D=date(yyyymmdd text)
 DEFAULT_OVERRIDES = {"RCON8678": "c", "RCON9999": "D", "RIAD9106": "D"}
 
-_SPARK_TYPES = {
-    "d": T.DoubleType(),
-    "i": T.IntegerType(),
-    "c": T.StringType(),
-    "l": T.BooleanType(),
-    "D": T.DateType(),
-}
+# the SQL types of the try_cast type chars (see typed_sql)
+_SPARK_TYPES = {"d": "DOUBLE", "i": "INT", "c": "STRING"}
 
 
 def make_colspec(
@@ -146,121 +139,190 @@ def repair_member_text(text: str, expected_cols: int) -> tuple[str, list[str]]:
     return "\n".join(fixed), tags
 
 
-def _typed_cast(raw: F.Column, tchar: str) -> F.Column:
-    cleaned = F.when(F.trim(raw).isin(*NA_TOKENS), F.lit(None)).otherwise(F.trim(raw))
+# the audit's field count (:func:`lines_batch_stats`) strips a final
+# tab with ``regexp_replace(value, '\t$', '')``, and Java's ``$`` also
+# matches just before a final line terminator
+_JAVA_LINE_ENDS = "\r\u0085\u2028\u2029"
+
+
+def field_count(value: str) -> int:
+    """The audit's field count of one line, ``size(split(regexp_replace(
+    value, '\\t$', ''), '\\t', -1))``, computed in Python: the
+    extraction uses it to decide which members to repair, so the two
+    must agree on every line (pinned by a parity test)."""
+    if value.endswith("\t"):
+        value = value[:-1]
+    elif value[-2:-1] == "\t" and value[-1] in _JAVA_LINE_ENDS:
+        value = value[:-2] + value[-1]
+    return value.count("\t") + 1
+
+
+def sql_str(text: str) -> str:
+    """``text`` as a Spark SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def null_if_sql(expr: str, tokens) -> str:
+    """SQL text: ``expr``, or NULL where it is one of ``tokens``."""
+    listed = ", ".join(sql_str(t) for t in tokens)
+    return f"CASE WHEN {expr} IN ({listed}) THEN NULL ELSE {expr} END"
+
+
+def typed_sql(raw: str, tchar: str) -> str:
+    """SQL text typing the field text ``raw`` by its type char: the
+    NULL tokens, then a yyyymmdd date parse, a true/1 false/0 boolean,
+    or a ``try_cast`` — not ``cast``: Spark 4 runs ANSI mode, where a
+    malformed numeric throws; the reference's readr semantics are NULL
+    + a recorded problem (counted by the audit)."""
+    cleaned = null_if_sql(f"trim({raw})", NA_TOKENS)
     if tchar == "D":
-        return parse_yyyymmdd(cleaned)
+        date_text = null_if_sql(f"trim({cleaned})", NA_DATE_TOKENS)
+        return f"CAST(try_to_timestamp({date_text}, 'yyyyMMdd') AS DATE)"
     if tchar == "l":
-        return F.when(F.lower(cleaned).isin("true", "1"), F.lit(True)).when(
-            F.lower(cleaned).isin("false", "0"), F.lit(False)
+        low = f"lower({cleaned})"
+        return (
+            f"CASE WHEN {low} IN ('true', '1') THEN true "
+            f"WHEN {low} IN ('false', '0') THEN false END"
         )
-    # try_cast, not cast: Spark 4 runs ANSI mode, where a malformed
-    # numeric throws; the reference's readr semantics are NULL + a
-    # recorded problem (counted by member_stats)
-    return cleaned.try_cast(_SPARK_TYPES[tchar])
+    return f"try_cast({cleaned} AS {_SPARK_TYPES[tchar]})"
+
+
+def _fields() -> F.Column:
+    """A line's tab-split fields, its trailing delimiter tab dropped."""
+    return F.split(F.regexp_replace(F.col("value"), "\t$", ""), "\t", -1)
+
+
+def select_fields(lines: DataFrame, cols: list[tuple[str, str]]) -> DataFrame:
+    """Split each line of ``lines`` once into the array ``f``, then
+    project ``cols`` — (name, SQL text over ``f``) pairs — in ONE
+    ``selectExpr`` call.  Building the same projection from Column
+    objects costs about 15 py4j calls per column, and real schedules
+    are hundreds of columns wide."""
+    return lines.select(_fields().alias("f")).selectExpr(
+        *(f"{sql} AS `{name.replace('`', '``')}`" for name, sql in cols)
+    )
 
 
 def parse_schedule_lines(
     lines: DataFrame, colspec: list[tuple[str, str]]
 ) -> DataFrame:
-    """Tab-split -> typed projection with NULL-token semantics."""
-    fields = F.split(F.regexp_replace(F.col("value"), "\t$", ""), "\t", -1)
-    # F.get (not fields[i]): NULL on short rows instead of the ANSI
-    # out-of-bounds error — lenient mode must parse what it can
-    cols = [
-        _typed_cast(F.trim(F.get(fields, i)).alias(name), tchar).alias(name)
-        for i, (name, tchar) in enumerate(colspec)
-    ]
-    return lines.select(*cols)
+    """Tab-split -> typed projection with NULL-token semantics.
+    ``get`` (not ``f[i]``): NULL on short rows instead of the ANSI
+    out-of-bounds error — lenient mode must parse what it can."""
+    return select_fields(
+        lines,
+        [(name, typed_sql(f"get(f, {i})", t)) for i, (name, t) in enumerate(colspec)],
+    )
+
+
+def problem_sql(raw: str, tchar: str) -> str:
+    """SQL text: the trimmed field text ``raw`` holds a value that its
+    type char cannot parse — the reference's 'problems' capture
+    (R/ffeic_read.R:257-310): the value becomes NULL, the problem is
+    counted.  Only types d, i and D can have problems."""
+    cleaned = null_if_sql(raw, NA_TOKENS)
+    if tchar == "D":
+        cleaned = null_if_sql(cleaned, ("0", "00000000"))
+    return f"({cleaned} IS NOT NULL AND {typed_sql(raw, tchar)} IS NULL)"
 
 
 def member_stats(
     lines: DataFrame, colspec: list[tuple[str, str]]
 ) -> tuple[int, int]:
-    """(n_bad_lines, n_problem_rows) in ONE aggregate pass.
-
-    n_bad_lines: wrong tab-field count (the repair-slow-path trigger).
-    n_problem_rows: a typed (double/int/date) field whose value fails
-    its parse — the reference's 'problems' capture (R/ffeic_read.R:
-    257-310): value becomes NULL, problem is counted.
+    """(n_bad_lines, n_problem_rows) of one member's data lines in ONE
+    aggregate pass: lines with the wrong tab-field count (the repair
+    trigger) and rows with a :func:`problem_sql` field.  The reference
+    form of :func:`lines_batch_stats`.
 
     The tab-split array is PROJECTED once per row before the per-column
     conditions: referencing the split expression inside each of ~2xN
     conditions would re-run the regex split per condition (no CSE
     across that many branches)."""
-    n = len(colspec)
-    split_expr = F.split(F.regexp_replace(F.col("value"), "\t$", ""), "\t", -1)
-    proj = lines.select(split_expr.alias("f"))
-    conds = []
-    for i, (name, tchar) in enumerate(colspec):
-        if tchar not in ("d", "i", "D"):
-            continue
-        raw = F.trim(F.get(F.col("f"), i))
-        cleaned = F.when(raw.isin(*NA_TOKENS), F.lit(None)).otherwise(raw)
-        if tchar == "D":
-            cleaned = F.when(
-                cleaned.isin("0", "00000000"), F.lit(None)
-            ).otherwise(cleaned)
-        typed = _typed_cast(raw, tchar)
-        conds.append(cleaned.isNotNull() & typed.isNull())
-    problem = conds[0] if conds else F.lit(False)
-    for c in conds[1:]:
-        problem = problem | c
-    row = proj.agg(
-        F.sum((F.size("f") != n).cast("long")).alias("bad"),
-        F.sum(problem.cast("long")).alias("problems"),
-    ).collect()[0]
+    problem = " OR ".join(
+        problem_sql(f"trim(get(f, {i}))", t)
+        for i, (_, t) in enumerate(colspec) if t in "diD"
+    )
+    row = (
+        lines.select(_fields().alias("f"))
+        .selectExpr(
+            f"sum(CAST(size(f) != {len(colspec)} AS LONG)) AS bad",
+            f"sum(CAST({problem or 'false'} AS LONG)) AS problems",
+        )
+        .collect()[0]
+    )
     return int(row["bad"] or 0), int(row["problems"] or 0)
 
 
 def zip_lines_batch(
-    spark: SparkSession, zip_path: str, members: list[str]
+    spark: SparkSession,
+    zip_path: str,
+    members: list[str],
+    n_cols: dict[str, int] | None = None,
 ) -> DataFrame:
     """Every listed member of one zip as ONE line frame (member,
-    line_no, value), extracted in a single ``binaryFile`` pass and
-    ``spread`` across the cluster: one zip = one ``binaryFile`` row =
-    ONE task, so without the redistribution every downstream per-line
-    operation would run single-threaded inside the extraction task
-    (the audit measured warm 4.3 s vs 16.5 s without the spread at 80k
-    banks).
+    line_no, value, tags), extracted in a single ``binaryFile`` pass
+    and ``spread`` across the cluster: one zip = one ``binaryFile`` row
+    = ONE task, so without the redistribution every downstream
+    per-line operation would run single-threaded inside the extraction
+    task (the audit measured warm 4.3 s vs 16.5 s without the spread
+    at 80k banks).
 
     Every physical line is kept with its 1-based ``line_no`` (line
-    ends' ``\\r`` stripped); each consumer drops its own header rows
-    (:func:`member_slice`).  :class:`ZipFrame` persists it once per
+    ends' ``\\r`` stripped) and NULL ``tags``; each consumer drops its
+    own header rows (:func:`member_slice`).  A member of ``n_cols``
+    ({member: header field count}) with a data line of another
+    :func:`field_count` is repaired while the task holds its text:
+    its lines, joined, go through :func:`repair_member_text`, and the
+    member's rows are its two header lines and then the repaired lines
+    from ``line_no`` 3, every row tagged with the repairs that fired
+    (possibly none).  :class:`ZipFrame` persists the frame once per
     zip for every reader."""
     bin_df = spark.read.format("binaryFile").load(zip_path)
     members = sorted(members)
+    n_cols = n_cols or {}
+
+    def member_rows(m: str, text: str) -> pd.DataFrame:
+        lines = text.split("\n")
+        if lines and lines[-1] == "":
+            lines.pop()
+        values = [ln.rstrip("\r") for ln in lines]
+        tags = None
+        n = n_cols.get(m)
+        if n is not None and any(field_count(v) != n for v in values[2:]):
+            repaired, tags = repair_member_text("\n".join(values), n)
+            values = values[:2] + repaired.split("\n")[2:]
+        return pd.DataFrame(
+            {
+                "member": m,
+                "line_no": range(1, len(values) + 1),
+                "value": values,
+                "tags": [tags] * len(values),
+            }
+        )
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for _, row in pdf.iterrows():
                 with zipfile.ZipFile(io.BytesIO(row["content"])) as zf:
                     for m in members:
-                        text = zf.read(m).decode("utf-8", errors="replace")
-                        lines = text.split("\n")
-                        if lines and lines[-1] == "":
-                            lines.pop()
-                        yield pd.DataFrame(
-                            {
-                                "member": m,
-                                "line_no": range(1, len(lines) + 1),
-                                "value": [ln.rstrip("\r") for ln in lines],
-                            }
+                        yield member_rows(
+                            m, zf.read(m).decode("utf-8", errors="replace")
                         )
 
     from ffiec_pq_spark.session import spread
 
     return spread(
         bin_df.select("content").mapInPandas(
-            extract, schema="member string, line_no long, value string"
+            extract,
+            schema="member string, line_no long, value string, tags array<string>",
         )
     )
 
 
 def member_slice(lines_all: DataFrame, member: str, skip: int = 2) -> DataFrame:
     """One member's (line_no, value) rows of a :func:`zip_lines_batch`
-    or :func:`repair_lines` frame after its first ``skip`` lines (2 for
-    a schedule; the POR reader passes the skip it sniffed)."""
+    frame after its first ``skip`` lines (2 for a schedule; the POR
+    reader passes the skip it sniffed)."""
     return lines_all.filter(
         (F.col("member") == member) & (F.col("line_no") > skip)
     ).select("line_no", "value")
@@ -273,52 +335,34 @@ def lines_batch_stats(
 ) -> dict[str, tuple[int, int]]:
     """(n_bad_lines, n_problem_rows) for EVERY member of ``colspecs``
     over its data rows (``line_no > 2``) of a :func:`zip_lines_batch`
-    or :func:`repair_lines` frame, in one aggregation; the frame's
-    other members are not read.
+    frame, in one aggregation; the frame's other members are not read.
 
     Each member's type chars ride in a literal map, so a higher-order
-    function checks each row's fields where the row lies, and partial
-    aggregation leaves one row per (task, member) for the only shuffle.
-    Semantics are identical to :func:`member_stats` (same NA tokens,
-    date sentinels and try_cast lenience) — pinned by parity tests."""
-    types = F.create_map(
-        *[
-            F.lit(x)
-            for m, spec in colspecs.items()
-            for x in (m, "".join(tchar for _, tchar in spec))
-        ]
+    function checks each row's fields against :func:`problem_sql` where
+    the row lies, and partial aggregation leaves one row per (task,
+    member) for the only shuffle.  Counts equal :func:`member_stats`'s —
+    pinned by parity tests."""
+    types = ", ".join(
+        sql_str(x)
+        for m, spec in colspecs.items()
+        for x in (m, "".join(tchar for _, tchar in spec))
     )
-
-    def fails(field: F.Column, i: F.Column) -> F.Column:
-        tchar = F.substr(F.col("types"), i + 1, F.lit(1))
-        raw = F.trim(field)
-        na_cleaned = F.when(raw.isin(*NA_TOKENS), F.lit(None)).otherwise(raw)
-        d_cleaned = F.when(
-            (tchar == "D") & na_cleaned.isin("0", "00000000"), F.lit(None)
-        ).otherwise(na_cleaned)
-        typed_null = (
-            F.when(tchar == "d", na_cleaned.try_cast("double").isNull())
-            .when(tchar == "i", na_cleaned.try_cast("int").isNull())
-            .when(tchar == "D", parse_yyyymmdd(na_cleaned).isNull())
-            .otherwise(F.lit(False))
-        )
-        return d_cleaned.isNotNull() & typed_null
-
-    fields = F.split(F.regexp_replace(F.col("value"), "\t$", ""), "\t", -1)
+    problem = " ".join(f"WHEN '{t}' THEN {problem_sql('trim(x)', t)}" for t in "diD")
     rows = (
         lines_all.filter(
             F.col("member").isin(list(colspecs)) & (F.col("line_no") > 2)
         )
         .select(
             "member",
-            fields.alias("fields"),
-            F.element_at(types, F.col("member")).alias("types"),
+            _fields().alias("fields"),
+            F.expr(f"element_at(map({types}), member)").alias("types"),
         )
         .groupBy("member")
         .agg(
-            F.sum((F.size("fields") != F.length("types")).cast("long")).alias("bad"),
-            F.sum(
-                F.exists(F.transform("fields", fails), lambda f: f).cast("long")
+            F.expr("sum(CAST(size(fields) != length(types) AS LONG))").alias("bad"),
+            F.expr(
+                "sum(CAST(exists(transform(fields, (x, i) -> CASE substr(types, "
+                f"i + 1, 1) {problem} ELSE false END), p -> p) AS LONG))"
             ).alias("problems"),
         )
         .collect()
@@ -329,92 +373,51 @@ def lines_batch_stats(
     return out
 
 
-def repair_lines(lines_all: DataFrame, n_cols: dict[str, int]) -> DataFrame:
-    """The slow path for the members of ``n_cols`` ({member: field
-    count}) in ONE ``groupBy("member").applyInPandas``: each member's
-    lines, joined in ``line_no`` order, go through
-    :func:`repair_member_text` and come back after the two header rows
-    as (member, line_no from 3, value, tags that fired).  The joined
-    text is the CRLF-normalised member text minus its final newline
-    (which the repair never joins) unless a line ends in 2+ ``\\r``."""
-
-    def repair(pdf: pd.DataFrame) -> pd.DataFrame:
-        member = pdf["member"].iat[0]
-        text = "\n".join(pdf.sort_values("line_no")["value"])
-        text, tags = repair_member_text(text, n_cols[member])
-        lines = text.split("\n")[2:]
-        return pd.DataFrame(
-            {
-                "member": member,
-                "line_no": range(3, len(lines) + 3),
-                "value": lines,
-                "tags": [tags] * len(lines),
-            }
-        )
-
-    return (
-        lines_all.filter(F.col("member").isin(list(n_cols)))
-        .groupBy("member")
-        .applyInPandas(
-            repair,
-            schema="member string, line_no long, value string, tags array<string>",
-        )
-    )
-
-
 class ZipFrame:
-    """One zip's persisted :func:`zip_lines_batch` frame over the listed
-    members, their heads (:func:`zip_member_heads`) and, after
-    :meth:`audit`, the schedule members' (n_bad, n_problems) counters
-    and, on demand, the repaired rows.  Leaving the ``with`` block (or
-    :meth:`release`) unpersists both frames."""
+    """One zip's persisted :func:`zip_lines_batch` frame over its
+    ``schedules`` members (repaired in the extraction where their field
+    counts are off) and its ``por`` member, their heads
+    (:func:`zip_member_heads`) and, after :meth:`audit`, the schedule
+    members' (n_bad, n_problems) counters and the repaired members'
+    tags.  Leaving the ``with`` block (or :meth:`release`) unpersists
+    the frame."""
 
-    def __init__(self, spark: SparkSession, zip_path: str, members: list[str]):
+    def __init__(
+        self,
+        spark: SparkSession,
+        zip_path: str,
+        schedules: list[str],
+        por: str | None = None,
+    ):
         self.spark = spark
         self.zip_path = zip_path
+        members = schedules + ([por] if por else [])
         self.heads = zip_member_heads(zip_path, members)
-        self.lines = zip_lines_batch(spark, zip_path, members).persist()
+        n_cols = {m: len(self.heads[m][0]) for m in schedules}
+        self.lines = zip_lines_batch(spark, zip_path, members, n_cols).persist()
         self.colspecs: dict[str, list[tuple[str, str]]] = {}
         self.stats: dict[str, tuple[int, int]] = {}
-        self.flagged: list[str] = []  # members with a bad-field-count line
-        self.tags: dict[str, list[str]] = {}  # flagged members, once repaired
-        self.repaired: DataFrame | None = None
-        self._repair_lock = threading.Lock()
+        self.tags: dict[str, list[str]] = {}  # the repaired members only
 
     def audit(self, colspecs: dict[str, list[tuple[str, str]]]) -> None:
         """Audit the schedule members of ``colspecs`` in one
-        :func:`lines_batch_stats` call."""
-        self.colspecs = colspecs
-        self.stats = lines_batch_stats(self.spark, self.lines, colspecs)
-        self.flagged = [m for m in colspecs if self.stats[m][0]]
-
-    def repaired_rows(self) -> DataFrame:
-        """The flagged members' :func:`repair_lines` rows, persisted: the
-        first caller repairs them all and re-checks them in one
-        :func:`lines_batch_stats` call that ``observe``s their tags;
-        concurrent callers wait for it, clean members' readers never."""
+        :func:`lines_batch_stats` call, which also ``observe``s the
+        repaired members' tags."""
         from pyspark.sql import Observation
 
-        with self._repair_lock:
-            if self.repaired is None:
-                specs = {m: self.colspecs[m] for m in self.flagged}
-                self.repaired = repair_lines(
-                    self.lines, {m: len(spec) for m, spec in specs.items()}
-                ).persist()
-                obs = Observation()
-                checked = self.repaired.observe(
-                    obs, F.collect_set(F.struct("member", "tags")).alias("tags")
-                )
-                self.stats.update(lines_batch_stats(self.spark, checked, specs))
-                tags = {m: [] for m in specs}
-                tags.update({r["member"]: list(r["tags"]) for r in obs.get["tags"]})
-                self.tags = tags
-        return self.repaired
+        obs = Observation()
+        tagged = self.lines.observe(
+            obs,
+            F.collect_set(
+                F.when(F.col("tags").isNotNull(), F.struct("member", "tags"))
+            ).alias("tags"),
+        )
+        self.colspecs = colspecs
+        self.stats = lines_batch_stats(self.spark, tagged, colspecs)
+        self.tags = {r["member"]: list(r["tags"]) for r in obs.get["tags"]}
 
     def release(self) -> None:
         self.lines.unpersist()
-        if self.repaired is not None:
-            self.repaired.unpersist()
 
     def __enter__(self) -> "ZipFrame":
         return self
@@ -447,12 +450,10 @@ def read_call_schedule(
 
 def read_schedule_member(frame: ZipFrame, member: str) -> tuple[DataFrame, dict]:
     """One audited schedule member of ``frame`` -> (typed DataFrame,
-    audit): a clean member parses its slice of the zip's line frame and
-    costs no Spark job until the caller's terminal action; a flagged
-    one parses its slice of :meth:`ZipFrame.repaired_rows`.  ``ok`` is
-    false when a line still has the wrong field count after the
-    repair."""
-    lines = frame.repaired_rows() if member in frame.flagged else frame.lines
+    audit): it parses the member's slice of the zip's line frame (its
+    repaired lines, if the extraction repaired it) and costs no Spark
+    job until the caller's terminal action.  ``ok`` is false when a
+    line still has the wrong field count after the repair."""
     n_bad, n_problems = frame.stats[member]
     repairs = list(frame.tags.get(member, []))
     if n_problems:
@@ -460,4 +461,4 @@ def read_schedule_member(frame: ZipFrame, member: str) -> tuple[DataFrame, dict]
     audit = {"zipfile": frame.zip_path, "file": member, "repairs": repairs,
              "ok": not n_bad, "n_problems": n_problems}
     colspec = frame.colspecs[member]
-    return parse_schedule_lines(member_slice(lines, member), colspec), audit
+    return parse_schedule_lines(member_slice(frame.lines, member), colspec), audit

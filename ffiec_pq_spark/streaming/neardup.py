@@ -84,7 +84,7 @@ def run_neardup_stream(
     ensure_session_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     key = dataset_key(None, sf_dir) + (compact_every,)
-    workdir = _LIVE_RUNS.get(key)
+    workdir = _LIVE_RUNS.lookup(key)
     fresh = workdir is None or not os.path.isdir(workdir)
     if fresh:
         workdir = tempfile.mkdtemp(prefix=workdir_prefix)

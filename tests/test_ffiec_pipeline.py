@@ -61,6 +61,101 @@ def test_member_manifest(spark, raw_dir):
     assert all(len(r["errors"]) == 0 for r in v)
 
 
+def _member(schedule, part=None, n_parts=None, zipfile="z.zip",
+            date=datetime.date(2024, 3, 31)):
+    from ffiec_pq_spark.sources.manifest import ZipMember
+
+    return ZipMember(zipfile, f"{schedule}-{part}", schedule, date, part, n_parts)
+
+
+def test_part_validation_rules():
+    """The multipart rules on driver-side member rows, no Spark:
+    claimed vs found count, duplicate and non-contiguous part numbers,
+    and unpartitioned files (valid alone, a count mismatch in pairs).
+    POR and unrecognised members are not schedule groups."""
+    from ffiec_pq_spark.sources.manifest import ZipMember, validate_parts
+
+    rows = [
+        _member("ok", 1, 2), _member("ok", 2, 2),
+        _member("short", 1, 3), _member("short", 2, 3),
+        _member("dup", 1, 2), _member("dup", 1, 2),
+        _member("gap", 1, 2), _member("gap", 3, 2),
+        _member("single"),
+        _member("twin"), _member("twin"),
+        _member("por"),
+        ZipMember("z.zip", "readme.txt", None, None, None, None),
+    ]
+    got = {v["schedule"]: v for v in validate_parts(rows)}
+    assert {s: v["errors"] for s, v in got.items()} == {
+        "ok": [],
+        "short": ["count-mismatch", "non-contiguous"],
+        "dup": ["duplicate-parts", "non-contiguous"],
+        "gap": ["non-contiguous"],
+        "single": [],
+        "twin": ["count-mismatch"],
+    }
+    assert (got["short"]["claimed"], got["short"]["found_parts"]) == (3, 2)
+    assert got["gap"]["parts"] == [1, 3]
+    assert (got["twin"]["claimed"], got["twin"]["parts"]) == (2, [])
+
+
+def test_resolve_n_parts_is_the_python_rules(spark):
+    """``resolve_n_parts`` over a manifest DataFrame returns exactly the
+    rows ``validate_parts`` gives for the same members."""
+    from ffiec_pq_spark.sources.manifest import (
+        member_frame,
+        resolve_n_parts,
+        validate_parts,
+    )
+
+    rows = [
+        _member("ok", 1, 2), _member("ok", 2, 2), _member("dup", 1, 2),
+        _member("dup", 1, 2), _member("gap", 1, 2), _member("gap", 3, 2),
+        _member("single"), _member("twin"), _member("twin"), _member("por"),
+    ]
+    got = [r.asDict() for r in resolve_n_parts(member_frame(spark, rows)).collect()]
+    key = lambda v: v["schedule"]  # noqa: E731
+    assert sorted(got, key=key) == sorted(validate_parts(rows), key=key)
+
+
+def test_ingest_validation_and_wide_readback_run_no_job(spark, tmp_path):
+    """Part validation reads the driver's member rows, and the long
+    build reads each wide file back with the schema its group wrote:
+    neither launches a Spark job.  A schema-less read of the same file
+    does (the inference job these steps avoid), which shows the guard
+    sees jobs."""
+    from ffiec_pq_spark.operators.process import read_wide_long
+    from ffiec_pq_spark.sources.manifest import validate_parts, zip_member_rows
+
+    zp = make_call_zip(str(tmp_path))
+    res = ffiec_process(spark, [zp], TYPE_DICT, str(tmp_path / "out"), PURE_COLS)
+    schemas = {o["path"]: spark.read.parquet(o["path"]).schema for o in res["wide"]}
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(tracker.getJobIdsForGroup(group))
+
+    checks, jobs = jobs_of(
+        "no-job-validate", lambda: validate_parts(zip_member_rows(zp))
+    )
+    assert jobs == [] and all(not v["errors"] for v in checks)
+    longs, jobs = jobs_of(
+        "no-job-readback",
+        lambda: [read_wide_long(spark, p, s) for p, s in schemas.items()],
+    )
+    assert jobs == [] and all(longs)
+    _, jobs = jobs_of(
+        "schema-inference", lambda: spark.read.parquet(next(iter(schemas)))
+    )
+    assert jobs
+
+
 def test_wide_schedule_semantics(spark, processed):
     ri = next(o for o in processed["wide"] if o["schedule"] == "ri")
     df = spark.read.parquet(ri["path"])

@@ -227,7 +227,7 @@ def test_rewrite_evicts_model_and_stream_state(spark, sf_dir, tmp_path):
 
 def test_tracked_persist_repeat_plan_adds_no_entry(spark, sf_dir):
     """A warm serve re-persists identical plans; the tracked reference
-    is replaced, so the memo does not grow."""
+    is kept, so the memo does not grow."""
     from ffiec_pq_spark.catalog import queries
 
     q = queries()["dedup_minhash_lsh"]
@@ -236,3 +236,26 @@ def test_tracked_persist_repeat_plan_adds_no_entry(spark, sf_dir):
     assert n >= 1
     q(spark, sf_dir).collect()
     assert resident.resident_state_report()["query_persists"]["entries"] == n
+
+
+def test_ivfpq_model_memo_counts_its_traffic(spark, sf_dir):
+    """The trained IVF-PQ model memo reads through the counted lookup:
+    the first search misses, and a search that rebuilds the serve state
+    (which a new session does; the test drops it) hits the resident
+    model."""
+    from ffiec_pq_spark.queries.round9c import (
+        _IVFPQ_MODELS,
+        _IVFPQ_SERVE,
+        ann_ivfpq_residual_topk,
+    )
+
+    _IVFPQ_MODELS.clear()
+    _IVFPQ_SERVE.clear()
+    hits, misses = _IVFPQ_MODELS.hits, _IVFPQ_MODELS.misses
+    ann_ivfpq_residual_topk(spark, sf_dir)
+    _IVFPQ_SERVE.clear()
+    ann_ivfpq_residual_topk(spark, sf_dir)
+    assert _IVFPQ_MODELS.misses - misses >= 1
+    assert _IVFPQ_MODELS.hits - hits >= 1
+    report = resident.resident_state_report()["ivfpq_models"]
+    assert report["hits"] >= 1 and report["misses"] >= 1

@@ -1,7 +1,8 @@
 """The ingest's one zip reader (sources/tsv.py ``zip_lines_batch`` and
 ``ZipFrame``): no other code turns call-report members into lines, the
-repair tags logged are the ones that fired, and the POR reader keeps
-its first data row when the member has no description row."""
+repair tags logged are the ones that fired, the extraction's field
+count is the audit's, and the POR reader keeps its first data row when
+the member has no description row."""
 
 import os
 import zipfile
@@ -104,8 +105,9 @@ def test_por_without_description_row_keeps_first_bank(spark, tmp_path):
 
 def test_concurrent_readers_share_one_repair(spark, tmp_path):
     """The ingest reads members from pool threads: however many threads
-    read a flagged member at once, the members are repaired once, and
-    every reader gets that repair's rows and tags."""
+    read a repaired member at once, the zip keeps ONE persisted frame
+    (the extraction repaired the member in place), and every reader
+    gets the repaired rows and the same tags."""
     import sys
     import threading
 
@@ -125,7 +127,8 @@ def test_concurrent_readers_share_one_repair(spark, tmp_path):
         frame.audit(
             {m: make_colspec(frame.heads[m][0], TYPE_DICT) for m in members}
         )
-        assert len(frame.flagged) == 1
+        flagged = list(frame.tags)
+        assert len(flagged) == 1
         seen = []
 
         def read(member):
@@ -134,7 +137,7 @@ def test_concurrent_readers_share_one_repair(spark, tmp_path):
 
         threads = [
             threading.Thread(target=read, args=(m,))
-            for m in frame.flagged * 6 + members
+            for m in flagged * 6 + members
         ]
         interval = sys.getswitchinterval()
         sys.setswitchinterval(1e-6)
@@ -147,10 +150,40 @@ def test_concurrent_readers_share_one_repair(spark, tmp_path):
             sys.setswitchinterval(interval)
         assert not any(t.is_alive() for t in threads)
         assert len(seen) == len(threads)
-        # the line frame and ONE repaired frame
-        assert jsc.getPersistentRDDs().size() == before + 2
+        # the line frame only: no second, repaired frame
+        assert jsc.getPersistentRDDs().size() == before + 1
         for member, repairs, ok, n in seen:
             assert ok and n == N_BANKS
-            if member in frame.flagged:
+            if member in flagged:
                 assert repairs == ["newline-gsub", "tab-repair"]
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_extraction_field_count_matches_the_audit(spark, tmp_path):
+    """The extraction decides which members to repair with
+    ``field_count``; it must equal the audit's JVM count
+    ``size(split(regexp_replace(value, '\\t$', ''), '\\t', -1))`` on
+    every line, including those where Java's ``$`` matches before a
+    final line terminator."""
+    from pyspark.sql import functions as F
+
+    from ffiec_pq_spark.session import local_frame
+    from ffiec_pq_spark.sources.tsv import field_count, zip_lines_batch
+
+    adversarial = [
+        "a\tb\t", "a\tb", "a\tb\t\u0085", "a\tb\t\u2028", "a\tb\t\u2029",
+        "a\t\u0085b", "", "\t", "\t\t\t", "\r", "a\t\r", "a\rb\t", "\t\r\t",
+    ]
+    member = "FFIEC CDR Call Schedule RX 03312024.txt"
+    zp = _write_zip(str(tmp_path / "adversarial.zip"), {member: adversarial})
+    jvm_count = F.size(
+        F.split(F.regexp_replace(F.col("value"), "\t$", ""), "\t", -1)
+    )
+    extracted = zip_lines_batch(spark, zp, [member]).select("value")
+    raw = local_frame(spark, [(v,) for v in adversarial], "value string")
+    for frame in (extracted, raw):
+        rows = frame.select("value", jvm_count.alias("n")).collect()
+        assert len(rows) == len(adversarial)
+        assert [(r["value"], field_count(r["value"])) for r in rows] == [
+            (r["value"], r["n"]) for r in rows
+        ]
