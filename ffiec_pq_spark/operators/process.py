@@ -331,6 +331,40 @@ def read_wide_long(
     return make_long_by_type(wide, ids=["IDRSSD", "date"])
 
 
+def _write_long_deduped(merged: DataFrame, out_path: str) -> int:
+    """Write the long rows ``merged`` as one parquet file at
+    ``out_path``, one row per (IDRSSD, date, item) key, and return the
+    number of keys that carry more than one distinct value.
+
+    ONE shuffle and one job do it all: group by the key, collect the
+    distinct values (repeats of the same fact collapse), take the value
+    and write; the duplicate count rides the write job via observe()
+    (the fix_pure_columns pattern) instead of a separate
+    ``filter(size>1).limit(1).count()`` job.  The file is written
+    beside ``out_path`` and renamed over it only when the count is 0:
+    on a violation the new file is deleted and whatever was at
+    ``out_path`` (for an in-place merge, the input itself) stays as it
+    was."""
+    from pyspark.sql import Observation
+
+    grouped = merged.groupBy("IDRSSD", "date", "item").agg(
+        F.collect_set("value").alias("vals")
+    )
+    obs = Observation()
+    deduped = grouped.observe(
+        obs, F.sum((F.size("vals") > 1).cast("long")).alias("n_dup")
+    ).select(
+        "IDRSSD", "date", "item", F.element_at("vals", 1).alias("value")
+    )
+    new_path = write_single_parquet(deduped, out_path + ".new")
+    n_dup = obs.get["n_dup"] or 0
+    if n_dup:
+        os.remove(new_path)
+    else:
+        os.replace(new_path, out_path)
+    return n_dup
+
+
 def make_long_pqs(wide_outputs: list[dict], out_dir: str) -> dict[str, str]:
     """Stage 3: type-partitioned long EAV tables across all wide outputs
     (reference make_long_pq, R/ffiec_make_long_pqs.R:103-115): each
@@ -348,33 +382,11 @@ def make_long_pqs(wide_outputs: list[dict], out_dir: str) -> dict[str, str]:
         merged = reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=False), dfs
         )
-        # ONE shuffle AND one job do all four steps: group by the PK,
-        # collect the distinct values (cross-file repeats of the same
-        # fact collapse), count PK violations, take the value, write.
-        # The violation count rides the write job via observe() (the
-        # fix_pure_columns pattern) — the old separate
-        # ``filter(size>1).limit(1).count()`` probe cost one extra job
-        # per type, half the stage's job count; on violation the
-        # tainted deliverable is removed before the fail-fast raise
-        # (the reference's assert_no_dups aborts before writing — the
-        # end state, no file + an exception, is identical).
-        from pyspark.sql import Observation
-
-        grouped = merged.groupBy("IDRSSD", "date", "item").agg(
-            F.collect_set("value").alias("vals")
-        )
-        obs = Observation()
-        deduped = grouped.observe(
-            obs, F.sum((F.size("vals") > 1).cast("long")).alias("n_dup")
-        ).select(
-            "IDRSSD", "date", "item", F.element_at("vals", 1).alias("value")
-        )
         name = LONG_TYPE_NAMES.get(t, re.sub(r"\W+", "_", t))
         path = os.path.join(out_dir, f"ffiec_{name}.parquet")
-        write_single_parquet(deduped, path)
-        if obs.get["n_dup"]:
-            if os.path.exists(path):
-                os.remove(path)
+        # the reference's assert_no_dups aborts before writing; here
+        # the tainted file is never renamed into place
+        if _write_long_deduped(merged, path):
             raise ValueError(
                 f"duplicate keys found for ['IDRSSD', 'date', 'item'] in {t}"
             )
@@ -417,18 +429,12 @@ def merge_long_increment(
     from functools import reduce
 
     merged = reduce(lambda a, b: a.unionByName(b), parts)
-    grouped = merged.groupBy("IDRSSD", "date", "item").agg(
-        F.collect_set("value").alias("vals")
-    )
-    if grouped.filter(F.size("vals") > 1).limit(1).count():
+    if _write_long_deduped(merged, out_path):
         raise ValueError(
             "merge_long_increment: conflicting values for an existing "
             "(IDRSSD, date, item) key"
         )
-    deduped = grouped.select(
-        "IDRSSD", "date", "item", F.element_at("vals", 1).alias("value")
-    )
-    return write_single_parquet(deduped, out_path)
+    return out_path
 
 
 def make_schedule_pq(

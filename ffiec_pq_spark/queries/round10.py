@@ -31,7 +31,7 @@ from ffiec_pq_spark.functions.lits import double_array
 from ffiec_pq_spark.operators.pq import pq_codes, pq_fit
 from ffiec_pq_spark.queries.round9c import _ITERS, _M, _SUB_DIM, _pq_ctes
 from ffiec_pq_spark.session import load_table
-from ffiec_pq_spark.streaming.state import drain, stage_chunks
+from ffiec_pq_spark.streaming.state import drain, fold_workdir, stage_chunks
 
 # Production-shaped codebook size: k=64 codes per subspace (6 bits of
 # the one-byte production code space) — past the _EXPR_MAX_FLOATS
@@ -386,16 +386,13 @@ def stream_pq_encode(spark, sf_dir):
     the batch encode for ANY batch order — certified against the same
     Lloyd-chain oracle as embedding_pq_codebook_k64."""
     import os
-    import shutil
-    import tempfile
 
     from ffiec_pq_spark.session import ensure_session_confs
 
     ensure_session_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     books = pq_fit(emb, m=_M, sub_dim=_SUB_DIM, k=_K64, iters=_ITERS)
-    workdir = tempfile.mkdtemp(prefix="stream_pq_encode_")
-    try:
+    with fold_workdir("pq_encode", one_off=True) as workdir:
         src = stage_chunks(emb, F.pmod(F.col("vec_id"), F.lit(4)), 4, workdir)
         state_dir = os.path.join(workdir, "codes")
 
@@ -406,8 +403,6 @@ def stream_pq_encode(spark, sf_dir):
 
         drain(spark, src, emb.schema, encode_batch, workdir)
         return spark.read.parquet(state_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

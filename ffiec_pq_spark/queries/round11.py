@@ -13,7 +13,7 @@ from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.queries.round8 import _stream_neardup_oracle
 from ffiec_pq_spark.session import dataset_key, load_table
-from ffiec_pq_spark.streaming.state import drain, stage_chunks
+from ffiec_pq_spark.streaming.state import drain, fold_workdir, stage_chunks
 
 
 @register(
@@ -563,8 +563,6 @@ def stream_ivf_delete_log(spark, sf_dir):
     INTO; the search-side plan is untouched (broadcast anti-join of a
     manifest-sized relation)."""
     import os
-    import shutil
-    import tempfile
 
     from ffiec_pq_spark.operators.similarity import ann_topk_ivf
     from ffiec_pq_spark.queries.similarity import (
@@ -578,8 +576,7 @@ def stream_ivf_delete_log(spark, sf_dir):
     ensure_session_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     deletes = emb.select("vec_id").filter(F.col("vec_id") % 7 == 3)
-    workdir = tempfile.mkdtemp(prefix="stream_ivf_deletes_")
-    try:
+    with fold_workdir("ivf_deletes", one_off=True) as workdir:
         src = stage_chunks(
             deletes, F.pmod(F.col("vec_id"), F.lit(4)), 4, workdir
         )
@@ -604,8 +601,6 @@ def stream_ivf_delete_log(spark, sf_dir):
             exclude_ids=tombstones,
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.streaming.state import (
     drain,
+    fold_workdir,
+    new_state,
     read_state,
     stage_chunks,
     versioned_fold,
@@ -149,9 +151,6 @@ def stream_scd2_snapshot_fold(spark, sf_dir):
     recursion, so the drained history certifies against the IDENTICAL
     oracle as ``users_weekly_snapshot_scd2`` — bounding the work per
     trigger must not change the history."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from ffiec_pq_spark.operators.windows import scd2_from_snapshots
@@ -171,8 +170,7 @@ def stream_scd2_snapshot_fold(spark, sf_dir):
     per = (len(weeks) + n_chunks - 1) // n_chunks
     chunks = [weeks[i * per:(i + 1) * per] for i in range(n_chunks)]
 
-    workdir = tempfile.mkdtemp(prefix="stream_scd2_")
-    try:
+    with fold_workdir("scd2", one_off=True) as workdir:
         # chunk ids ascend with the weeks, so arrival order is week
         # order
         chunk_expr = F.lit(len(chunks) - 1)
@@ -181,7 +179,7 @@ def stream_scd2_snapshot_fold(spark, sf_dir):
                 F.col("week").isin(chunks[i]), F.lit(i)
             ).otherwise(chunk_expr)
         src = stage_chunks(snap, chunk_expr, len(chunks), workdir)
-        state = {"state": None, "version": 0, "epoch": -1}
+        state = new_state("state")
 
         # the replay guard matters here beyond double counting:
         # re-merging a delivered week would re-stitch its runs onto
@@ -253,8 +251,6 @@ def stream_scd2_snapshot_fold(spark, sf_dir):
             "user_id", "event_type", "valid_from", "valid_to", "is_current"
         )
         return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -366,17 +362,12 @@ def _bm25_index_build(spark, sf_dir):
     partition count is exempt from AQE coalescing; term-hash layout IS
     the inverted index's natural storage layout, and the df_t rollup
     reuses it shuffle-free (guide §2.4)."""
-    from ffiec_pq_spark.operators.text import tokens
-
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 10 != 0)
-    tok = corpus.select(
-        "doc_id", F.explode(tokens("text")).alias("term")
-    ).filter(F.col("term") != "")
     tf = tracked_persist(
-        tok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .repartition(spark.sparkContext.defaultParallelism, "term")
+        _bm25_postings(corpus).repartition(
+            spark.sparkContext.defaultParallelism, "term"
+        )
     )
     dl = tracked_persist(
         tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
@@ -424,6 +415,46 @@ def _bm25_topk_frame(spark, sf_dir):
     queries = d.filter(F.col("doc_id") % 10 == 0)
     tf, dl, df_t, stats = _bm25_index(spark, sf_dir)
     return _bm25_rank_postings(tf, dl, df_t, stats, queries)
+
+
+def _bm25_postings(docs):
+    """The postings ``(doc_id, term, tf)`` of ``docs(doc_id, text)``:
+    each non-empty token's count per document."""
+    from ffiec_pq_spark.operators.text import tokens
+
+    return (
+        docs.select("doc_id", F.explode(tokens("text")).alias("term"))
+        .filter(F.col("term") != "")
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+
+
+def _bm25_rank_state(spark, st, queries, tomb=None):
+    """:func:`_bm25_rank_postings` over a stream fold's maintained
+    index (the ``tf``/``dl``/``df``/``meta`` state dirs of ``st``),
+    with the ``tomb`` ids anti-joined out of the postings.  The
+    projections are explicit: the per-epoch state dirs surface a
+    partition-discovery ``epoch`` column the scorer must never see."""
+    from ffiec_pq_spark.streaming.state import read_state
+
+    tf = read_state(spark, st["tf"]).select("doc_id", "term", "tf")
+    if tomb is not None:
+        tf = tf.join(F.broadcast(tomb), "doc_id", "left_anti")
+    stats = read_state(spark, st["meta"]).select(
+        F.col("n_docs"),
+        (
+            F.col("sum_dl").cast("double")
+            / F.nullif(F.col("n_docs"), F.lit(0))
+        ).alias("avdl"),
+    )
+    return _bm25_rank_postings(
+        tf,
+        read_state(spark, st["dl"]).select("doc_id", "dl"),
+        read_state(spark, st["df"]),
+        stats,
+        queries,
+    )
 
 
 def _bm25_rank_postings(tf, dl, df_t, stats, queries):

@@ -22,8 +22,11 @@ from pyspark.sql import functions as F
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.streaming.state import (
     drain,
+    fold_workdir,
     keyed_add,
+    new_state,
     read_state,
+    serve_fold,
     stage_chunks,
     versioned_fold,
 )
@@ -520,18 +523,16 @@ def stream_bm25_index_fold(spark, sf_dir, chunk_order=None):
     ensure_session_confs(spark)
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 10 != 0)
-    out_schema = (
-        "q_id long, rank long, doc_id long, score_micro long"
+    return serve_fold(
+        _BM25_STREAM_STATE, dataset_key(spark, sf_dir), corpus,
+        lambda: _bm25_stream_build(spark, corpus, chunk_order),
+        lambda st: _bm25_serve(spark, d, st),
+        lambda: spark.createDataFrame([], _BM25_OUT_SCHEMA),
+        one_off=chunk_order is not None,
     )
-    key = dataset_key(spark, sf_dir)
-    st = _BM25_STREAM_STATE.get(key) if chunk_order is None else None
-    if st is None:
-        if corpus.isEmpty():
-            return spark.createDataFrame([], out_schema)
-        st = _bm25_stream_build(spark, corpus, chunk_order)
-        if chunk_order is None:
-            _BM25_STREAM_STATE[key] = st
-    return _bm25_serve(spark, d, st, ephemeral=chunk_order is not None)
+
+
+_BM25_OUT_SCHEMA = "q_id long, rank long, doc_id long, score_micro long"
 
 
 # Resident maintained-index state per dataset_key(spark, sf_dir): in a
@@ -542,37 +543,16 @@ def stream_bm25_index_fold(spark, sf_dir, chunk_order=None):
 _BM25_STREAM_STATE = Memo("bm25_stream_state")
 
 
-def _bm25_serve(spark, d, st, ephemeral=False, tomb=None):
+def _bm25_serve(spark, d, st, tomb=None):
     """Score the eval-slice queries against a maintained index state
-    (shared by the insert fold's memoized/ephemeral paths and the
-    delete fold, which passes its ``tomb`` ids to anti-join the
-    postings)."""
-    import shutil
+    (shared by the insert fold and the delete fold, which passes its
+    ``tomb`` ids to anti-join the postings)."""
+    from ffiec_pq_spark.queries.round12 import _bm25_rank_state
 
-    from ffiec_pq_spark.queries.round12 import _bm25_rank_postings
-
-    try:
-        # explicit projections: the insert fold's per-epoch state dirs
-        # surface a partition-discovery ``epoch`` column the scorer
-        # must never see (the round-14 serve's convention)
-        tf = read_state(spark, st["tf"]).select("doc_id", "term", "tf")
-        if tomb is not None:
-            tf = tf.join(F.broadcast(tomb), "doc_id", "left_anti")
-        dl = read_state(spark, st["dl"]).select("doc_id", "dl")
-        df_t = read_state(spark, st["df"])
-        stats = read_state(spark, st["meta"]).select(
-            F.col("n_docs"),
-            (
-                F.col("sum_dl").cast("double")
-                / F.nullif(F.col("n_docs"), F.lit(0))
-            ).alias("avdl"),
-        )
-        queries_df = d.filter(F.col("doc_id") % 10 == 0)
-        served = _bm25_rank_postings(tf, dl, df_t, stats, queries_df)
-        return served.localCheckpoint(eager=True)
-    finally:
-        if ephemeral:
-            shutil.rmtree(st["workdir"], ignore_errors=True)
+    queries_df = d.filter(F.col("doc_id") % 10 == 0)
+    return _bm25_rank_state(spark, st, queries_df, tomb).localCheckpoint(
+        eager=True
+    )
 
 
 def _bm25_insert_fold(spark, state, workdir, tf_dir, dl_dir):
@@ -580,7 +560,7 @@ def _bm25_insert_fold(spark, state, workdir, tf_dir, dl_dir):
     it directly (epoch replay / crash-window tests): postings and
     lengths land per epoch, df and the (n_docs, Σdl) scalar MERGE by
     key through :func:`~ffiec_pq_spark.streaming.state.versioned_fold`."""
-    from ffiec_pq_spark.operators.text import tokens
+    from ffiec_pq_spark.queries.round12 import _bm25_postings
 
     def step(batch_df, epoch_id):
         # tf is written per-epoch (epoch=N subdir, OVERWRITE) from the
@@ -595,16 +575,7 @@ def _bm25_insert_fold(spark, state, workdir, tf_dir, dl_dir):
         # than append); (3) the read-back replaces the cache with the
         # state file the fold was writing anyway.
         tf_path = os.path.join(tf_dir, f"epoch={epoch_id}")
-        (
-            batch_df.select(
-                "doc_id", F.explode(tokens("text")).alias("term")
-            )
-            .filter(F.col("term") != "")
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .write.mode("overwrite")
-            .parquet(tf_path)
-        )
+        _bm25_postings(batch_df).write.mode("overwrite").parquet(tf_path)
         tf_b = spark.read.parquet(tf_path)
         dl_b = tf_b.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
         dl_b.write.mode("overwrite").parquet(
@@ -629,15 +600,10 @@ def _bm25_insert_fold(spark, state, workdir, tf_dir, dl_dir):
 
 def _bm25_stream_build(spark, corpus, chunk_order=None, n_chunks=4):
     """Run the ingest stream to completion and return the maintained
-    index state paths ``{workdir, tf, dl, df, meta}`` (workdir kept —
-    the caller owns cleanup via the memo's drop or, for
-    ephemeral runs, the serve's finally).  ``n_chunks`` parameterizes
-    the trigger count (the bounded-state test drives ~20)."""
-    import shutil
-    import tempfile
-
-    workdir = tempfile.mkdtemp(prefix="stream_bm25_")
-    try:
+    index state paths ``{workdir, tf, dl, df, meta}``.  ``n_chunks``
+    parameterizes the trigger count (the bounded-state test drives
+    ~20)."""
+    with fold_workdir("bm25") as workdir:
         # arrival order is a free parameter BECAUSE the fold is
         # key-commutative (appends + keyed sums); the order-invariance
         # test drains a permuted order and asserts the identical serve
@@ -647,7 +613,7 @@ def _bm25_stream_build(spark, corpus, chunk_order=None, n_chunks=4):
         )
         tf_dir = os.path.join(workdir, "tf")
         dl_dir = os.path.join(workdir, "dl")
-        state = {"df": None, "meta": None, "version": 0, "epoch": -1}
+        state = new_state("df", "meta")
         fold = _bm25_insert_fold(spark, state, workdir, tf_dir, dl_dir)
         drain(spark, src, corpus.schema, fold, workdir)
         return {
@@ -657,9 +623,6 @@ def _bm25_stream_build(spark, corpus, chunk_order=None, n_chunks=4):
             "df": state["df"],
             "meta": state["meta"],
         }
-    except BaseException:
-        shutil.rmtree(workdir, ignore_errors=True)
-        raise
 
 
 # --------------------------------------------------------------------------
@@ -832,16 +795,14 @@ def stream_bm25_delete_fold(spark, sf_dir):
     ensure_session_confs(spark)
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 10 != 0)
-    out_schema = "q_id long, rank long, doc_id long, score_micro long"
-    key = dataset_key(spark, sf_dir)
-    st = _BM25_DEL_STATE.get(key)
-    if st is None:
-        if corpus.isEmpty():
-            return spark.createDataFrame([], out_schema)
-        st = _bm25_delete_build(spark, corpus)
-        _BM25_DEL_STATE[key] = st
-    tomb = read_state(spark, st["tomb"]).select("doc_id")
-    return _bm25_serve(spark, d, st, tomb=tomb)
+    return serve_fold(
+        _BM25_DEL_STATE, dataset_key(spark, sf_dir), corpus,
+        lambda: _bm25_delete_build(spark, corpus),
+        lambda st: _bm25_serve(
+            spark, d, st, read_state(spark, st["tomb"]).select("doc_id")
+        ),
+        lambda: spark.createDataFrame([], _BM25_OUT_SCHEMA),
+    )
 
 
 _BM25_DEL_STATE = Memo("bm25_delete_state")
@@ -894,30 +855,17 @@ def _bm25_delete_fold(spark, state, workdir, tf, dl):
 
 def _bm25_delete_build(spark, corpus, n_chunks=3):
     """Build the index, stream the erasure log through the decrement
-    fold, and return the corrected state paths (workdir kept; cleanup
-    via ``_BM25_DEL_STATE.clear()``).  ``n_chunks`` parameterizes
-    the erasure-log trigger count (the bounded-state test drives
-    ~20)."""
-    import shutil
-    import tempfile
-
-    from ffiec_pq_spark.operators.text import tokens
+    fold, and return the corrected state paths.  ``n_chunks``
+    parameterizes the erasure-log trigger count (the bounded-state
+    test drives ~20)."""
+    from ffiec_pq_spark.queries.round12 import _bm25_postings
     from ffiec_pq_spark.streaming.state import emit_versioned
 
-    workdir = tempfile.mkdtemp(prefix="stream_bm25_del_")
-    try:
+    with fold_workdir("bm25_del") as workdir:
         # one-time index build (in a deployment: the stored index the
         # erasure stream maintains)
-        tf0 = (
-            corpus.select(
-                "doc_id", F.explode(tokens("text")).alias("term")
-            )
-            .filter(F.col("term") != "")
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
         tf_dir = os.path.join(workdir, "tf")
-        tf0.write.parquet(tf_dir)
+        _bm25_postings(corpus).write.parquet(tf_dir)
         tf = spark.read.parquet(tf_dir)
         dl_dir = os.path.join(workdir, "dl")
         tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).write.parquet(
@@ -929,10 +877,7 @@ def _bm25_delete_build(spark, corpus, n_chunks=3):
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
         )
-        state = {
-            "df": None, "meta": None, "tomb": None, "version": 0,
-            "epoch": -1,
-        }
+        state = new_state("df", "meta", "tomb")
         emit_versioned(
             state, workdir,
             {
@@ -959,9 +904,6 @@ def _bm25_delete_build(spark, corpus, n_chunks=3):
             "meta": state["meta"],
             "tomb": state["tomb"],
         }
-    except BaseException:
-        shutil.rmtree(workdir, ignore_errors=True)
-        raise
 
 
 # --------------------------------------------------------------------------
@@ -1126,58 +1068,58 @@ def stream_probe_stats_fold(spark, sf_dir):
     Resident per (session, dataset) (``_PROBE_STREAM_STATE``): cold =
     ingest replay + refit + score, warm = refit + score against the
     resident statistics."""
-    import shutil
-    import tempfile
-
-    from ffiec_pq_spark.operators.linear_probe import (
-        gram_moment_df,
-        probe_fit_int,
-        stats_rows_to_abn,
-    )
-    from ffiec_pq_spark.operators.windows import distributed_rank
     from ffiec_pq_spark.session import ensure_session_confs
 
     ensure_session_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     )
-    out_schema = (
-        "vec_id long, y long, margin_micro long, rank long, kept boolean"
+    return serve_fold(
+        _PROBE_STREAM_STATE, dataset_key(spark, sf_dir), emb,
+        lambda: _probe_stream_build(spark, emb),
+        lambda st: _probe_stream_serve(spark, emb, st),
+        lambda: spark.createDataFrame(
+            [],
+            "vec_id long, y long, margin_micro long, rank long, "
+            "kept boolean",
+        ),
     )
-    key = dataset_key(spark, sf_dir)
-    st = _PROBE_STREAM_STATE.lookup(key)
-    if st is None:
-        if emb.isEmpty():
-            return spark.createDataFrame([], out_schema)
-        y = (F.coalesce(F.col("label"), F.lit(0)) == 0).cast("long")
-        workdir = tempfile.mkdtemp(prefix="stream_probe_")
-        try:
-            src = stage_chunks(
-                emb, F.pmod("vec_id", F.lit(4)), 4, workdir
-            )
-            state = {"stats": None, "version": 0, "epoch": -1}
-            sum_cols = [f"a{j}" for j in range(_DIM)] + ["b", "n"]
 
-            def step(batch_df, epoch_id):
-                stats_b = gram_moment_df(
-                    batch_df.withColumn("_yy", y), "embedding", "_yy",
-                    _DIM,
+
+def _probe_stream_build(spark, emb):
+    """Drain the labelled-vector stream; return ``{workdir, stats}``."""
+    from ffiec_pq_spark.operators.linear_probe import gram_moment_df
+
+    y = (F.coalesce(F.col("label"), F.lit(0)) == 0).cast("long")
+    sum_cols = [f"a{j}" for j in range(_DIM)] + ["b", "n"]
+    with fold_workdir("probe") as workdir:
+        src = stage_chunks(emb, F.pmod("vec_id", F.lit(4)), 4, workdir)
+        state = new_state("stats")
+
+        def step(batch_df, epoch_id):
+            stats_b = gram_moment_df(
+                batch_df.withColumn("_yy", y), "embedding", "_yy", _DIM
+            )
+            return {
+                "stats": keyed_add(
+                    spark, state["stats"], stats_b, ["i"], sum_cols
                 )
-                return {
-                    "stats": keyed_add(
-                        spark, state["stats"], stats_b, ["i"], sum_cols
-                    )
-                }
+            }
 
-            drain(
-                spark, src, emb.schema,
-                versioned_fold(state, workdir, step), workdir,
-            )
-            st = {"workdir": workdir, "stats": state["stats"]}
-            _PROBE_STREAM_STATE[key] = st
-        except BaseException:
-            shutil.rmtree(workdir, ignore_errors=True)
-            raise
+        drain(
+            spark, src, emb.schema, versioned_fold(state, workdir, step),
+            workdir,
+        )
+        return {"workdir": workdir, "stats": state["stats"]}
+
+
+def _probe_stream_serve(spark, emb, st):
+    """Refit on the folded statistics and score every vector."""
+    from ffiec_pq_spark.operators.linear_probe import (
+        probe_fit_int,
+        stats_rows_to_abn,
+    )
+    from ffiec_pq_spark.operators.windows import distributed_rank
 
     a, b, n = stats_rows_to_abn(
         read_state(spark, st["stats"]).collect(), _DIM

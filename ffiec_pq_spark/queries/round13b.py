@@ -18,8 +18,11 @@ from pyspark.sql import functions as F
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.streaming.state import (
     drain,
+    fold_workdir,
     keyed_add,
+    new_state,
     read_state,
+    serve_fold,
     stage_chunks,
     versioned_fold,
 )
@@ -364,38 +367,23 @@ def _kn_insert_fold(spark, state, workdir):
 
 def _kn_stream_build(spark, corpus, chunk_order=None, n_chunks=4):
     """Drain the ingest stream and return the maintained state
-    ``{workdir, c2}`` (caller owns cleanup: the memo's drop, or
-    the serve's finally for ephemeral runs)."""
-    import shutil
-    import tempfile
-
-    workdir = tempfile.mkdtemp(prefix="stream_kn_")
-    try:
+    ``{workdir, c2}``."""
+    with fold_workdir("kn") as workdir:
         src = stage_chunks(
             corpus, F.pmod("doc_id", F.lit(n_chunks)), n_chunks, workdir,
             chunk_order,
         )
-        state = {"c2": None, "version": 0, "epoch": -1}
+        state = new_state("c2")
         fold = _kn_insert_fold(spark, state, workdir)
         drain(spark, src, corpus.schema, fold, workdir)
         return {"workdir": workdir, "c2": state["c2"]}
-    except BaseException:
-        shutil.rmtree(workdir, ignore_errors=True)
-        raise
 
 
-def _kn_serve(spark, docs, st, ephemeral=False):
+def _kn_serve(spark, docs, st):
     """Score the corpus against the maintained count table — the
     identical scoring plan as the batch query."""
-    import shutil
-
-    try:
-        c2 = read_state(spark, st["c2"])
-        served = _kn_scores(c2, _bigrams(docs))
-        return served.localCheckpoint(eager=True)
-    finally:
-        if ephemeral:
-            shutil.rmtree(st["workdir"], ignore_errors=True)
+    served = _kn_scores(read_state(spark, st["c2"]), _bigrams(docs))
+    return served.localCheckpoint(eager=True)
 
 
 @register(
@@ -419,7 +407,7 @@ def stream_kn_counts_fold(spark, sf_dir, chunk_order=None):
     (``_KN_STREAM_STATE``, the ``_BM25_STREAM_STATE`` convention):
     repeat calls pay only the serve, the cold column keeps the full
     fold replay visible.  An explicit ``chunk_order`` always folds
-    fresh (and cleans up after itself).
+    fresh.
 
     At 100 TB: per-trigger work ∝ batch; the count-table merge is the
     MERGE-INTO stand-in (vocab²-bounded; the ``streaming/state.py``
@@ -428,17 +416,15 @@ def stream_kn_counts_fold(spark, sf_dir, chunk_order=None):
 
     ensure_session_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
-    key = dataset_key(spark, sf_dir)
-    st = _KN_STREAM_STATE.lookup(key) if chunk_order is None else None
-    if st is None:
-        if docs.isEmpty():
-            return spark.createDataFrame(
-                [], "doc_id long, n_bigrams long, avg_kn_logprob double"
-            )
-        st = _kn_stream_build(spark, docs, chunk_order)
-        if chunk_order is None:
-            _KN_STREAM_STATE[key] = st
-    return _kn_serve(spark, docs, st, ephemeral=chunk_order is not None)
+    return serve_fold(
+        _KN_STREAM_STATE, dataset_key(spark, sf_dir), docs,
+        lambda: _kn_stream_build(spark, docs, chunk_order),
+        lambda st: _kn_serve(spark, docs, st),
+        lambda: spark.createDataFrame(
+            [], "doc_id long, n_bigrams long, avg_kn_logprob double"
+        ),
+        one_off=chunk_order is not None,
+    )
 
 
 # --------------------------------------------------------------------------

@@ -27,8 +27,11 @@ from pyspark.sql import functions as F
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.streaming.state import (
     drain,
+    fold_workdir,
     keyed_add,
+    new_state,
     read_state,
+    serve_fold,
     stage_chunks,
     versioned_fold,
 )
@@ -119,22 +122,15 @@ def _sc_insert_fold(spark, state, workdir):
 
 def _sc_stream_build(spark, corpus, chunk_order=None, n_chunks=4):
     """Drain the ingest stream; return ``{workdir, stats}``."""
-    import shutil
-    import tempfile
-
-    workdir = tempfile.mkdtemp(prefix="stream_scorecard_")
-    try:
+    with fold_workdir("scorecard") as workdir:
         src = stage_chunks(
             corpus, F.pmod("doc_id", F.lit(n_chunks)), n_chunks, workdir,
             chunk_order,
         )
-        state = {"stats": None, "version": 0, "epoch": -1}
+        state = new_state("stats")
         fold = _sc_insert_fold(spark, state, workdir)
         drain(spark, src, corpus.schema, fold, workdir)
         return {"workdir": workdir, "stats": state["stats"]}
-    except BaseException:
-        shutil.rmtree(workdir, ignore_errors=True)
-        raise
 
 
 @register(
@@ -160,27 +156,20 @@ def stream_scorecard_fold(spark, sf_dir, chunk_order=None):
     and the fold keeps the ``streaming/state.py`` crash/replay
     contract.
 
-    Resident per (session, dataset) (``_SC_STREAM_STATE``): repeat calls pay only the serve; an explicit
-    ``chunk_order`` folds fresh and cleans up after itself."""
+    Resident per (session, dataset) (``_SC_STREAM_STATE``): repeat
+    calls pay only the serve; an explicit ``chunk_order`` folds
+    fresh."""
     from ffiec_pq_spark.session import ensure_session_confs
 
     ensure_session_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
-    key = dataset_key(spark, sf_dir)
-    st = _SC_STREAM_STATE.lookup(key) if chunk_order is None else None
-    if st is None:
-        if docs.isEmpty():
-            return spark.createDataFrame([], _SC_OUT_SCHEMA)
-        st = _sc_stream_build(spark, docs, chunk_order)
-        if chunk_order is None:
-            _SC_STREAM_STATE[key] = st
-    served = _sc_serve(read_state(spark, st["stats"]))
-    if chunk_order is not None:
-        import shutil
-
-        served = served.localCheckpoint(eager=True)
-        shutil.rmtree(st["workdir"], ignore_errors=True)
-    return served
+    return serve_fold(
+        _SC_STREAM_STATE, dataset_key(spark, sf_dir), docs,
+        lambda: _sc_stream_build(spark, docs, chunk_order),
+        lambda st: _sc_serve(read_state(spark, st["stats"])),
+        lambda: spark.createDataFrame([], _SC_OUT_SCHEMA),
+        one_off=chunk_order is not None,
+    )
 
 
 # --------------------------------------------------------------------------

@@ -34,8 +34,11 @@ from pyspark.sql import functions as F
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.streaming.state import (
     drain,
+    fold_workdir,
     keyed_add,
+    new_state,
     read_state,
+    serve_fold,
     stage_chunks,
     versioned_fold,
 )
@@ -77,7 +80,7 @@ def _fusion_corpus(spark, sf_dir):
     return docs_c.join(emb_c, "id", "full_outer")
 
 
-def _rrf_serve(spark, sf_dir, st, ephemeral=False, tomb=None):
+def _rrf_serve(spark, sf_dir, st, tomb=None):
     """Fused serve against a maintained index state: BM25 arm through
     the shared :func:`~ffiec_pq_spark.queries.round12._bm25_rank_
     postings` plan over the resident postings, dense arm through the
@@ -87,41 +90,41 @@ def _rrf_serve(spark, sf_dir, st, ephemeral=False, tomb=None):
     stages byte-identical to the batch query's plans.  ``tomb``
     anti-joins deleted ids out of BOTH arms (broadcast — erasure
     volume never keys a shuffle)."""
-    import shutil
+    from ffiec_pq_spark.queries.round12 import _bm25_rank_state
+    from ffiec_pq_spark.queries.round13c import _cell_frames
 
-    from ffiec_pq_spark.queries.round12 import _bm25_rank_postings
+    cells = read_state(spark, st["cells"]).select(
+        "doc_id", "_ce", "_nc", "cell"
+    )
+    if tomb is not None:
+        cells = cells.join(F.broadcast(tomb), "doc_id", "left_anti")
+    d = load_table(spark, sf_dir, "documents")
+    lex = _bm25_rank_state(
+        spark, st, d.filter(F.col("doc_id") % 10 == 0), tomb
+    )
+    # the query-side probe cells come from the resident memo (the
+    # eval slice's validation + cell assignment is paid once per
+    # session, not per serve)
+    qcell = _cell_frames(spark, sf_dir, st["nc"])[0]
+    dense = _dense_rank_cells(qcell, cells)
+    return _rrf_fuse(lex, dense).localCheckpoint(eager=True)
 
-    try:
-        tf = read_state(spark, st["tf"]).select("doc_id", "term", "tf")
-        dl = read_state(spark, st["dl"]).select("doc_id", "dl")
-        cells = read_state(spark, st["cells"]).select(
-            "doc_id", "_ce", "_nc", "cell"
+
+def _rrf_resident_serve(spark, sf_dir, st):
+    """The RESIDENT FUSED TOP-K relation: the index state is immutable
+    between folds, so the served (eagerly checkpointed) fusion is
+    cached with it — repeat calls read the maintained asset, the
+    deploy's steady state; the next fold (a new state dict) or the
+    memo's clear invalidates it together with the state.  An erasure
+    state's tombstones are served out."""
+    if st.get("serve") is None:
+        tomb = st.get("tomb")
+        st["serve"] = _rrf_serve(
+            spark, sf_dir, st,
+            None if tomb is None
+            else read_state(spark, tomb).select("doc_id"),
         )
-        if tomb is not None:
-            tf = tf.join(F.broadcast(tomb), "doc_id", "left_anti")
-            cells = cells.join(F.broadcast(tomb), "doc_id", "left_anti")
-        df_t = read_state(spark, st["df"])
-        stats = read_state(spark, st["meta"]).select(
-            F.col("n_docs"),
-            (
-                F.col("sum_dl").cast("double")
-                / F.nullif(F.col("n_docs"), F.lit(0))
-            ).alias("avdl"),
-        )
-        d = load_table(spark, sf_dir, "documents")
-        queries_txt = d.filter(F.col("doc_id") % 10 == 0)
-        lex = _bm25_rank_postings(tf, dl, df_t, stats, queries_txt)
-        # the query-side probe cells come from the resident memo (the
-        # eval slice's validation + cell assignment is paid once per
-        # session, not per serve)
-        from ffiec_pq_spark.queries.round13c import _cell_frames
-
-        qcell = _cell_frames(spark, sf_dir, st["nc"])[0]
-        dense = _dense_rank_cells(qcell, cells)
-        return _rrf_fuse(lex, dense).localCheckpoint(eager=True)
-    finally:
-        if ephemeral:
-            shutil.rmtree(st["workdir"], ignore_errors=True)
+    return st["serve"]
 
 
 def _rrf_insert_fold(spark, state, workdir, tf_dir, dl_dir, cells_dir):
@@ -136,7 +139,7 @@ def _rrf_insert_fold(spark, state, workdir, tf_dir, dl_dir, cells_dir):
       epoch (a strictly stronger contract than append-mode);
     - df and the (n_docs, Σdl) scalar MERGE by key through
       :func:`~ffiec_pq_spark.streaming.state.versioned_fold`."""
-    from ffiec_pq_spark.operators.text import tokens
+    from ffiec_pq_spark.queries.round12 import _bm25_postings
 
     def step(batch_df, epoch_id):
         from concurrent.futures import ThreadPoolExecutor
@@ -173,18 +176,12 @@ def _rrf_insert_fold(spark, state, workdir, tf_dir, dl_dir, cells_dir):
             F.col("id").alias("doc_id"), "text"
         )
         tf_path = os.path.join(tf_dir, f"epoch={epoch_id}")
-        tf_plan = (
-            txt_b.select("doc_id", F.explode(tokens("text")).alias("term"))
-            .filter(F.col("term") != "")
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
         # the two arms are independent jobs — overlap them (§2.6); a
         # failure in either arm leaves the epoch unrecorded and the
         # redelivery overwrites both epoch dirs idempotently
         with ThreadPoolExecutor(max_workers=1) as pool:
             fut_cells = pool.submit(_write_cells)
-            tf_plan.write.mode("overwrite").parquet(tf_path)
+            _bm25_postings(txt_b).write.mode("overwrite").parquet(tf_path)
             tf_b = spark.read.parquet(tf_path)
             dl_b = tf_b.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
             dl_b.write.mode("overwrite").parquet(
@@ -210,16 +207,11 @@ def _rrf_stream_build(
     spark, corpus, chunk_order=None, n_chunks=4, files_per_trigger=1
 ):
     """Run the ingest stream to completion and return the maintained
-    fused-index state ``{workdir, tf, dl, cells, df, meta, nc}``
-    (workdir kept — cleanup via the memo's drop or the
-    ephemeral serve's finally).  ``files_per_trigger`` sizes the
-    micro-batches (``scripts/stream_fold_bench.py`` A/Bs the
-    per-trigger fixed cost against it at fixed corpus)."""
-    import shutil
-    import tempfile
-
-    workdir = tempfile.mkdtemp(prefix="stream_rrf_")
-    try:
+    fused-index state ``{workdir, tf, dl, cells, df, meta, nc}``.
+    ``files_per_trigger`` sizes the micro-batches
+    (``scripts/stream_fold_bench.py`` A/Bs the per-trigger fixed cost
+    against it at fixed corpus)."""
+    with fold_workdir("rrf") as workdir:
         src = stage_chunks(
             corpus, F.pmod("id", F.lit(n_chunks)), n_chunks, workdir,
             chunk_order,
@@ -227,10 +219,7 @@ def _rrf_stream_build(
         tf_dir = os.path.join(workdir, "tf")
         dl_dir = os.path.join(workdir, "dl")
         cells_dir = os.path.join(workdir, "cells")
-        state = {
-            "df": None, "meta": None, "version": 0, "epoch": -1,
-            "nc": _n_cells(),
-        }
+        state = {**new_state("df", "meta"), "nc": _n_cells()}
         fold = _rrf_insert_fold(
             spark, state, workdir, tf_dir, dl_dir, cells_dir
         )
@@ -244,9 +233,6 @@ def _rrf_stream_build(
             "meta": state["meta"],
             "nc": state["nc"],
         }
-    except BaseException:
-        shutil.rmtree(workdir, ignore_errors=True)
-        raise
 
 
 # Resident maintained fused-index state per dataset_key(spark, sf_dir)
@@ -292,24 +278,14 @@ def stream_rrf_fold(spark, sf_dir, chunk_order=None):
 
     ensure_session_confs(spark)
     corpus = _fusion_corpus(spark, sf_dir)
-    key = dataset_key(spark, sf_dir) + (_n_cells(),)
-    st = _RRF_STREAM_STATE.lookup(key) if chunk_order is None else None
-    if st is None:
-        if corpus.isEmpty():
-            return spark.createDataFrame([], _RRF_OUT_SCHEMA)
-        st = _rrf_stream_build(spark, corpus, chunk_order)
-        if chunk_order is None:
-            _RRF_STREAM_STATE[key] = st
-    if chunk_order is not None:
-        return _rrf_serve(spark, sf_dir, st, ephemeral=True)
-    # the RESIDENT FUSED TOP-K relation: the index state is immutable
-    # between folds, so the served (eagerly checkpointed) fusion is
-    # cached with it — repeat calls read the maintained asset, the
-    # deploy's steady state; the next fold (a new state dict) or the
-    # memo's clear invalidates it together with the state
-    if st.get("serve") is None:
-        st["serve"] = _rrf_serve(spark, sf_dir, st)
-    return st["serve"]
+    return serve_fold(
+        _RRF_STREAM_STATE, dataset_key(spark, sf_dir) + (_n_cells(),),
+        corpus,
+        lambda: _rrf_stream_build(spark, corpus, chunk_order),
+        lambda st: _rrf_resident_serve(spark, sf_dir, st),
+        lambda: spark.createDataFrame([], _RRF_OUT_SCHEMA),
+        one_off=chunk_order is not None,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -379,28 +355,17 @@ def _rrf_delete_fold(spark, state, workdir, tf, dl):
 def _rrf_delete_build(spark, corpus, n_chunks=3):
     """One-time fused-index build (in a deployment: the stored tables
     the erasure stream maintains), then stream the erasure log through
-    the decrement fold; returns the corrected state paths (workdir
-    kept; cleanup via ``_RRF_DEL_STATE.clear()``)."""
-    import shutil
-    import tempfile
-
-    from ffiec_pq_spark.operators.text import tokens
+    the decrement fold; returns the corrected state paths."""
+    from ffiec_pq_spark.queries.round12 import _bm25_postings
     from ffiec_pq_spark.streaming.state import emit_versioned
 
-    workdir = tempfile.mkdtemp(prefix="stream_rrf_del_")
-    try:
+    with fold_workdir("rrf_del") as workdir:
         nc = _n_cells()
         txt = corpus.filter(F.col("text").isNotNull()).select(
             F.col("id").alias("doc_id"), "text"
         )
-        tf0 = (
-            txt.select("doc_id", F.explode(tokens("text")).alias("term"))
-            .filter(F.col("term") != "")
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
         tf_dir = os.path.join(workdir, "tf")
-        tf0.write.parquet(tf_dir)
+        _bm25_postings(txt).write.parquet(tf_dir)
         tf = spark.read.parquet(tf_dir)
         # dl carries EVERY text doc (zero-length included) — it doubles
         # as the text-corpus membership relation the erasure fold's
@@ -429,10 +394,7 @@ def _rrf_delete_build(spark, corpus, n_chunks=3):
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
         )
-        state = {
-            "df": None, "meta": None, "tomb": None, "version": 0,
-            "epoch": -1,
-        }
+        state = new_state("df", "meta", "tomb")
         emit_versioned(
             state, workdir,
             {
@@ -464,9 +426,6 @@ def _rrf_delete_build(spark, corpus, n_chunks=3):
             "tomb": state["tomb"],
             "nc": nc,
         }
-    except BaseException:
-        shutil.rmtree(workdir, ignore_errors=True)
-        raise
 
 
 _RRF_DEL_STATE = Memo("rrf_delete_state")
@@ -505,20 +464,12 @@ def retrieval_unlearn(spark, sf_dir):
 
     ensure_session_confs(spark)
     corpus = _fusion_corpus(spark, sf_dir)
-    key = dataset_key(spark, sf_dir) + (_n_cells(),)
-    st = _RRF_DEL_STATE.lookup(key)
-    if st is None:
-        if corpus.isEmpty():
-            return spark.createDataFrame([], _RRF_OUT_SCHEMA)
-        st = _rrf_delete_build(spark, corpus)
-        _RRF_DEL_STATE[key] = st
-    # resident fused top-k over the erasure-corrected state (the
-    # stream fold's convention): recomputed only when the state dict
-    # itself is rebuilt or cleared
-    if st.get("serve") is None:
-        tomb = read_state(spark, st["tomb"]).select("doc_id")
-        st["serve"] = _rrf_serve(spark, sf_dir, st, tomb=tomb)
-    return st["serve"]
+    return serve_fold(
+        _RRF_DEL_STATE, dataset_key(spark, sf_dir) + (_n_cells(),), corpus,
+        lambda: _rrf_delete_build(spark, corpus),
+        lambda st: _rrf_resident_serve(spark, sf_dir, st),
+        lambda: spark.createDataFrame([], _RRF_OUT_SCHEMA),
+    )
 
 
 # --------------------------------------------------------------------------

@@ -27,8 +27,11 @@ from pyspark.sql import functions as F
 from ffiec_pq_spark.catalog import register
 from ffiec_pq_spark.streaming.state import (
     drain,
+    fold_workdir,
     keyed_add,
+    new_state,
     read_state,
+    serve_fold,
     stage_chunks,
     versioned_fold,
 )
@@ -607,25 +610,17 @@ def _ens_stats_fold(spark, state, workdir):
 
 def _ens_stream_build(spark, pop, chunk_order=None, n_chunks=4):
     """Run the population ingest stream to completion and return the
-    maintained statistics state ``{workdir, stats}`` (workdir kept —
-    cleanup via the memo's drop or the ephemeral caller)."""
-    import shutil
-    import tempfile
-
-    workdir = tempfile.mkdtemp(prefix="stream_ens_")
-    try:
+    maintained statistics state ``{workdir, stats}``."""
+    with fold_workdir("ens") as workdir:
         staged = pop.select(F.col("doc_id").alias("id"), "y", "_xqa")
         src = stage_chunks(
             staged, F.pmod("id", F.lit(n_chunks)), n_chunks, workdir,
             chunk_order,
         )
-        state = {"stats": None, "version": 0, "epoch": -1}
+        state = new_state("stats")
         fold = _ens_stats_fold(spark, state, workdir)
         drain(spark, src, staged.schema, fold, workdir)
         return {"workdir": workdir, "stats": state["stats"]}
-    except BaseException:
-        shutil.rmtree(workdir, ignore_errors=True)
-        raise
 
 
 _ENS_STREAM_STATE = Memo("ensemble_stream_state")
@@ -658,10 +653,7 @@ def stream_ensemble_stats_fold(spark, sf_dir, chunk_order=None):
     Resident per (session, dataset): cold = population stage + 4-epoch
     fold replay + refit + ladder; warm = refit + ladder against the
     resident relation.  An explicit ``chunk_order`` (the
-    order-invariance test) always folds fresh and cleans up after
-    itself."""
-    import shutil
-
+    order-invariance test) always folds fresh."""
     from ffiec_pq_spark.operators.linear_probe import (
         probe_fit_int,
         stats_rows_to_abn,
@@ -670,33 +662,25 @@ def stream_ensemble_stats_fold(spark, sf_dir, chunk_order=None):
 
     ensure_session_confs(spark)
     pop = _ens_population(spark, sf_dir)
-    key = dataset_key(spark, sf_dir)
-    st = _ENS_STREAM_STATE.lookup(key) if chunk_order is None else None
-    ephemeral = False
-    if st is None:
-        if pop.isEmpty():
-            # the batch path's empty contract: zero statistics train
-            # the zero combiner; the ladder over the empty population
-            # is the oracle's empty result
-            scored = pop.select(
-                "doc_id", "y",
-                _ens_score_col([0] * _ENS_DIM).alias("ens_micro"),
-            )
-            return _ens_ladder(spark, sf_dir, scored)
-        st = _ens_stream_build(spark, pop, chunk_order)
-        if chunk_order is None:
-            _ENS_STREAM_STATE[key] = st
-        else:
-            ephemeral = True
-    try:
-        a, b, n = stats_rows_to_abn(
-            read_state(spark, st["stats"]).collect(), _ENS_DIM
-        )
-        w = probe_fit_int(a, b, n)
+
+    def ladder(w):
         scored = pop.select(
             "doc_id", "y", _ens_score_col(w).alias("ens_micro")
         )
         return _ens_ladder(spark, sf_dir, scored)
-    finally:
-        if ephemeral:
-            shutil.rmtree(st["workdir"], ignore_errors=True)
+
+    def serve(st):
+        a, b, n = stats_rows_to_abn(
+            read_state(spark, st["stats"]).collect(), _ENS_DIM
+        )
+        return ladder(probe_fit_int(a, b, n))
+
+    # the batch path's empty contract: zero statistics train the zero
+    # combiner; the ladder over the empty population is the oracle's
+    # empty result
+    return serve_fold(
+        _ENS_STREAM_STATE, dataset_key(spark, sf_dir), pop,
+        lambda: _ens_stream_build(spark, pop, chunk_order), serve,
+        lambda: ladder([0] * _ENS_DIM),
+        one_off=chunk_order is not None,
+    )

@@ -598,5 +598,5 @@ def stream_neardup_compacted(spark, sf_dir):
         spark,
         sf_dir,
         compact_every=2,
-        workdir_prefix="stream_neardup_compact_",
+        name="neardup_compact",
     )

@@ -11,7 +11,6 @@ stateful execution converges to the batch answer".
 from __future__ import annotations
 
 import itertools
-import os
 
 from pyspark.sql import functions as F
 
@@ -20,6 +19,8 @@ from ffiec_pq_spark.session import local_frame
 from ffiec_pq_spark.streaming.events import EVENT_SCHEMA
 from ffiec_pq_spark.streaming.state import (
     drain,
+    fold_workdir,
+    new_state,
     read_state,
     stage_chunks,
     versioned_fold,
@@ -338,17 +339,13 @@ def stream_upsert_latest(spark, sf_dir):
 
     The returned aggregate (5 rows) is driver-materialized so the
     staging directory can be removed before returning."""
-    import shutil
-    import tempfile
-
     from ffiec_pq_spark.session import ensure_session_confs, load_table
 
     ensure_session_confs(spark)
     ev = load_table(spark, sf_dir, "events")
-    workdir = tempfile.mkdtemp(prefix="stream_upsert_")
-    try:
+    with fold_workdir("upsert", one_off=True) as workdir:
         src = stage_chunks(ev, F.pmod(F.col("event_id"), F.lit(4)), 4, workdir)
-        state = {"state": None, "version": 0, "epoch": -1}
+        state = new_state("state")
         payload = F.struct("ts", "event_id", "event_type", "value")
 
         def step(batch_df, epoch_id):
@@ -378,8 +375,6 @@ def stream_upsert_latest(spark, sf_dir):
         )
         rows = agg.collect()  # <= |event types| rows, sanctioned
         return local_frame(spark, rows, agg.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 @register(
@@ -462,17 +457,13 @@ def stream_incremental_agg(spark, sf_dir):
     associative+commutative, so the state is batch-order-independent;
     at 100 TB the state write is MERGE INTO on the grouping key, and
     each batch touches only the keys it saw."""
-    import shutil
-    import tempfile
-
     from ffiec_pq_spark.session import ensure_session_confs, load_table
 
     ensure_session_confs(spark)
     ev = load_table(spark, sf_dir, "events")
-    workdir = tempfile.mkdtemp(prefix="stream_incagg_")
-    try:
+    with fold_workdir("incagg", one_off=True) as workdir:
         src = stage_chunks(ev, F.pmod(F.col("event_id"), F.lit(4)), 4, workdir)
-        state = {"state": None, "version": 0, "epoch": -1}
+        state = new_state("state")
 
         def step(batch_df, epoch_id):
             part = batch_df.groupBy("user_id", "event_type").agg(
@@ -501,5 +492,3 @@ def stream_incremental_agg(spark, sf_dir):
         )
         rows = agg.collect()  # <= |event types| rows, sanctioned
         return local_frame(spark, rows, agg.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)

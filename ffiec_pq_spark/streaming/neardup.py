@@ -11,17 +11,15 @@ LSH oracle.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ffiec_pq_spark.resident import Memo
 from ffiec_pq_spark.session import dataset_key
-from ffiec_pq_spark.streaming.state import drain, stage_chunks
+from ffiec_pq_spark.streaming.state import drain, fold_workdir, stage_chunks
 
 # Live stream workdirs keyed by (dataset_key(None, sf_dir),
 # compact_every): a durable stream's checkpoint + state OUTLIVE any
@@ -29,8 +27,8 @@ from ffiec_pq_spark.streaming.state import drain, stage_chunks
 # RE-ATTACHES to the existing checkpoint (Structured Streaming replays
 # nothing already committed) and pays only the drain, which is the
 # steady-state cost of querying a maintained state, not a from-zero
-# re-shingle of all history.  Cleaned up at process exit; a different
-# sf_dir gets its own entry.
+# re-shingle of all history.  The harness's exit sweep deletes them; a
+# different sf_dir gets its own entry.
 _LIVE_RUNS = Memo("neardup_live_runs")
 
 
@@ -54,7 +52,7 @@ def run_neardup_stream(
     spark: SparkSession,
     sf_dir: str,
     compact_every: int | None = None,
-    workdir_prefix: str = "stream_neardup_",
+    name: str = "neardup",
 ) -> DataFrame:
     """Stage ``documents`` as four files, fold each micro-batch's LSH
     band rows into the parquet band state (signatures computed ONCE per
@@ -85,14 +83,11 @@ def run_neardup_stream(
     docs = load_table(spark, sf_dir, "documents")
     key = dataset_key(None, sf_dir) + (compact_every,)
     workdir = _LIVE_RUNS.lookup(key)
-    fresh = workdir is None or not os.path.isdir(workdir)
-    if fresh:
-        workdir = tempfile.mkdtemp(prefix=workdir_prefix)
+    if workdir is None or not os.path.isdir(workdir):
+        with fold_workdir(name) as workdir:
+            stage_chunks(docs, F.pmod(F.col("doc_id"), F.lit(4)), 4, workdir)
         _LIVE_RUNS[key] = workdir
-        atexit.register(shutil.rmtree, workdir, ignore_errors=True)
     src = os.path.join(workdir, "src")
-    if fresh:
-        stage_chunks(docs, F.pmod(F.col("doc_id"), F.lit(4)), 4, workdir)
     state_dir = os.path.join(workdir, "band_state")
     n_batches = {"n": 0}
 
@@ -228,8 +223,7 @@ def run_neardup_bounded_stream(
         # empty corpus: no stream to run, no pairs to emit
         return spark.createDataFrame([], "doc_id long, dup_of long")
 
-    workdir = tempfile.mkdtemp(prefix="stream_neardup_bounded_")
-    try:
+    with fold_workdir("neardup_bounded", one_off=True) as workdir:
         # four doc-id-range chunks: chunk order is doc-id order
         step = max_id // 4 + 1
         src = stage_chunks(
@@ -347,5 +341,3 @@ def run_neardup_bounded_stream(
             .select(F.col("id").alias("doc_id"), "dup_of")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)

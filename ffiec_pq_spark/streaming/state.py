@@ -38,13 +38,34 @@ rename-swap compaction (``streaming/neardup.py:_recover_state_swap``):
 there the state is one mutable dir with a swap window to protect; here
 every version is immutable and retirement only touches versions no
 pointer can reach.
+
+The workdir lifecycle (who deletes a fold's ``stream_{name}_*`` dir,
+and when) lives here too; no fold module creates or deletes one:
+
+- :func:`fold_workdir` creates it.  If the block that builds the state
+  raises, the workdir is deleted before the error propagates; a
+  ``one_off`` block (a run whose result is materialized inside it)
+  deletes it on every exit.
+- :func:`serve_fold` chooses between resident and one-off use.
+  Resident state is built once per memo key (a counted
+  ``Memo.lookup``, stored on a miss unless the source is empty) and
+  from then on belongs to the memo, whose drop deletes the workdir on
+  eviction or clear.  A one-off state's workdir is deleted as soon as
+  its serve has been materialized, whether the serve succeeded or
+  raised.
+- :func:`sweep_workdirs` runs at process exit and deletes every
+  workdir this process created and still holds: the resident state
+  nothing else would delete.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import re
 import shutil
+import tempfile
 
 from pyspark.sql import functions as F
 
@@ -230,3 +251,74 @@ def drain(spark, src: str, schema, fold, workdir: str,
         .start()
     )
     q.awaitTermination()
+
+
+# Every fold workdir this process created and has not deleted through
+# the harness; :func:`sweep_workdirs` empties it at exit.
+_WORKDIRS: set[str] = set()
+
+
+def _remove_workdir(workdir: str) -> None:
+    shutil.rmtree(workdir, ignore_errors=True)
+    _WORKDIRS.discard(workdir)
+
+
+def sweep_workdirs() -> None:
+    """Delete every fold workdir this process still holds."""
+    for workdir in list(_WORKDIRS):
+        _remove_workdir(workdir)
+
+
+atexit.register(sweep_workdirs)
+
+
+@contextlib.contextmanager
+def fold_workdir(name: str, one_off: bool = False):
+    """Yield a new ``stream_{name}_*`` temp dir for a fold run.
+
+    The dir is deleted if the block raises; with ``one_off`` it is
+    deleted whenever the block exits.  Otherwise it outlives the block,
+    owned by whoever the block hands the state to (see the module
+    docstring), and the exit sweep deletes it at the latest."""
+    workdir = tempfile.mkdtemp(prefix=f"stream_{name}_")
+    _WORKDIRS.add(workdir)
+    try:
+        yield workdir
+    except BaseException:
+        _remove_workdir(workdir)
+        raise
+    if one_off:
+        _remove_workdir(workdir)
+
+
+def new_state(*pointers: str) -> dict:
+    """The initial state of a :func:`versioned_fold`: no version
+    written, no epoch recorded, every pointer ``None``."""
+    return {**dict.fromkeys(pointers), "version": 0, "epoch": -1}
+
+
+def serve_fold(memo, key, source, build, serve, empty, one_off=False):
+    """Serve a fold over ``source``.
+
+    ``build()`` drains the fold and returns its state ``{workdir,
+    ...pointers}``; ``serve(state)`` returns the result frame;
+    ``empty()`` is served instead when ``source`` has no rows (nothing
+    is built or stored then).  Resident (the default): the state comes
+    from ``memo[key]`` (a counted lookup), built and stored on a miss,
+    and the memo owns its workdir.  ``one_off``: a fresh build whose
+    workdir is deleted once the serve's result has been materialized
+    (an eager ``localCheckpoint``) or the serve has raised."""
+    if one_off:
+        if source.isEmpty():
+            return empty()
+        st = build()
+        try:
+            return serve(st).localCheckpoint(eager=True)
+        finally:
+            _remove_workdir(st["workdir"])
+    st = memo.lookup(key)
+    if st is None:
+        if source.isEmpty():
+            return empty()
+        st = memo[key] = build()
+    return serve(st)

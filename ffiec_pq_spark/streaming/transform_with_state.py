@@ -46,9 +46,6 @@ def running_totals_tws(spark, sf_dir: str):
             "transformWithStateInPandas requires the protobuf package "
             "(state-server protocol); not available in this environment"
         )
-    import shutil
-    import tempfile
-
     import pandas as pd
 
     from pyspark.sql.streaming.stateful_processor import (
@@ -58,7 +55,7 @@ def running_totals_tws(spark, sf_dir: str):
 
     from ffiec_pq_spark.session import ensure_session_confs, load_table
     from ffiec_pq_spark.streaming.events import read_event_stream
-    from ffiec_pq_spark.streaming.state import stage_chunks
+    from ffiec_pq_spark.streaming.state import fold_workdir, stage_chunks
 
     class RunningTotals(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -81,8 +78,7 @@ def running_totals_tws(spark, sf_dir: str):
 
     ensure_session_confs(spark)
     ev = load_table(spark, sf_dir, "events")
-    workdir = tempfile.mkdtemp(prefix="stream_tws_")
-    try:
+    with fold_workdir("tws", one_off=True) as workdir:
         src = stage_chunks(ev, F.pmod(F.col("event_id"), F.lit(4)), 4, workdir)
         emitted = (
             read_event_stream(spark, src)
@@ -122,5 +118,3 @@ def running_totals_tws(spark, sf_dir: str):
         from ffiec_pq_spark.session import local_frame
 
         return local_frame(spark, rows, final.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)

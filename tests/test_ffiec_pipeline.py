@@ -3,6 +3,7 @@ manifest discovery, dictionary-typed TSV parse with repair, multipart
 combine, POR semantics, long-table build, XBRL extraction, process log."""
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -434,6 +435,14 @@ def test_incremental_long_merge(spark, tmp_path_factory):
             spark, merged_path, bad,
             str(tmp_path_factory.mktemp("inc_bad") / "x.parquet"),
         )
+    # a conflicting in-place merge leaves the existing file as it was
+    with open(merged_path, "rb") as fh:
+        before = fh.read()
+    with _pytest.raises(ValueError, match="conflicting"):
+        merge_long_increment(spark, merged_path, bad, merged_path)
+    with open(merged_path, "rb") as fh:
+        assert fh.read() == before
+    assert os.listdir(os.path.dirname(merged_path)) == ["ffiec_float.parquet"]
 
 
 def test_reprocess_idempotent(spark, raw_dir, processed, tmp_path_factory):

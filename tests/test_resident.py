@@ -170,6 +170,35 @@ def test_every_module_dict_is_a_registered_memo():
     assert not offenders, offenders
 
 
+def test_memo_reads_are_counted():
+    """``Memo.get`` is plain ``dict.get`` and bypasses the hit/miss
+    counters: no package module calls ``.get(`` on a name bound to a
+    ``Memo(`` (``lookup`` and ``get_or_build`` count)."""
+    import re
+
+    import ffiec_pq_spark
+
+    sources = {}
+    for root, _dirs, files in os.walk(ffiec_pq_spark.__path__[0]):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as fh:
+                    sources[path] = fh.read()
+    memos = {
+        m for src in sources.values()
+        for m in re.findall(r"^(\w+)\s*=\s*Memo\(", src, re.M)
+    }
+    assert len(memos) > 20
+    offenders = [
+        f"{os.path.basename(path)}: {m}.get("
+        for path, src in sources.items()
+        for m in memos
+        if re.search(rf"\b{m}\.get\(", src)
+    ]
+    assert offenders == []
+
+
 def test_read_state_sees_new_partition(spark, tmp_path):
     """A state dir made of ``k=v`` partition subdirs must not serve a
     memoized frame after a new partition lands."""

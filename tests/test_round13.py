@@ -194,7 +194,10 @@ def test_bm25_insert_fold_state_bounded(spark, sf_dir):
     finally:
         shutil.rmtree(st20["workdir"], ignore_errors=True)
     st4 = _bm25_stream_build(spark, corpus, n_chunks=4)
-    served4 = _rows(_bm25_serve(spark, d, st4, ephemeral=True))
+    try:
+        served4 = _rows(_bm25_serve(spark, d, st4))
+    finally:
+        shutil.rmtree(st4["workdir"], ignore_errors=True)
     assert served20 == served4 and len(served20) > 0
 
 

@@ -110,3 +110,86 @@ def test_catalog_order_is_least_certified_first():
     assert list(catalog.oracles()) == [
         n for n in names if catalog._REGISTRY[n].oracle is not None
     ]
+
+
+def _stream_workdirs(name):
+    import tempfile
+
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), f"stream_{name}_*")))
+
+
+def test_only_the_harness_creates_stream_workdirs():
+    """Fold workdirs come from ``streaming.state.fold_workdir``: no
+    other package module calls ``mkdtemp`` with a ``stream_`` prefix,
+    or with a prefix the scan cannot read."""
+    import ast
+
+    offenders = []
+    for root, _dirs, files in os.walk(PKG_DIR):
+        for name in files:
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, PKG_DIR)
+            if not name.endswith(".py") or rel == os.path.join(
+                "streaming", "state.py"
+            ):
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                func = getattr(node, "func", None)
+                if getattr(func, "attr", getattr(func, "id", None)) != (
+                    "mkdtemp"
+                ):
+                    continue
+                prefix = next(
+                    (k.value for k in node.keywords if k.arg == "prefix"),
+                    None,
+                )
+                if not isinstance(prefix, ast.Constant) or (
+                    prefix.value.startswith("stream_")
+                ):
+                    offenders.append(f"{rel}:{node.lineno}")
+    assert offenders == []
+
+
+def test_failed_one_off_serve_leaves_no_workdir(spark, sf_dir, monkeypatch):
+    """A one-off run (explicit ``chunk_order``) whose serve raises
+    still deletes its workdir."""
+    import pytest
+
+    from ffiec_pq_spark.queries import round13f
+
+    def failing_serve(stats):
+        raise RuntimeError("serve failed")
+
+    before = _stream_workdirs("scorecard")
+    monkeypatch.setattr(round13f, "_sc_serve", failing_serve)
+    with pytest.raises(RuntimeError, match="serve failed"):
+        round13f.stream_scorecard_fold(spark, sf_dir, chunk_order=[3, 1, 0, 2])
+    assert _stream_workdirs("scorecard") - before == set()
+
+
+def test_exit_sweep_deletes_resident_workdirs(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A resident fold's workdir outlives its serve and is deleted by
+    the exit sweep.  The sweep runs over a fresh registry, so the
+    other tests' resident state survives it."""
+    import shutil
+
+    from ffiec_pq_spark.queries import round13f
+    from ffiec_pq_spark.session import dataset_key
+    from ffiec_pq_spark.streaming import state
+
+    monkeypatch.setattr(state, "_WORKDIRS", set())
+    d = str(tmp_path)
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), d)
+    key = dataset_key(spark, d)
+    try:
+        assert round13f.stream_scorecard_fold(spark, d).count() > 0
+        workdir = round13f._SC_STREAM_STATE[key]["workdir"]
+        assert os.path.isdir(workdir)
+        state.sweep_workdirs()
+        assert not os.path.exists(workdir)
+    finally:
+        round13f._SC_STREAM_STATE.pop(key, None)
